@@ -1133,7 +1133,7 @@ def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_edges = flagged.filter(F.col("ab") | F.col("bb")).select("a", "b")
     base_nodes = d.select("doc_id").filter(~is_batch(F.col("doc_id")))
     # yesterday's state: labels of the accepted corpus only
-    prior = _min_label_cc(base_nodes, base_edges).localCheckpoint()
+    prior = _min_label_cc(base_nodes, base_edges)
     merged = _contract_merge(d.select("doc_id"), prior, new_edges)
     return merged.select(
         "doc_id", F.col("label").cast("bigint").alias("component_id")

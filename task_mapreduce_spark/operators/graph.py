@@ -19,10 +19,19 @@ iterative algorithm.
 
 Scale shape per iteration: one equi-join of the edge list against the
 current ranks + one sum by destination — exactly the distributed
-PageRank from the MapReduce paper, as two shuffles.  The edge list and
-degrees are computed once and ``localCheckpoint``-ed (at cluster scale:
-a parquet checkpoint) so the 5 unrolled iterations don't replay the
+PageRank from the MapReduce paper.  The edge list and degrees are
+computed once and ``localCheckpoint``-ed (at cluster scale: a parquet
+checkpoint) so the 5 unrolled iterations don't replay the
 edge-derivation join five times.
+
+The checkpoint does NOT keep a co-partitioned layout: under the
+session's AQE, ``df.repartition(n, k).localCheckpoint()`` reports
+``UnknownPartitioning(0)`` (so do ``cache()`` and ``checkpoint()``),
+and a join against it plans an Exchange on that side —
+tests/test_plans.py::test_checkpoint_forgets_partitioning_under_aqe
+pins this on the installed Spark.  So every iteration re-shuffles the
+edge list as well as the |V|-sized side; pre-partitioning the static
+side on the join key only adds a shuffle.
 """
 
 from __future__ import annotations
@@ -44,6 +53,25 @@ _PR_ITERS = 5                      # fixed, unrolled — not run-to-convergence
 # the round-11 ×100 replication pushed custkeys past it and collided
 # the two node families, and a real 100 TB corpus with billions of
 # customers breaks the constant outright.
+
+
+def _interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) both directions of every distinct customer↔supplier
+    interaction (a customer's order holds a lineitem from the supplier),
+    under the parity node encoding above."""
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    pairs = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("cust"),
+            (F.col("l_suppkey") * 2 + 1).alias("supp"),
+        )
+        .distinct()
+    )
+    return pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst")).unionByName(
+        pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -99,31 +127,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is integer).  Customers with no orders are dangling: they receive
     exactly the teleport mass, asserted (where the fixture provides a
     witness) in tests/test_graph.py."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("cust"),
-            (F.col("l_suppkey") * 2 + 1).alias("supp"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst")).unionByName(
-        pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
-    )
+    edges = _interaction_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # materialize (edge, out-degree) ONCE — the five iterations below
-    # would otherwise each replay the lineitem⋈orders derivation — and
-    # HASH-PARTITION it on the join key with an explicit count
-    # (AQE-exempt) so every iteration's rank join reuses this
-    # partitioning: the edge list never moves again, only the
-    # |V|-sized rank table shuffles per round.  That is the GraphX/
-    # Pregel layout, and it's what survives 100×: broadcasting the
-    # rank table instead would be 30% slower here AND break at 1 B
-    # nodes (a multi-GB broadcast per iteration).
-    par = spark.sparkContext.defaultParallelism
-    edeg = edges.join(deg, "src").repartition(par, "src").localCheckpoint()
+    # would otherwise each replay the lineitem⋈orders derivation.  No
+    # repartition on the join key: under AQE the checkpoint forgets it
+    # (see the module docstring), so each iteration re-shuffles the
+    # edge list either way.  Broadcasting the rank table instead breaks
+    # at 1 B nodes (a multi-GB broadcast per iteration).
+    edeg = edges.join(deg, "src").localCheckpoint()
 
     nodes = (
         load(spark, sf_dir, "customer")
@@ -138,8 +150,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_PR_ITERS):
         r = ranks.select(F.col("node").alias("src_node"), F.col("rank").alias("src_rank"))
         # shuffle_hash: the rank side is the (small-per-partition)
-        # build side — a sort-merge join would re-SORT the edge list
-        # every iteration even though its partitioning is reused.
+        # build side — a sort-merge join would also SORT the edge list
+        # every iteration.
         incoming = (
             edeg.join(
                 r.hint("shuffle_hash"), F.col("src") == F.col("src_node")
@@ -303,7 +315,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BFS shortest-hop distances from a source node
 # ---------------------------------------------------------------------------
 
-_BFS_ITERS = 4                     # fixed, unrolled — diameter cap, not conv.
+_BFS_ITERS = 4                     # hop cap; stops earlier on an empty frontier
 _BFS_SOURCE = 0                    # customer node 0 == 2*custkey 0 under
 #                                    the parity encoding (custkeys 0-based)
 
@@ -344,73 +356,41 @@ def _bfs_oracle() -> str:
     return "".join(parts)
 
 
+def bfs_distances(
+    edges: DataFrame, source: int, hops: int
+) -> tuple[DataFrame, int]:
+    """(node, dist) for every node within ``hops`` hops of ``source``
+    over the directed ``edges`` (src, dst), and the rounds run.
+
+    BFS is a min-fold with step 1 (:func:`llm_extras.min_propagate`):
+    the state starts as the source alone, round 0 pushes the source's
+    out-edges (a filter, no join), and round k reaches hop k+1 — only
+    nodes first reached last round push, so per-round join input is
+    ∝ |frontier|.  The loop stops after ``hops`` rounds or as soon as a
+    round reaches no new node; the rows are the same either way."""
+    from task_mapreduce_spark.operators.llm_extras import min_propagate
+
+    edges = edges.localCheckpoint()
+    start = edges.sparkSession.range(1).select(
+        F.lit(source).cast("long").alias("id"), F.lit(0).alias("value")
+    )
+    first = edges.filter(F.col("src") == source).select(
+        F.col("dst").alias("id"), F.lit(1).alias("value")
+    )
+    dist, rounds, _ = min_propagate(start, edges, first, max_rounds=hops, step=1)
+    return dist.select(F.col("id").alias("node"), F.col("value").alias("dist")), rounds
+
+
 @register("graph_bfs", oracle=_bfs_oracle())
 def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Breadth-first shortest-hop distances from customer node 0 over
-    the same customer↔supplier bipartite graph PageRank uses, 4
-    unrolled rounds (nodes further than 4 hops are simply absent —
-    the frontier semantics, not a truncation of found results).
-
-    FRONTIER-DELTA iterative BFS: each round expands only the nodes
-    whose distance was ASSIGNED last round (the frontier), not the
-    whole reached set — newly-seen nodes are isolated with a left-anti
-    join against the accumulated distance table, so per-round join
-    input is ∝ |frontier|, not ∝ |reached| (PERF.md's ×10 row shows
-    the effect: round cost tracks the expansion wave, flat once the
-    wave passes).  Correct because BFS expands level by level: any
-    expanded node already present in the distance table was reached
-    in an earlier round with a strictly smaller distance, so dropping
-    it loses nothing — the level number IS the min-fold (integer,
-    bit-exact on any engine/merge order, matching the oracle's full
-    min-fold formulation).
-
-    Per round: one equi-join shuffle of the |frontier|-sized table
-    into the once-checkpointed edge partitioning + one min-agg + one
-    anti-join against the distance union.  Only the FRONTIER is
-    ``localCheckpoint``-ed per round (cluster-scale: parquet
-    checkpoint); the distance table stays a lazy union of checkpointed
-    frontiers — shallow lineage without re-materializing |V| rows per
-    round.  At 100 TB the distance table is |V|-bounded (node, int)
-    pairs — tiny next to the edge list, derived and checkpointed
-    ONCE."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("cust"),
-            (F.col("l_suppkey") * 2 + 1).alias("supp"),
-        )
-        .distinct()
-    )
-    # Same layout discipline as PageRank: the static edge list is
-    # hash-partitioned on the join key ONCE (explicit count, AQE-
-    # exempt) and checkpointed; each round only the |frontier|-sized
-    # distance table shuffles into it via shuffle-hash (no per-round
-    # sort of the edges, no |V|-broadcast).
-    par = spark.sparkContext.defaultParallelism
-    edges = (
-        pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
-        )
-        .repartition(par, "src")
-        .localCheckpoint()
-    )
-    dist = spark.range(1).select(
-        F.lit(_BFS_SOURCE).cast("long").alias("node"),
-        F.lit(0).cast("int").alias("dist"),
-    )
-    frontier = dist
-    for _ in range(_BFS_ITERS):
-        expanded = edges.join(
-            frontier.hint("shuffle_hash"), frontier.node == edges.src
-        ).select(
-            F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        cand = expanded.groupBy("node").agg(F.min("dist").alias("dist"))
-        # delta: keep only nodes never reached before — anything already
-        # in dist carries a strictly smaller distance by level order
-        frontier = cand.join(dist, "node", "left_anti").localCheckpoint()
-        dist = dist.unionByName(frontier)
-    return dist.select("node", F.col("dist").cast("int").alias("dist"))
+    the customer↔supplier graph PageRank uses; nodes further than 4
+    hops are absent (the frontier semantics, not a truncation of found
+    results).  Frontier-delta rounds on the min-propagation kernel
+    (:func:`bfs_distances`): the level number IS the min-fold (integer,
+    bit-exact on any engine or merge order, matching the oracle's full
+    min-fold).  Per round: one frontier⋈edges join, one union-aggregate
+    with the |V|-bounded distance table, one ``localCheckpoint`` (at
+    cluster scale: a parquet checkpoint)."""
+    dist, _ = bfs_distances(_interaction_edges(spark, sf_dir), _BFS_SOURCE, _BFS_ITERS)
+    return dist

@@ -536,167 +536,153 @@ def sim_join_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# min-propagation fixpoint kernel (connected components, BFS)
+# ---------------------------------------------------------------------------
+
+# Row budget under which a round broadcasts its (id, value) join side
+# (≈ 4 MB as a hashed relation) instead of shuffling it and the edge
+# list; the count is exact, from the last round's Observation.
+_PROPAGATE_BCAST_ROWS = 250_000
+
+
+def min_propagate(
+    state: DataFrame,
+    edges: DataFrame,
+    push: DataFrame,
+    *,
+    max_rounds: int,
+    step: int = 0,
+    jump_from: int | None = None,
+) -> tuple[DataFrame, int, int]:
+    """Min-fold fixpoint of ``state`` (id, value) over the static,
+    caller-checkpointed ``edges`` (src, dst) — the kernel behind
+    :func:`_min_label_cc` and ``graph.bfs_distances``, each round a map
+    over the edges, a shuffle and a min-reduce.  ``push`` holds the
+    round-0 messages (id, value), which callers derive without a join;
+    ``step`` is added as a value crosses an edge.  Returns (state,
+    rounds run, rows changed in the last round: 0 iff converged).
+
+    A round is ``state ∪ push → groupBy(id).agg(min(value), max(old))``
+    and ONE eager ``localCheckpoint``.  State rows carry their value as
+    ``old`` and push rows NULL, so a row changed when ``old`` is NULL or
+    the minimum dropped; only changed rows push next round (delta form,
+    same fixpoint as full propagation).  From round ``jump_from`` on,
+    the round also pointer-jumps value ← value(value) by a self-join of
+    its own aggregate in the same checkpoint — sound only when a value
+    names a node of the same class, as CC labels do; O(log D) rounds on
+    a D-hop chain.  The changed count rides an ``Observation`` on the
+    checkpoint and is read only after it returns (a failed action can
+    leave partial metrics).  The loop stops at 0 changed rows or after
+    ``max_rounds``; the caller decides if the cap is an error.
+
+    A checkpoint keeps no hash layout under AQE (graph.py module
+    docstring), so a shuffled join re-shuffles the edge list every
+    round: rounds broadcast the frontier, and the hop side, while the
+    last round's exact row count is within ``_PROPAGATE_BCAST_ROWS``.
+
+    Precondition: a reached endpoint that is not an ``id`` of ``state``
+    becomes a new row — what BFS wants, and why CC needs every edge
+    endpoint to be a node.  No job checks it."""
+    old_type = state.schema["value"].dataType
+    state = state.select("id", "value")
+    changed = rows = 0
+    for it in range(max_rounds):
+        cur = (
+            state.select("id", "value", F.col("value").alias("old"))
+            .unionByName(
+                push.select("id", "value", F.lit(None).cast(old_type).alias("old"))
+            )
+            .groupBy("id")
+            .agg(F.min("value").alias("value"), F.max("old").alias("old"))
+        )
+        if jump_from is not None and it >= jump_from:
+            # Both sides must plan the identical aggregate, or Spark
+            # computes the round twice instead of reusing its exchange:
+            # ids are never NULL, and filtering on it here matches the
+            # isnotnull(j_id) Spark infers for the hop side; least(value,
+            # old) == value, but reading ``old`` stops column pruning
+            # from dropping max(old) on the hop side only
+            cur = cur.filter(F.col("id").isNotNull())
+            hop = cur.select(
+                F.col("id").alias("j_id"), F.least("value", "old").alias("j_value")
+            )
+            if rows <= _PROPAGATE_BCAST_ROWS:
+                hop = F.broadcast(hop)
+            cur = cur.join(hop, F.col("value") == F.col("j_id"), "left").select(
+                "id",
+                F.least("value", F.coalesce("j_value", "value")).alias("value"),
+                "old",
+            )
+        is_changed = F.col("old").isNull() | (F.col("value") < F.col("old"))
+        obs = Observation()
+        cur = cur.observe(
+            obs,
+            F.sum(is_changed.cast("long")).alias("changed"),
+            F.count(F.lit(1)).alias("rows"),
+        ).localCheckpoint()
+        # sum() over zero rows is NULL — an empty state is converged
+        metrics = obs.get
+        changed, rows = int(metrics["changed"] or 0), metrics["rows"]
+        state = cur.select("id", "value")
+        if changed == 0:
+            return state, it + 1, 0
+        frontier = cur.filter(is_changed).select(F.col("id").alias("src"), "value")
+        if changed <= _PROPAGATE_BCAST_ROWS:
+            frontier = F.broadcast(frontier)
+        push = edges.join(frontier, "src").select(
+            F.col("dst").alias("id"), (F.col("value") + step).alias("value")
+        )
+    return state, max_rounds, changed
+
+
+# ---------------------------------------------------------------------------
 # dedup: full connected components over the verified near-dup edges
 # ---------------------------------------------------------------------------
 
 _CC_MAX_ITER = 20
 
-# Round index from which pointer jumping (label ← label-of-label) joins
-# each propagation round.  Jumping doubles label coverage per round —
-# a D-hop chain converges in _CC_PJ_FROM + O(log2 D) rounds instead of
-# D (a 100-hop boilerplate mirror-crawl chain would otherwise blow
-# _CC_MAX_ITER and hard-fail).  Round-13 optimization: start at 2, not
-# 3 — the fixture graphs (and any near-dup graph with a few bridged
-# clusters) still have live chains at round 2, so the earlier jump
-# SAVES whole rounds (measured at sf0.1: 53 → 45 jobs, ~7.5 → ~4.9 s
-# per fixpoint, identical label checksum; the fixpoint is invariant to
-# the jump schedule — min-fold labels are monotone and jumping can
-# only tighten them, property-tested against union-find).  The cost of
-# jumping one round earlier is one extra |V|-row self-join in round 2,
-# paid only when convergence hasn't already ended the loop; starting
-# at 0-1 re-adds that join to the bulk rounds where the hop delta is
-# still corpus-sized without saving rounds (measured: 0 and 1 are both
-# worse in jobs than 2).
+# Round from which CC rounds pointer-jump (label ← label-of-label): a
+# D-hop chain converges in _CC_PJ_FROM + O(log2 D) rounds instead of D.
+# The fixpoint does not depend on the schedule; 2 saved whole rounds on
+# the fixture graphs, and 0 or 1 cost more jobs (measured when the jump
+# still took its own checkpoint).
 _CC_PJ_FROM = 2
 
 
 def _min_label_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Distributed connected components: min-label propagation in DELTA
-    form with a pointer-jumping fallback, over ``nodes`` (doc_id) and an
-    undirected ``edges`` (a, b) pair list (symmetrized here).
+    """Connected components over ``nodes`` (doc_id) and undirected
+    ``edges`` (a, b): (doc_id, label), label = the component's minimum
+    doc_id, by :func:`min_propagate` with pointer jumping from round
+    ``_CC_PJ_FROM``.  Precondition: every edge endpoint is a node, as
+    dedup_cluster_cc, dedup_eval_ari and dedup_cluster_incremental's
+    two runs guarantee.
 
-    Incremental use (dedup_cluster_incremental) needs no seed
-    parameter: a prior labeling is folded in by CONTRACTING the new
-    edges through it (endpoint → prior label) and running this same
-    kernel on the label-level graph, whose node ids are the prior
-    labels themselves — identity initialization is then exactly
-    "start from yesterday's components".
-
-    Each round is one equi-join + one min-agg — the standard
-    distributed CC.  Delta form: only labels that improved last round
-    push, so per-round join input is ∝ |changed|; the edge list is
-    hash-partitioned ONCE on the join key and each round only the
-    changed-label table shuffles into it via shuffle_hash (the
-    BFS/PageRank layout discipline).  From round ``_CC_PJ_FROM``
-    onward, each round also shortcuts label ← label-of-label (a
-    merged⋈merged self-join): min-fold labels are monotone and always
-    name a node in the same component, so jumping preserves the
-    fixpoint while doubling coverage — O(log D) rounds on chains.
-    ``localCheckpoint`` truncates the growing lineage each round —
-    without it, iteration N replays all N-1 predecessors.  Raises
-    loudly if ``_CC_MAX_ITER`` rounds don't reach the fixpoint: a
-    silently-split component is worse than a failure.
-
-    Convergence is read with ``Observation`` metrics (round-14
-    optimization): the changed-row count is an aggregate over the
-    round's OWN frame, collected by the listener during the
-    localCheckpoint job itself — the previous per-round ``count()``
-    was one extra blocking scheduler job per round (~0.3-0.5 s fixed
-    floor on a per-job-overhead-bound host) × 4-6 rounds × 4 consuming
-    keys.  The loop exit stays value-coupled: the metric is
-    ``sum(label != old_label)`` computed from the round's data in the
-    round's job, not scheduler telemetry."""
-    spark = nodes.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    edges = (
-        edges.unionByName(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .repartition(par, "b")
+    Incremental use needs no seed parameter: a prior labeling is folded
+    in by CONTRACTING the new edges through it and running this on the
+    label-level graph, whose node ids are the prior labels themselves.
+    The symmetrized edge list is checkpointed once; round 0 pushes each
+    edge as is (identity labels).  Raises if ``_CC_MAX_ITER`` rounds
+    don't converge: a silently-split component is worse than a failure."""
+    sym = (
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .localCheckpoint()
     )
-    labels = nodes.select(
-        F.col("doc_id"), F.col("doc_id").alias("label")
-    ).localCheckpoint()
-    # DELTA propagation: only labels that IMPROVED last round push to
-    # their neighbors (round 0: everyone pushes).  A node's final label
-    # is still transmitted across every edge at least once — in the
-    # round after its last improvement — so the min-fold fixpoint is
-    # identical to full propagation, but per-round join input is
-    # ∝ |changed|, which collapses once big components settle.  The
-    # changed set is computed AFTER the jump, so jump-improved labels
-    # push too and the invariant survives the shortcutting.
-    changed_df = labels
-    changed = -1
-    for it in range(_CC_MAX_ITER):
-        push = edges.join(
-            changed_df.select(F.col("doc_id").alias("src"), "label").hint(
-                "shuffle_hash"
-            ),
-            F.col("b") == F.col("src"),
-        ).select(F.col("a").alias("doc_id"), "label")
-        nb_min = push.groupBy("doc_id").agg(F.min("label").alias("nb_label"))
-        # carry the old label through the checkpoint so convergence is a
-        # scan of the materialized frame, not another join per round
-        merged = labels.join(nb_min, "doc_id", "left").select(
-            "doc_id",
-            F.col("label").alias("old_label"),
-            F.least(
-                F.col("label"), F.coalesce("nb_label", F.col("label"))
-            ).alias("label"),
-        )
-        jumping = it >= _CC_PJ_FROM
-        if not jumping:
-            # the changed count rides the checkpoint job itself (an
-            # Observation aggregate over the round's own rows) — the
-            # previous standalone count() was one extra job per round
-            obs = Observation()
-            merged = merged.observe(
-                obs,
-                F.sum(
-                    (F.col("label") != F.col("old_label")).cast("long")
-                ).alias("changed"),
-            )
-        merged = merged.localCheckpoint()
-        if jumping:
-            # pointer jump on the post-hop labels: label ← label(label).
-            # Self-join of the checkpointed frame (so the hop join above
-            # is never recomputed), re-checkpointed to keep the lineage
-            # one round deep.  The convergence observation rides THIS
-            # checkpoint (the round's final labels — jump-improved rows
-            # must count as changed or the delta push would skip them).
-            obs = Observation()
-            merged = (
-                merged.join(
-                    merged.select(
-                        F.col("doc_id").alias("j_id"),
-                        F.col("label").alias("j_label"),
-                    ),
-                    F.col("label") == F.col("j_id"),
-                    "left",
-                )
-                .select(
-                    "doc_id",
-                    "old_label",
-                    F.least(
-                        F.col("label"), F.coalesce("j_label", F.col("label"))
-                    ).alias("label"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        (F.col("label") != F.col("old_label")).cast("long")
-                    ).alias("changed"),
-                )
-                .localCheckpoint()
-            )
-        changed_df = merged.filter(F.col("label") != F.col("old_label")).select(
-            "doc_id", "label"
-        )
-        # sum() over zero rows is NULL — an empty node set is converged
-        changed = int(obs.get["changed"] or 0)
-        labels = merged.select("doc_id", "label")
-        if changed == 0:
-            break
-    else:
-        # a silently-split component is worse than a loud failure:
+    labels, _, changed = min_propagate(
+        nodes.select(F.col("doc_id").alias("id"), F.col("doc_id").alias("value")),
+        sym,
+        sym.select(F.col("dst").alias("id"), F.col("src").alias("value")),
+        max_rounds=_CC_MAX_ITER,
+        jump_from=_CC_PJ_FROM,
+    )
+    if changed:
         # chains longer than the jump-accelerated bound must raise
         raise RuntimeError(
             f"connected components did not converge in {_CC_MAX_ITER} "
             f"iterations ({changed} labels still changing); raise "
             "_CC_MAX_ITER for this graph"
         )
-    return labels
+    return labels.select(F.col("id").alias("doc_id"), F.col("value").alias("label"))
 
 
 @register(
@@ -740,11 +726,11 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probabilistic ``minhash_edges`` (the cheaper 100 TB edge
     generator, exercised by dedup_near_minhash's goldens) changes no
     downstream shape.  The propagation kernel is :func:`_min_label_cc`
-    — delta-form min-label rounds with a pointer-jumping fallback past
-    round ``_CC_PJ_FROM`` (a planted 100-hop chain converges in ~8
-    rounds, golden-tested in tests/test_llm_extras) — so iterations
-    are bounded by O(log diameter), not the diameter itself, and the
-    per-iteration convergence check is a metadata-sized count.
+    — delta-form min-label rounds that pointer-jump from round
+    ``_CC_PJ_FROM`` (a planted 100-hop chain converges in ~8 rounds,
+    tested in tests/test_llm_pipeline.py) — so iterations are bounded
+    by O(log diameter), not the diameter itself, and the convergence
+    check rides each round's checkpoint job.
     """
     d = load(spark, sf_dir, "documents")
     verified = jaccard_pairs(_doc_token_sets(d)).select("a", "b")

@@ -940,3 +940,68 @@ def test_sim_index_persist_store_is_partition_pruned(spark, sf_dir):
         "reloaded postings scan lost its dynamic-pruning subquery — "
         "every probe now reads the whole store"
     )
+
+
+def test_checkpoint_forgets_partitioning_under_aqe(spark):
+    # The Spark fact the iterative keys are built around (graph.py module
+    # docstring, llm_extras.min_propagate): under the session's AQE a
+    # checkpoint of a hash-repartitioned frame reports UnknownPartitioning,
+    # so a join against it still shuffles that side and pre-partitioning
+    # a static edge list buys nothing.  If a Spark upgrade fails this
+    # test, checkpoints keep their layout again: revisit min_propagate
+    # and graph_pagerank, which re-shuffle the edge list every round.
+    def checkpointed_join_exchanges() -> tuple[str, int]:
+        side = (
+            spark.range(200)
+            .select((F.col("id") % 13).alias("k"), "id")
+            .repartition(4, "k")
+            .localCheckpoint()
+        )
+        layout = str(
+            side._jdf.queryExecution().executedPlan().outputPartitioning()
+        )
+        small = spark.range(13).select(F.col("id").alias("k"))
+        plan = explain_str(side.join(small.hint("shuffle_hash"), "k"))
+        tree = plan.split("\n\n")[0]
+        return layout, tree.count("Exchange")
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    layout, n_exchanges = checkpointed_join_exchanges()
+    assert layout.startswith("UnknownPartitioning"), layout
+    assert n_exchanges == 2, "the checkpointed side is no longer shuffled"
+    # contrast: without AQE the layout survives and only the small side
+    # moves, so the count above really measures the checkpointed side
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        layout, n_exchanges = checkpointed_join_exchanges()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert layout.startswith("hashpartitioning"), layout
+    assert n_exchanges == 1
+
+
+# Build-time scheduler jobs (eager checkpoints, convergence reads) at
+# sf0.001 for the keys on the min-propagation kernel: key -> (measured,
+# slack).  The slack absorbs AQE moving a runtime join conversion by a
+# job; a stray count() or checkpoint inside the kernel costs a job every
+# round and fails (a per-round count() took graph_bfs to 19).
+_BUILD_JOB_CEILING = {
+    "graph_bfs": (13, 2),
+    "dedup_cluster_cc": (17, 2),
+}
+
+
+def test_fixpoint_build_job_ceilings(spark, sf_dir):
+    sc = spark.sparkContext
+    for key, (measured, slack) in _BUILD_JOB_CEILING.items():
+        group = f"build-job-ceiling/{key}"
+        sc.setJobGroup(group, key)
+        try:
+            QUERIES[key](spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= measured + slack, (
+            f"{key}: {jobs} build jobs > {measured} measured + {slack} slack"
+        )

@@ -5,7 +5,7 @@ can't (they only check the specific registered queries)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -298,6 +298,49 @@ def test_min_label_cc_matches_union_find(spark, edges):
         for r in _min_label_cc(nodes, edf).collect()
     }
     assert got == want
+
+
+# random small directed graphs: bfs_distances (min_propagate with step 1
+# under graph_bfs's 4-round cap) must equal a Python BFS capped at 4 hops.
+# Most draws leave node 0 with a small reach, so the frontier empties
+# before the cap; the pinned examples cover an early exit and a chain
+# that outruns the cap.
+BFS_EDGES = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=11),
+        st.integers(min_value=0, max_value=11),
+    ),
+    min_size=0,
+    max_size=24,
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@example(edges=[(0, 1), (1, 2), (2, 0), (5, 6)])
+@example(edges=[(i, i + 1) for i in range(7)])
+@given(edges=BFS_EDGES)
+def test_bfs_matches_python_bfs_and_exits_early(spark, edges):
+    from task_mapreduce_spark.operators.graph import _BFS_ITERS, bfs_distances
+
+    want = {0: 0}
+    frontier = {0}
+    for hop in range(1, _BFS_ITERS + 1):
+        frontier = {b for a, b in edges if a in frontier and b not in want}
+        if not frontier:
+            break
+        want.update({v: hop for v in frontier})
+
+    edf = spark.createDataFrame(edges, "src LONG, dst LONG")
+    dist, rounds = bfs_distances(edf, 0, _BFS_ITERS)
+    got = {r["node"]: r["dist"] for r in dist.collect()}
+    assert got == want
+    # round k reaches hop k+1; the first round that reaches nothing is
+    # the last one run, so an early exit returns the capped answer
+    assert rounds == min(max(want.values()) + 1, _BFS_ITERS)
 
 
 _BPE_WORDS = st.lists(
