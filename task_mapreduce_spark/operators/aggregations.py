@@ -622,7 +622,7 @@ def agg_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- persist the per-day partial state; reload with a fresh scan
     base = _work_dir("qsketch")
     partials.write.mode("overwrite").parquet(f"{base}/partials")
-    store = spark.read.parquet(f"{base}/partials")
+    store = spark.read.schema(partials.schema).parquet(f"{base}/partials")
 
     hist = store.groupBy("bin").agg(F.sum("cnt").cast("long").alias("cnt"))
     wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)

@@ -936,12 +936,13 @@ def dedup_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- index build: persist band keys + shingle sets ----
     base = _work_dir("dedup_index")
-    _band_buckets(idx_sh).write.mode("overwrite").parquet(f"{base}/bands")
+    bands = _band_buckets(idx_sh)
+    bands.write.mode("overwrite").parquet(f"{base}/bands")
     idx_sh.write.mode("overwrite").parquet(f"{base}/shingles")
 
     # ---- reload: everything below touches ONLY the reloaded store ----
-    bands_store = spark.read.parquet(f"{base}/bands")
-    sh_store = spark.read.parquet(f"{base}/shingles")
+    bands_store = spark.read.schema(bands.schema).parquet(f"{base}/bands")
+    sh_store = spark.read.schema(idx_sh.schema).parquet(f"{base}/shingles")
 
     probe = _band_buckets(batch_sh).select(
         F.col("doc_id").alias("new_id"), "band", "bkey"

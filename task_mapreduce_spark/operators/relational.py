@@ -159,7 +159,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = _work_dir("sink")
     out.write.mode("overwrite").parquet(f"{tmp}/agg")
-    return spark.read.parquet(f"{tmp}/agg")
+    return spark.read.schema(out.schema).parquet(f"{tmp}/agg")
 
 
 # ---------------------------------------------------------------------------

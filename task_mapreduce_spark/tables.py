@@ -3,7 +3,11 @@
 Schemas are declared as ``StructType`` constants (read from the parquet
 footers of the driver-generated tables — FIXTURES.md) and validated on
 load: at 100 TB a silent schema drift is an outage, so the engine fails
-fast on any column/type mismatch instead of propagating it.
+fast on any column/type mismatch instead of propagating it.  The check
+reads the table's parquet footer on the driver (pyarrow, well under a
+millisecond) and the scan declares the schema, so loading a table runs
+no Spark job; letting Spark infer the schema would cost one scheduler
+job per load.
 
 All loads go through :func:`load` so that (a) the session timezone is
 pinned to UTC before any timestamp semantics apply, and (b) column
@@ -13,9 +17,14 @@ parquet scan and express everything else declaratively on top.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from task_mapreduce_spark.session import tune
 
@@ -120,8 +129,65 @@ def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-def load(spark: SparkSession, sf_dir: str, name: str, validate: bool = True) -> DataFrame:
-    """Read one table; fail fast on schema drift (names + types).
+def _footer_file(path: str) -> str | None:
+    """The file whose footer Spark would infer the table's schema from:
+    the table itself, or a directory table's first data file (Spark
+    skips ``_``/``.`` names such as ``_SUCCESS`` and ``.crc`` sidecars).
+    None when there is no local data file to read: a missing path, a
+    remote URI, or a directory holding only partition subdirectories."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    for entry in sorted(os.listdir(path)):
+        full = os.path.join(path, entry)
+        if not entry.startswith(("_", ".")) and os.path.isfile(full):
+            return full
+    return None
+
+
+def _footer_schema(name: str, path: str) -> T.StructType:
+    """Spark's types for one parquet footer, read on the driver."""
+    parquet = pq.read_metadata(path).schema
+    arrow = parquet.to_arrow_schema()
+    # pyarrow reads legacy INT96 timestamps as tz-less nanos, which would
+    # map to TIMESTAMP_NTZ; Spark reads them as a session-zone TIMESTAMP.
+    for i in range(len(parquet)):
+        col = parquet.column(i)
+        if col.physical_type == "INT96" and col.path in arrow.names:
+            arrow = arrow.set(
+                arrow.get_field_index(col.path),
+                pa.field(col.path, pa.timestamp("us", tz="UTC")),
+            )
+    try:
+        return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    except TypeError as e:  # a parquet type Spark's Arrow mapping rejects
+        raise ValueError(f"schema drift for table {name!r}: {e}") from e
+
+
+def _check(name: str, schema: T.StructType) -> None:
+    got = {f.name: f.dataType for f in schema.fields}
+    want = {f.name: f.dataType for f in SCHEMAS[name].fields}
+    if got != want:
+        raise ValueError(
+            f"schema drift for table {name!r}: expected {want}, got {got}"
+        )
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table with its declared schema; fail fast on schema drift
+    (names, case-sensitively, and types).
+
+    The check reads the parquet footer on the driver, and the scan then
+    declares ``SCHEMAS[name]``, so a load runs no Spark job.  A bare
+    ``spark.read.parquet(path)`` would run a one-task schema-inference
+    job per call.  The check is not optional: under a declared schema
+    Spark fills a missing column with NULLs and matches a case-only
+    rename silently.  Two loads still infer (one job each) and check
+    the inferred schema: ``events``, whose reading depends on the Spark
+    build (below), and a path with no local footer to read (a remote
+    URI, or a missing path, which then fails with Spark's own
+    ``PATH_NOT_FOUND``).
 
     ``events.ts`` is parquet ``TIMESTAMP(NANOS)``, which Spark's reader
     rejects; we read it as epoch-nanos long (legacy conf) and truncate
@@ -129,6 +195,7 @@ def load(spark: SparkSession, sf_dir: str, name: str, validate: bool = True) -> 
     parity holds at the value level.
     """
     tune(spark)
+    path = path_of(sf_dir, name)
     if name == "events":
         # ``events.ts`` is parquet TIMESTAMP(NANOS).  Spark's handling
         # differs by version: newer readers surface it natively as
@@ -139,7 +206,7 @@ def load(spark: SparkSession, sf_dir: str, name: str, validate: bool = True) -> 
         # unset — scans execute lazily, and on readers that honor it the
         # conf must still hold at execution time.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path_of(sf_dir, name))
+        df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # Legacy path: epoch nanos → floor to micros (the same
             # truncation DuckDB applies, so oracle parity holds).
@@ -148,13 +215,10 @@ def load(spark: SparkSession, sf_dir: str, name: str, validate: bool = True) -> 
             )
         df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
     else:
-        df = spark.read.parquet(path_of(sf_dir, name))
-    if validate:
-        expected = SCHEMAS[name]
-        got = {f.name: f.dataType for f in df.schema.fields}
-        want = {f.name: f.dataType for f in expected.fields}
-        if got != want:
-            raise ValueError(
-                f"schema drift for table {name!r}: expected {want}, got {got}"
-            )
+        footer = _footer_file(path)
+        if footer is not None:
+            _check(name, _footer_schema(name, footer))
+            return spark.read.schema(SCHEMAS[name]).parquet(path)
+        df = spark.read.parquet(path)
+    _check(name, df.schema)
     return df
