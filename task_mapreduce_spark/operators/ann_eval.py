@@ -1,16 +1,19 @@
-"""Whole-ANN-family recall scoreboard (round 9).
+"""Whole-ANN-family recall scoreboards (rounds 9 and 12).
 
 ``sim_eval_recall`` (curation.py) evaluates the sign-LSH arm only;
-this module adds the one oracle-checked scoreboard the round-8 verdict
-asked for: recall@k of EVERY registered ANN arm — hyperplane LSH
-(sim_search_ann), IVF cells (sim_search_ivf) and two-stage PQ
-(sim_search_pq) — against the exact ground truth each arm is defined
-over, embedding the registered operators/SQL verbatim so the eval can
-never drift from what the operators ship.
+this module scores recall@k of every registered ANN arm against the
+exact ground truth the arm is defined over.  Both registered
+scoreboards — ``sim_eval_recall_multi`` (the √N arms) and
+``sim_eval_recall_deploy`` (the linear-regime arms) — are one arm
+table each over one scoreboard function per engine:
+:func:`_scoreboard` (Spark) and :func:`_scoreboard_oracle` (DuckDB
+SQL).  An arm is its registered operator, and the oracle embeds that
+operator's registered SQL verbatim, so the eval can never drift from
+what the operators ship.
 
 Lives in its own module because it composes oracles from llm_extras,
-llm_pipeline AND training_pipeline: it must import after all three
-(see operators/__init__.py's ordering note for curation).
+llm_pipeline, training_pipeline AND ivfpq: it must import after all
+four (see operators/__init__.py's ordering note for curation).
 
 No reference citation is possible: ``/root/reference/`` is an empty
 checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.
@@ -18,18 +21,21 @@ checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.
 
 from __future__ import annotations
 
+from functools import partial, reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from task_mapreduce_spark.operators.ivfpq import sim_search_ivfpq
 from task_mapreduce_spark.operators.llm_extras import (
+    _ANN_N_QUERIES,
+    _hier_coarse,
     sim_search_ann,
     sim_search_ivf,
     sim_search_ivf_hier,
 )
 from task_mapreduce_spark.operators.llm_pipeline import sim_search_topk
 from task_mapreduce_spark.operators.training_pipeline import (
-    _PQ_N_QUERIES,
     _PQ_TOP_K,
     _pq_d2,
     sim_search_pq,
@@ -38,121 +44,76 @@ from task_mapreduce_spark.operators.training_pipeline import (
 from task_mapreduce_spark.registry import ORACLES, register
 from task_mapreduce_spark.tables import load
 
-
-def _recall_multi_oracle() -> str:
-    # every arm reuses its registered oracle verbatim; the cosine arms
-    # (ann, ivf) share sim_search_topk's registered exact ground truth,
-    # the PQ arm (L2-ranked) gets the exact L2 top-k — the same
-    # round-6 / vec_id-tiebreak discipline as sim_search_pq's rerank
-    topk_sql = ORACLES["sim_search_topk"]
-    ann_sql = ORACLES["sim_search_ann"]
-    ivf_sql = ORACLES["sim_search_ivf"]
-    pq_sql = ORACLES["sim_search_pq"]
-    return f"""
-    WITH exact_cos AS (SELECT query_id, vec_id FROM ({topk_sql})),
-    ann_k AS (SELECT query_id, vec_id FROM ({ann_sql})),
-    ivf_k AS (SELECT query_id, vec_id FROM ({ivf_sql})),
-    pq_k AS (SELECT query_id, vec_id FROM ({pq_sql})),
-    e2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q2 AS (SELECT vec_id AS query_id, v AS qv FROM e2
-           WHERE vec_id < {_PQ_N_QUERIES}),
-    exact_l2 AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q2.query_id, e2.vec_id,
-               row_number() OVER (PARTITION BY q2.query_id
-                 ORDER BY round(list_sum(list_transform(
-                            range(1, len(e2.v) + 1),
-                            i -> (e2.v[i] - q2.qv[i])
-                                 * (e2.v[i] - q2.qv[i]))), 6),
-                          e2.vec_id) AS rk
-        FROM e2 CROSS JOIN q2
-        WHERE e2.vec_id <> q2.query_id
-      ) WHERE rk <= {_PQ_TOP_K}
-    ),
-    ex AS (
-      SELECT 'ann' AS arm, query_id, vec_id FROM exact_cos
-      UNION ALL SELECT 'ivf', query_id, vec_id FROM exact_cos
-      UNION ALL SELECT 'pq', query_id, vec_id FROM exact_l2
-    ),
-    ap AS (
-      SELECT 'ann' AS arm, query_id, vec_id FROM ann_k
-      UNION ALL SELECT 'ivf', query_id, vec_id FROM ivf_k
-      UNION ALL SELECT 'pq', query_id, vec_id FROM pq_k
-    )
-    SELECT ex.arm,
-           CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(COUNT(ap.vec_id) AS BIGINT) AS n_hit,
-           round(CAST(COUNT(ap.vec_id) AS DOUBLE) / COUNT(*), 6)
-             AS recall_at_k
-    FROM ex LEFT JOIN ap
-      ON ex.arm = ap.arm AND ex.query_id = ap.query_id
-         AND ex.vec_id = ap.vec_id
-    GROUP BY ex.arm
-    """
+# An arm table row is (arm, registered key, ground truth, frame
+# function): the cosine-ranked arms are scored against sim_search_topk's
+# exact cosine top-k ("cos"), the L2-ranked PQ arms against the exact
+# squared-L2 top-k ("l2").  The frame function is ``(spark, sf_dir) ->
+# frame`` with (query_id, vec_id) columns; the oracle uses the key.
 
 
-@register("sim_eval_recall_multi", oracle=_recall_multi_oracle())
-def sim_eval_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of ALL THREE registered ANN arms in one keyed output:
-    one row per arm (ann = hyperplane LSH, ivf = centroid cells, pq =
-    two-stage ADC+rerank) with micro-averaged recall over the query
-    set — the single scoreboard an ANN deployment watches when tuning
-    one index family against another.
-
-    Every arm IS the registered operator (and the oracle embeds the
-    registered SQL verbatim), so this measures exactly what ships.
-    The cosine arms share sim_search_topk's exact ground truth — built
-    ONCE and fanned to both arms with an in-row explode of a 2-literal
-    array (safe Generate: constant non-empty array), not a second
-    corpus-scan subtree.  The PQ arm ranks by squared L2, so its
-    ground truth is the exact L2 top-k (broadcast 5-probe scan, the
-    sim_search_topk shape, round-6 + vec_id tiebreak — sim_search_pq's
-    own rerank discipline).  Beyond the arms, everything is
-    metadata-sized: each arm collapses to k·|queries| rows before the
-    hit join, hits counted via null-skipping COUNT over the left join
-    (the sim_eval_recall pattern), final output is 3 rows."""
-    exact_cos = sim_search_topk(spark, sf_dir).select(
-        F.explode(F.array(F.lit("ann"), F.lit("ivf"))).alias("arm"),
-        "query_id",
-        "vec_id",
-    )
+def _exact_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact squared-L2 top-k per query: a broadcast probe scan (the
+    sim_search_topk shape) with the PQ rerank's discipline — rounded-6
+    ``_pq_d2``, vec_id tiebreak."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    q = e.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
+    q = e.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     wq = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact_l2 = (
+    return (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            F.lit("pq").alias("arm"),
-            "query_id",
-            "vec_id",
-            _pq_d2("v", "qv").alias("d"),
-        )
+        .select("query_id", "vec_id", _pq_d2("v", "qv").alias("d"))
         .withColumn("rk", F.row_number().over(wq))
         .filter(F.col("rk") <= _PQ_TOP_K)
-        .select("arm", "query_id", "vec_id")
+        .select("query_id", "vec_id")
     )
-    ex = exact_cos.unionByName(exact_l2)
-    ap = (
-        sim_search_ann(spark, sf_dir)
-        .select(F.lit("ann").alias("arm"), "query_id", "vec_id")
-        .unionByName(
-            sim_search_ivf(spark, sf_dir).select(
-                F.lit("ivf").alias("arm"), "query_id", "vec_id"
-            )
+
+
+_TRUTHS = {"cos": sim_search_topk, "l2": _exact_l2}
+
+_EXACT_L2_SQL = f"""
+    SELECT query_id, vec_id FROM (
+      SELECT q2.query_id, e2.vec_id,
+             row_number() OVER (PARTITION BY q2.query_id
+               ORDER BY round(list_sum(list_transform(
+                          range(1, len(e2.v) + 1),
+                          i -> (e2.v[i] - q2.qv[i])
+                               * (e2.v[i] - q2.qv[i]))), 6),
+                        e2.vec_id) AS rk
+      FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) e2
+      CROSS JOIN (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+                  FROM embeddings WHERE vec_id < {_ANN_N_QUERIES}) q2
+      WHERE e2.vec_id <> q2.query_id
+    ) WHERE rk <= {_PQ_TOP_K}"""
+
+
+def _scoreboard(spark: SparkSession, sf_dir: str, arms) -> DataFrame:
+    """Micro-averaged recall@k per arm: (arm, n_exact, n_hit,
+    recall_at_k).  Each ground truth is built ONCE and fanned to its
+    arms with an in-row explode of a literal array (safe Generate:
+    constant non-empty array), not a second corpus-scan subtree.
+    Beyond the arms everything is metadata-sized: each arm is
+    k·|queries| rows before the hit join, and hits are a null-skipping
+    COUNT over the left join (the sim_eval_recall pattern)."""
+    by_truth: dict[str, list[str]] = {}
+    for arm, _, truth, _ in arms:
+        by_truth.setdefault(truth, []).append(arm)
+    ex = reduce(DataFrame.unionByName, [
+        _TRUTHS[truth](spark, sf_dir).select(
+            F.explode(F.array(*[F.lit(a) for a in names])).alias("arm"),
+            "query_id",
+            "vec_id",
         )
-        .unionByName(
-            sim_search_pq(spark, sf_dir).select(
-                F.lit("pq").alias("arm"), "query_id", "vec_id"
-            )
-        )
-        .withColumn("hit", F.lit(1))
-    )
+        for truth, names in by_truth.items()
+    ])
+    ap = reduce(DataFrame.unionByName, [
+        build(spark, sf_dir).select(F.lit(arm).alias("arm"), "query_id", "vec_id")
+        for arm, _, _, build in arms
+    ]).withColumn("hit", F.lit(1))
     return (
         ex.join(ap, ["arm", "query_id", "vec_id"], "left")
         .groupBy("arm")
@@ -171,47 +132,33 @@ def sim_eval_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_deploy_oracle() -> str:
-    # the DEPLOYMENT arms' scoreboard (round-12 verdict #1): the three
-    # linear-regime configurations a 100× deployment actually runs —
-    # constant-cell two-level IVF (cosine-ranked), constant-codebook PQ
-    # and the composed IVFADC (both L2-ranked) — each embedded as its
-    # registered SQL verbatim, scored against the same exact ground
-    # truths the legacy scoreboard uses
-    topk_sql = ORACLES["sim_search_topk"]
-    hier_sql = ORACLES["sim_search_ivf_hier"]
-    pqc_sql = ORACLES["sim_search_pq_const"]
-    ivfpq_sql = ORACLES["sim_search_ivfpq"]
+def _scoreboard_oracle(arms) -> str:
+    """DuckDB twin of :func:`_scoreboard` over the same arm table: the
+    two exact ground truths once each, every arm's registered SQL
+    verbatim, and the hit-count aggregate over their left join."""
+    arm_ctes = "".join(
+        f"{arm}_k AS (SELECT query_id, vec_id FROM ({ORACLES[key]})),\n    "
+        for arm, key, _, _ in arms
+    )
+    ex = "\n      UNION ALL ".join(
+        f"SELECT '{arm}' AS arm, query_id, vec_id FROM exact_{truth}"
+        for arm, _, truth, _ in arms
+    )
+    ap = "\n      UNION ALL ".join(
+        f"SELECT '{arm}' AS arm, query_id, vec_id FROM {arm}_k"
+        for arm, _, _, _ in arms
+    )
     return f"""
-    WITH exact_cos AS (SELECT query_id, vec_id FROM ({topk_sql})),
-    hier_k AS (SELECT query_id, vec_id FROM ({hier_sql})),
-    pqc_k AS (SELECT query_id, vec_id FROM ({pqc_sql})),
-    ivfpq_k AS (SELECT query_id, vec_id FROM ({ivfpq_sql})),
-    e2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q2 AS (SELECT vec_id AS query_id, v AS qv FROM e2
-           WHERE vec_id < {_PQ_N_QUERIES}),
-    exact_l2 AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q2.query_id, e2.vec_id,
-               row_number() OVER (PARTITION BY q2.query_id
-                 ORDER BY round(list_sum(list_transform(
-                            range(1, len(e2.v) + 1),
-                            i -> (e2.v[i] - q2.qv[i])
-                                 * (e2.v[i] - q2.qv[i]))), 6),
-                          e2.vec_id) AS rk
-        FROM e2 CROSS JOIN q2
-        WHERE e2.vec_id <> q2.query_id
-      ) WHERE rk <= {_PQ_TOP_K}
+    WITH exact_cos AS (
+      SELECT query_id, vec_id FROM ({ORACLES["sim_search_topk"]})
     ),
-    ex AS (
-      SELECT 'ivf_hier' AS arm, query_id, vec_id FROM exact_cos
-      UNION ALL SELECT 'pq_const', query_id, vec_id FROM exact_l2
-      UNION ALL SELECT 'ivfpq', query_id, vec_id FROM exact_l2
+    exact_l2 AS ({_EXACT_L2_SQL}
+    ),
+    {arm_ctes}ex AS (
+      {ex}
     ),
     ap AS (
-      SELECT 'ivf_hier' AS arm, query_id, vec_id FROM hier_k
-      UNION ALL SELECT 'pq_const', query_id, vec_id FROM pqc_k
-      UNION ALL SELECT 'ivfpq', query_id, vec_id FROM ivfpq_k
+      {ap}
     )
     SELECT ex.arm,
            CAST(COUNT(*) AS BIGINT) AS n_exact,
@@ -225,13 +172,47 @@ def _recall_deploy_oracle() -> str:
     """
 
 
-@register("sim_eval_recall_deploy", oracle=_recall_deploy_oracle())
+_MULTI_ARMS = (
+    ("ann", "sim_search_ann", "cos", sim_search_ann),
+    ("ivf", "sim_search_ivf", "cos", sim_search_ivf),
+    ("pq", "sim_search_pq", "l2", sim_search_pq),
+)
+
+
+@register("sim_eval_recall_multi", oracle=_scoreboard_oracle(_MULTI_ARMS))
+def sim_eval_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@k of the three √N ANN arms in one keyed output: one row
+    per arm (ann = hyperplane LSH, ivf = centroid cells, pq =
+    two-stage ADC+rerank) with micro-averaged recall over the query
+    set — the single scoreboard an ANN deployment watches when tuning
+    one index family against another.  The cosine arms share
+    sim_search_topk's exact ground truth; the L2-ranked PQ arm is
+    scored against the exact L2 top-k."""
+    return _scoreboard(spark, sf_dir, _MULTI_ARMS)
+
+
+def _deploy_arms(coarse) -> tuple:
+    """The deployment arm table.  The hier and ivfpq arms share their
+    coarse level BY CONSTRUCTION (both are ``_ivf_cells(e, target_cell=
+    _IVF_HIER_CELL)``), so both frame functions get the same ``_hier_coarse``
+    frames ``coarse``; the oracle only reads the keys, so the oracle
+    table is built with ``coarse=None``."""
+    return (
+        ("ivf_hier", "sim_search_ivf_hier", "cos",
+         partial(sim_search_ivf_hier, _coarse=coarse)),
+        ("pq_const", "sim_search_pq_const", "l2", sim_search_pq_const),
+        ("ivfpq", "sim_search_ivfpq", "l2",
+         partial(sim_search_ivfpq, _coarse=coarse)),
+    )
+
+
+@register("sim_eval_recall_deploy", oracle=_scoreboard_oracle(_deploy_arms(None)))
 def sim_eval_recall_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the three DEPLOYMENT ANN arms — the linear-regime
     configurations a 100× deployment actually serves (round-12 verdict
     #1: these were value-certified as operators but their serving
     metric — the number an operator tunes the index against — was
-    oracle-checked only for the legacy √N arms):
+    oracle-checked only for the √N arms):
 
     - ``ivf_hier`` — constant-cell two-level IVF
       (sim_search_ivf_hier), cosine-ranked, scored against
@@ -241,84 +222,10 @@ def sim_eval_recall_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``ivfpq`` — the composed IVFADC (sim_search_ivfpq, hier coarse
       level + residual PQ), L2-ranked, same exact-L2 ground truth.
 
-    Every arm IS the registered operator and the oracle embeds each
-    arm's registered SQL verbatim (the sim_eval_recall_multi
-    scoreboard convention — the eval can never drift from what
-    ships).  The exact-L2 ground truth is built ONCE and fanned to
-    both L2 arms with an in-row explode of a 2-literal array (safe
-    Generate: constant non-empty array); everything beyond the arms
-    is metadata-sized (k·|queries| rows per arm, null-skipping COUNT
-    over the left join, 3 output rows).
-
-    Round-13 optimization: the hier and ivfpq arms share their coarse
-    level BY CONSTRUCTION (both are ``_ivf_cells(e, target_cell=
-    _IVF_HIER_CELL)`` — the composed key's documented can-never-
-    disagree property), so the eval materializes that construction
-    ONCE via ``_hier_coarse`` and hands the same checkpointed frames
-    to both arm calls.  This is not a fork of the arms (each arm runs
-    its registered body over inputs built by the arms' own shared
-    builder — the _super_structs memoization pattern one level up);
-    measured: the eval's job count drops ~25 of 145 and the duplicated
-    ~N·2√nlist assign work disappears, with the scoreboard's rows
-    bit-identical (the oracle replays both arms from one shared CTE
-    chain anyway)."""
-    from task_mapreduce_spark.operators.llm_extras import _hier_coarse
-
-    coarse = _hier_coarse(spark, sf_dir)
-    exact_cos = sim_search_topk(spark, sf_dir).select(
-        F.lit("ivf_hier").alias("arm"), "query_id", "vec_id"
-    )
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    q = e.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact_l2 = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _pq_d2("v", "qv").alias("d"))
-        .withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= _PQ_TOP_K)
-        .select(
-            F.explode(F.array(F.lit("pq_const"), F.lit("ivfpq"))).alias(
-                "arm"
-            ),
-            "query_id",
-            "vec_id",
-        )
-    )
-    ex = exact_cos.unionByName(exact_l2)
-    ap = (
-        sim_search_ivf_hier(spark, sf_dir, _coarse=coarse)
-        .select(F.lit("ivf_hier").alias("arm"), "query_id", "vec_id")
-        .unionByName(
-            sim_search_pq_const(spark, sf_dir).select(
-                F.lit("pq_const").alias("arm"), "query_id", "vec_id"
-            )
-        )
-        .unionByName(
-            sim_search_ivfpq(spark, sf_dir, _coarse=coarse).select(
-                F.lit("ivfpq").alias("arm"), "query_id", "vec_id"
-            )
-        )
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        ex.join(ap, ["arm", "query_id", "vec_id"], "left")
-        .groupBy("arm")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-        )
-        .select(
-            "arm",
-            "n_exact",
-            "n_hit",
-            F.round(
-                F.col("n_hit").cast("double") / F.col("n_exact"), 6
-            ).alias("recall_at_k"),
-        )
-    )
+    Round-13 optimization: the eval materializes the shared coarse
+    level ONCE via ``_hier_coarse`` and hands the same checkpointed
+    frames to the hier and ivfpq arms (see :func:`_deploy_arms`).
+    Each arm still runs its registered body; measured: the eval's job
+    count dropped ~25 of 145 with the scoreboard's rows bit-identical
+    (the oracle replays both arms from one shared CTE chain anyway)."""
+    return _scoreboard(spark, sf_dir, _deploy_arms(_hier_coarse(spark, sf_dir)))

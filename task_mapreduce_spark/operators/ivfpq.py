@@ -7,9 +7,13 @@ one-byte-class codes instead of raw floats.
 
 Lives in its own module because it composes the two registered
 constructions — ``_ivf_cells`` (llm_extras) for the coarse level and
-the ``_pq_assign``/slice machinery (training_pipeline) for the
-residual level — and must import after both (the ann_eval ordering
-convention in operators/__init__.py).
+the flat-PQ stages of training_pipeline for the residual level — and
+must import after both (the ann_eval ordering convention in
+operators/__init__.py).  Only the residual slicing, the per-cell
+lookup tables and the cell-aware ADC join are written here; the
+assign (``_pq_assign``), the Lloyd round (``_pq_lloyd_step``), the
+shortlist + rerank (``_pq_rerank``) and their SQL emitters are the
+ones flat PQ runs.
 
 No reference citation is possible: ``/root/reference/`` is an empty
 checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.
@@ -17,11 +21,10 @@ checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from task_mapreduce_spark.operators.llm_extras import (
-    _ANN_N_QUERIES,
     _hier_coarse,
     _hier_probe_ctes,
     _hier_probes,
@@ -29,13 +32,15 @@ from task_mapreduce_spark.operators.llm_extras import (
 )
 from task_mapreduce_spark.operators.training_pipeline import (
     _PQ_M,
-    _PQ_SHORTLIST,
-    _PQ_TOP_K,
     _pq_assign,
+    _pq_assign_ctes,
     _pq_d2,
+    _pq_lloyd_step,
+    _pq_mean_ctes,
+    _pq_rerank,
+    _pq_rerank_sql,
 )
 from task_mapreduce_spark.registry import register
-from task_mapreduce_spark.tables import load
 
 # constant residual-codebook size (the linear-encode regime —
 # sim_search_pq_const's convention; production turns this to 256)
@@ -54,13 +59,14 @@ def _ivfpq_ctes() -> str:
     IVF seed rule's chars 1-12 — a same-bit rule would train the
     residual codebook preferentially on centroid vectors, whose
     residuals are ≈0: the CLAUDE.md composed-hash-rule trap in its
-    most insidious form), one exact-decimal Lloyd round, and the
-    encode.  Ends in res/cb/pcodes (+ the inherited
-    e/cents/cells/sup/csup)."""
-    return (
-        _ivf_hier_ctes()
-        + f""",
-    res AS (
+    most insidious form), one exact-decimal Lloyd round and the encode
+    (the flat-PQ chain's own ``_pq_assign_ctes``/``_pq_mean_ctes``
+    emitters over the residual slices ``rsl``).  Ends in res/rsl/pcs1/
+    pcodes1 (+ the inherited e/cents/cells/sup/csup)."""
+    return ",\n    ".join(
+        [
+            _ivf_hier_ctes(),
+            f"""res AS (
       SELECT c.vec_id, c.cell,
              list_transform(range(1, len(e.v) + 1),
                             i -> e.v[i] - ct.cv[i]) AS rv
@@ -78,55 +84,15 @@ def _ivfpq_ctes() -> str:
                         (s.sub + 1) * (len(r.rv) // {_PQ_M})) AS sv
       FROM res r CROSS JOIN subs s
     ),
-    pcb0 AS (
+    pcs0 AS (
       SELECT vec_id AS cid, sub, sv AS csl FROM rsl, p2
       WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 13, 12))::BIGINT
               % p2.stride = 0
-    ),
-    pscored0 AS (
-      SELECT rsl.vec_id, rsl.sub, c.cid,
-             round(list_sum(list_transform(range(1, rsl.dsub + 1),
-                    i -> (rsl.sv[i] - c.csl[i]) * (rsl.sv[i] - c.csl[i]))), 6)
-               AS d2
-      FROM rsl JOIN pcb0 c USING (sub)
-    ),
-    pcodes0 AS (
-      SELECT vec_id, sub, cid AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY d2, cid) AS rn
-        FROM pscored0
-      ) WHERE rn = 1
-    ),
-    pelems1 AS (
-      SELECT c.sub, c.code, unnest(rsl.sv) AS val,
-             unnest(range(len(rsl.sv))) AS idx
-      FROM pcodes0 c
-      JOIN rsl ON rsl.vec_id = c.vec_id AND rsl.sub = c.sub
-    ),
-    pmeans1 AS (
-      SELECT sub, code, idx,
-             round(CAST(SUM(CAST(val AS DECIMAL(28,10))) AS DOUBLE)
-                     / COUNT(*), 9) AS m
-      FROM pelems1 GROUP BY sub, code, idx
-    ),
-    pcb AS (
-      SELECT code AS cid, sub, list(m ORDER BY idx) AS csl
-      FROM pmeans1 GROUP BY sub, code
-    ),
-    pscored1 AS (
-      SELECT rsl.vec_id, rsl.sub, c.cid,
-             round(list_sum(list_transform(range(1, rsl.dsub + 1),
-                    i -> (rsl.sv[i] - c.csl[i]) * (rsl.sv[i] - c.csl[i]))), 6)
-               AS d2
-      FROM rsl JOIN pcb c USING (sub)
-    ),
-    pcodes AS (
-      SELECT vec_id, sub, cid AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY d2, cid) AS rn
-        FROM pscored1
-      ) WHERE rn = 1
-    )"""
+    )""",
+        ]
+        + _pq_assign_ctes("rsl", 0, "p")
+        + _pq_mean_ctes("rsl", 1, "p")
+        + _pq_assign_ctes("rsl", 1, "p")
     )
 
 
@@ -151,41 +117,19 @@ def _ivfpq_ctes() -> str:
              round(list_sum(list_transform(range(1, q.dsub + 1),
                     i -> (q.sv[i] - c.csl[i]) * (q.sv[i] - c.csl[i]))), 6)
                AS d2
-      FROM qres q JOIN pcb c USING (sub)
+      FROM qres q JOIN pcs1 c USING (sub)
     ),
     adc AS (
       SELECT d.query_id, v.vec_id,
              round(CAST(SUM(CAST(d.d2 AS DECIMAL(18,6))) AS DOUBLE), 6)
                AS adc_dist
       FROM cells v
-      JOIN pcodes k ON k.vec_id = v.vec_id
+      JOIN pcodes1 k ON k.vec_id = v.vec_id
       JOIN dt d ON d.cell = v.cell AND d.sub = k.sub AND d.cid = k.code
       WHERE v.vec_id <> d.query_id
       GROUP BY d.query_id, v.vec_id
     ),
-    short AS (
-      SELECT query_id, vec_id, adc_dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dist, vec_id) AS srn
-        FROM adc
-      ) WHERE srn <= {_PQ_SHORTLIST}
-    ),
-    rerank AS (
-      SELECT s.query_id, s.vec_id, s.adc_dist,
-             round(list_sum(list_transform(range(1, len(ec.v) + 1),
-                    i -> (ec.v[i] - eq.v[i]) * (ec.v[i] - eq.v[i]))), 6)
-               AS dist
-      FROM short s
-      JOIN e ec ON ec.vec_id = s.vec_id
-      JOIN e eq ON eq.vec_id = s.query_id
-    )
-    SELECT query_id, vec_id, adc_dist, dist,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY dist, vec_id) AS BIGINT)
-             AS rank
-    FROM rerank
-    QUALIFY rank <= {_PQ_TOP_K}
-    """,
+    {_pq_rerank_sql()}""",
 )
 def sim_search_ivfpq(
     spark: SparkSession, sf_dir: str, _coarse=None
@@ -306,37 +250,9 @@ def sim_search_ivfpq(
         )
     )
 
-    # one exact-decimal Lloyd round over the residual slices (the
-    # _pq_encode loop body, verbatim discipline)
-    ev = rsl.select("vec_id", "sub", "sv")
-    cur = (
-        _pq_assign(ev, cs)
-        .join(ev, ["vec_id", "sub"])
-        .localCheckpoint()
-    )
-    means = (
-        cur.select("sub", "code", F.posexplode("sv").alias("idx", "val"))
-        .groupBy("sub", "code", "idx")
-        .agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(28,10)")).cast("double")
-                / F.count(F.lit(1)),
-                9,
-            ).alias("m")
-        )
-    )
-    cs = (
-        means.groupBy("sub", "code")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "m"))),
-                lambda s: s["m"],
-            ).alias("csl")
-        )
-        .select(F.col("code").alias("cid"), "sub", "csl")
-        .localCheckpoint()
-    )
-    codes = _pq_assign(ev, cs).select("vec_id", "sub", "code")
+    # one exact-decimal Lloyd round over the residual slices
+    cs = _pq_lloyd_step(rsl, cs)
+    codes = _pq_assign(rsl, cs).select("vec_id", "sub", "code")
 
     # ---- probe: two-level supers-first cell ranking with size-scaled
     # nprobe (the sim_search_ivf_hier probe, round 13), then
@@ -388,30 +304,4 @@ def sim_search_ivfpq(
             ).alias("adc_dist")
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("vec_id")
-    )
-    short = (
-        adc.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .select("query_id", "vec_id", "adc_dist")
-    )
-    raw = e.select("vec_id", "v")
-    qv = raw.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
-    )
-    rer = (
-        raw.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "adc_dist",
-            _pq_d2("v", "qvec").alias("dist"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _PQ_TOP_K)
-    )
+    return _pq_rerank(adc, e.select("vec_id", "v"))

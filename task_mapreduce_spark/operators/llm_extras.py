@@ -746,7 +746,7 @@ _ANN_MIN_PLANES = 4         # floor: 16 buckets even on tiny fixtures
 _ANN_MAX_PLANES = 16        # fixed-seed plane POOL size (the cap)
 _ANN_TARGET_BUCKET = 64     # derive planes so E[bucket size] ≈ this
 _ANN_TOP_K = 10
-_ANN_N_QUERIES = 5
+_ANN_N_QUERIES = 5  # the ANN-family query set: vec_id < 5
 
 
 def _hyperplanes(dim: int = 64) -> list[list[float]]:
@@ -1630,6 +1630,34 @@ def _lloyd_mean_ctes(src_cells: str, idx: int) -> list:
     ]
 
 
+def _lloyd_means(frame: DataFrame, keys: list, vec: str) -> DataFrame:
+    """Spark twin of ``_lloyd_mean_ctes``: the element-wise mean of the
+    vector column ``vec`` per ``keys`` group, returned as (*keys, vec).
+    Posexplode, exact decimal(28,10) sum over one double division
+    rounded to 9, then the (idx, m) pairs collected and sorted back
+    into a vector.  The one Lloyd mean of both trainers: IVF cells
+    (keys ``cell``) and PQ codebooks (keys ``sub, code``).  ``frame``
+    must be checkpointed: Generate over a live hash-aggregate is a
+    measured 40× cliff (see ``_ivf_cells``)."""
+    means = (
+        frame.select(*keys, F.posexplode(vec).alias("idx", "val"))
+        .groupBy(*keys, "idx")
+        .agg(
+            F.round(
+                F.sum(F.col("val").cast("decimal(28,10)")).cast("double")
+                / F.count(F.lit(1)),
+                9,
+            ).alias("m")
+        )
+    )
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("idx", "m"))),
+            lambda s: s["m"],
+        ).alias(vec)
+    )
+
+
 def _ivf_cells_ctes(steps: int = _IVF_LLOYD_STEPS, where: str = "") -> str:
     """Shared IVF cell construction — the ONE clustering sim_search_ivf,
     dedup_semantic and mine_hard_negatives all build on, as a DuckDB CTE
@@ -1962,26 +1990,9 @@ def _ivf_cells(
         # the InferFiltersFromGenerate traps in CLAUDE.md).  N narrow
         # rows + the vector — the same working set as the index build.
         cur = cur.localCheckpoint()
-        means = (
-            cur.select("cell", F.posexplode("v").alias("idx", "val"))
-            .groupBy("cell", "idx")
-            .agg(
-                F.round(
-                    F.sum(F.col("val").cast("decimal(28,10)")).cast("double")
-                    / F.count(F.lit(1)),
-                    9,
-                ).alias("m")
-            )
-        )
         cents = (
-            means.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("idx", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .select(F.col("cell").alias("cid"), "cv")
+            _lloyd_means(cur, ["cell"], "v")
+            .select(F.col("cell").alias("cid"), F.col("v").alias("cv"))
             # EAGER checkpoint of the nlist-row centroid table, for two
             # measured reasons (x10 stress, 20k vectors, round 8):
             # (1) a BROADCAST subtree re-executes its whole child plan

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import dsum, sql_dsum
+from task_mapreduce_spark.operators.llm_extras import _ANN_N_QUERIES, _lloyd_means
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -236,10 +237,61 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PQ_M = 8          # subspaces: dim-64 fixture → 8 dims per subspace
-_PQ_N_QUERIES = 5  # the ANN-family query convention (vec_id < 5)
 _PQ_TOP_K = 10
 _PQ_SHORTLIST = 50  # ADC candidates per query fed to the exact rerank
 _PQ_LLOYD_STEPS = 1  # per-subspace k-means rounds over the hash seeds
+
+
+def _pq_assign_ctes(src: str, r: int, p: str = "") -> list[str]:
+    """One PQ assignment pass as DuckDB CTEs ``{p}scored{r}`` and
+    ``{p}codes{r}(vec_id, sub, code, err2)``: the rounded-6 squared L2
+    from each slice of ``src(vec_id, sub, dsub, sv)`` to each codeword
+    of ``{p}cs{r}(cid, sub, csl)`` in its subspace, argmin tie-broken
+    by codeword id.  The SQL twin of :func:`_pq_assign`."""
+    return [
+        f"""{p}scored{r} AS (
+      SELECT {src}.vec_id, {src}.sub, c.cid,
+             round(list_sum(list_transform(range(1, {src}.dsub + 1),
+                    i -> ({src}.sv[i] - c.csl[i]) * ({src}.sv[i] - c.csl[i]))), 6)
+               AS d2
+      FROM {src} JOIN {p}cs{r} c USING (sub)
+    )""",
+        f"""{p}codes{r} AS (
+      SELECT vec_id, sub, cid AS code, d2 AS err2
+      FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+                                     ORDER BY d2, cid) AS rn
+        FROM {p}scored{r}
+      ) WHERE rn = 1
+    )""",
+    ]
+
+
+def _pq_mean_ctes(src: str, r: int, p: str = "") -> list[str]:
+    """One PQ codebook update as DuckDB CTEs ``{p}elems{r}``,
+    ``{p}means{r}`` and ``{p}cs{r}(cid, sub, csl)``: each codeword
+    becomes the element-wise mean of the ``src`` slices that
+    ``{p}codes{r-1}`` assigned to it (exact decimal sum, one double
+    division, round 9; parallel unnests zip).  The SQL twin of
+    :func:`_pq_lloyd_step`'s mean."""
+    return [
+        f"""{p}elems{r} AS (
+      SELECT c.sub, c.code, unnest({src}.sv) AS val,
+             unnest(range(len({src}.sv))) AS idx
+      FROM {p}codes{r - 1} c
+      JOIN {src} ON {src}.vec_id = c.vec_id AND {src}.sub = c.sub
+    )""",
+        f"""{p}means{r} AS (
+      SELECT sub, code, idx,
+             round(CAST(SUM(CAST(val AS DECIMAL(28,10))) AS DOUBLE)
+                     / COUNT(*), 9) AS m
+      FROM {p}elems{r} GROUP BY sub, code, idx
+    )""",
+        f"""{p}cs{r} AS (
+      SELECT code AS cid, sub, list(m ORDER BY idx) AS csl
+      FROM {p}means{r} GROUP BY sub, code
+    )""",
+    ]
 
 
 def _pq_ctes(steps: int = _PQ_LLOYD_STEPS, target_k: int | None = None) -> str:
@@ -302,50 +354,9 @@ def _pq_ctes(steps: int = _PQ_LLOYD_STEPS, target_k: int | None = None) -> str:
     )""",
     ]
 
-    def assign(r: int) -> list[str]:
-        return [
-            f"""scored{r} AS (
-      SELECT ev.vec_id, ev.sub, c.cid,
-             round(list_sum(list_transform(range(1, ev.dsub + 1),
-                    i -> (ev.sv[i] - c.csl[i]) * (ev.sv[i] - c.csl[i]))), 6)
-               AS d2
-      FROM ev JOIN cs{r} c USING (sub)
-    )""",
-            f"""codes{r} AS (
-      SELECT vec_id, sub, cid AS code, d2 AS err2
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY d2, cid) AS rn
-        FROM scored{r}
-      ) WHERE rn = 1
-    )""",
-        ]
-
-    ctes += assign(0)
+    ctes += _pq_assign_ctes("ev", 0)
     for r in range(1, steps + 1):
-        ctes.append(
-            f"""elems{r} AS (
-      SELECT c.sub, c.code, unnest(ev.sv) AS val,
-             unnest(range(len(ev.sv))) AS idx
-      FROM codes{r - 1} c
-      JOIN ev ON ev.vec_id = c.vec_id AND ev.sub = c.sub
-    )"""
-        )
-        ctes.append(
-            f"""means{r} AS (
-      SELECT sub, code, idx,
-             round(CAST(SUM(CAST(val AS DECIMAL(28,10))) AS DOUBLE)
-                     / COUNT(*), 9) AS m
-      FROM elems{r} GROUP BY sub, code, idx
-    )"""
-        )
-        ctes.append(
-            f"""cs{r} AS (
-      SELECT code AS cid, sub, list(m ORDER BY idx) AS csl
-      FROM means{r} GROUP BY sub, code
-    )"""
-        )
-        ctes += assign(r)
+        ctes += _pq_mean_ctes("ev", r) + _pq_assign_ctes("ev", r)
     ctes.append(f"cs AS (SELECT * FROM cs{steps})")
     ctes.append(f"codes AS (SELECT * FROM codes{steps})")
     return ",\n    ".join(ctes)
@@ -407,8 +418,9 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_d2(a: str, b: str):
-    """Rounded squared-L2 between two slice columns — the ONE scoring
-    expression both PQ keys share (sequential left fold, identical to
+    """Rounded squared-L2 between two vector columns — the ONE scoring
+    expression of the PQ family: encode, ADC lookup tables, rerank and
+    the exact-L2 ground truth (sequential left fold, identical to
     DuckDB's list_sum over list_transform)."""
     return F.round(
         F.aggregate(
@@ -540,63 +552,34 @@ def _pq_encode(
     ev, cs = _pq_slices(spark, sf_dir, target_k)
     cs = cs.localCheckpoint()
     for _ in range(lloyd_steps):
-        cur = (
-            _pq_assign(ev, cs)
-            .join(ev.select("vec_id", "sub", "sv"), ["vec_id", "sub"])
-            .localCheckpoint()
-        )
-        means = (
-            cur.select("sub", "code", F.posexplode("sv").alias("idx", "val"))
-            .groupBy("sub", "code", "idx")
-            .agg(
-                F.round(
-                    F.sum(F.col("val").cast("decimal(28,10)")).cast("double")
-                    / F.count(F.lit(1)),
-                    9,
-                ).alias("m")
-            )
-        )
-        cs = (
-            means.groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("idx", "m"))),
-                    lambda s: s["m"],
-                ).alias("csl")
-            )
-            .select(F.col("code").alias("cid"), "sub", "csl")
-            .localCheckpoint()
-        )
+        cs = _pq_lloyd_step(ev, cs)
     return _pq_assign(ev, cs), ev, cs
 
 
-def _pq_search_oracle(ctes: str) -> str:
-    """The ADC-shortlist + rerank oracle SQL over a given PQ CTE chain
-    — shared verbatim by sim_search_pq (√N codebook CTEs) and
-    sim_search_pq_const (constant-K CTEs), mirroring the Spark side's
-    shared :func:`_pq_search`."""
-    return f"""
-    WITH {ctes},
-    q AS (
-      SELECT vec_id AS query_id, sub, dsub, sv FROM ev
-      WHERE vec_id < {_PQ_N_QUERIES}
-    ),
-    dt AS (
-      SELECT q.query_id, cs.sub, cs.cid,
-             round(list_sum(list_transform(range(1, q.dsub + 1),
-                    i -> (q.sv[i] - cs.csl[i]) * (q.sv[i] - cs.csl[i]))), 6)
-               AS d2
-      FROM q JOIN cs USING (sub)
-    ),
-    adc AS (
-      SELECT d.query_id, c.vec_id,
-             round(CAST(SUM(CAST(d.d2 AS DECIMAL(18,6))) AS DOUBLE), 6)
-               AS adc_dist
-      FROM codes c JOIN dt d ON d.sub = c.sub AND d.cid = c.code
-      WHERE c.vec_id <> d.query_id
-      GROUP BY d.query_id, c.vec_id
-    ),
-    short AS (
+def _pq_lloyd_step(ev: DataFrame, cs: DataFrame) -> DataFrame:
+    """One per-subspace Lloyd round over the slices ``ev(vec_id, sub,
+    sv)``: assign against ``cs``, then replace each codeword with the
+    mean of its slices (:func:`_lloyd_means`).  Returns the new
+    codebook (cid, sub, csl), checkpointed.  Both checkpoints are
+    measured cliffs: the assignment's guards the posexplode mean, the
+    codebook's stops each consuming broadcast from re-running the
+    round (see :func:`_pq_encode`)."""
+    cur = _pq_assign(ev, cs).join(ev, ["vec_id", "sub"]).localCheckpoint()
+    return (
+        _lloyd_means(cur, ["sub", "code"], "sv")
+        .select(F.col("code").alias("cid"), "sub", F.col("sv").alias("csl"))
+        .localCheckpoint()
+    )
+
+
+def _pq_rerank_sql(audit: str = "") -> str:
+    """The shortlist + exact-rerank tail of every PQ search oracle:
+    CTEs ``short`` and ``rerank`` over ``adc(query_id, vec_id,
+    adc_dist)`` and the raw vectors ``e(vec_id, v)``, then the final
+    top-k SELECT.  ``audit`` is extra select text appended to that
+    SELECT's columns.  The SQL twin of :func:`_pq_rerank`."""
+    audit = f", {audit}" if audit else ""
+    return f"""short AS (
       SELECT query_id, vec_id, adc_dist FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY adc_dist, vec_id) AS srn
@@ -615,10 +598,39 @@ def _pq_search_oracle(ctes: str) -> str:
     SELECT query_id, vec_id, adc_dist, dist,
            CAST(row_number() OVER (PARTITION BY query_id
                                    ORDER BY dist, vec_id) AS BIGINT)
-             AS rank
+             AS rank{audit}
     FROM rerank
     QUALIFY rank <= {_PQ_TOP_K}
     """
+
+
+def _pq_search_oracle(ctes: str, audit: str = "") -> str:
+    """The flat-PQ search oracle over a given PQ CTE chain: the ADC
+    lookup table, the ADC sum, then :func:`_pq_rerank_sql`.  The SQL
+    twin of :func:`_pq_adc_serve`; sim_search_pq, sim_search_pq_const
+    and pq_index_persist (with its ``audit`` columns) all use it."""
+    return f"""
+    WITH {ctes},
+    q AS (
+      SELECT vec_id AS query_id, sub, dsub, sv FROM ev
+      WHERE vec_id < {_ANN_N_QUERIES}
+    ),
+    dt AS (
+      SELECT q.query_id, cs.sub, cs.cid,
+             round(list_sum(list_transform(range(1, q.dsub + 1),
+                    i -> (q.sv[i] - cs.csl[i]) * (q.sv[i] - cs.csl[i]))), 6)
+               AS d2
+      FROM q JOIN cs USING (sub)
+    ),
+    adc AS (
+      SELECT d.query_id, c.vec_id,
+             round(CAST(SUM(CAST(d.d2 AS DECIMAL(18,6))) AS DOUBLE), 6)
+               AS adc_dist
+      FROM codes c JOIN dt d ON d.sub = c.sub AND d.cid = c.code
+      WHERE c.vec_id <> d.query_id
+      GROUP BY d.query_id, c.vec_id
+    ),
+    {_pq_rerank_sql(audit)}"""
 
 
 @register(
@@ -662,14 +674,29 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_search(
     spark: SparkSession, sf_dir: str, target_k: int | None = None
 ) -> DataFrame:
-    """The ONE ADC-shortlist + exact-rerank pipeline both registered
-    search keys run — ``sim_search_pq`` (corpus-derived √N codebook)
-    and ``sim_search_pq_const`` (constant-K codebook, the linear
-    regime) differ ONLY in the ``target_k`` they hand
-    :func:`_pq_encode`, so the serve path cannot fork between
-    regimes."""
+    """The ONE encode + serve pipeline both registered search keys run —
+    ``sim_search_pq`` (corpus-derived √N codebook) and
+    ``sim_search_pq_const`` (constant-K codebook, the linear regime)
+    differ ONLY in the ``target_k`` they hand :func:`_pq_encode`, so
+    the serve path cannot fork between regimes."""
     codes, ev, cs = _pq_encode(spark, sf_dir, target_k=target_k)
-    q = ev.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
+    return _pq_adc_serve(spark, sf_dir, codes, ev, cs)
+
+
+def _pq_adc_serve(
+    spark: SparkSession,
+    sf_dir: str,
+    codes: DataFrame,
+    ev: DataFrame,
+    cs: DataFrame,
+) -> DataFrame:
+    """Flat-PQ serving over an encoded corpus ``codes(vec_id, sub,
+    code)``, the slices ``ev`` and the codebook ``cs``: per query one
+    M×nlist ADC lookup table from its exact slices (BROADCAST), an
+    equi-join of the codes against it with exact DECIMAL(18,6) ADC
+    sums, then :func:`_pq_rerank`.  Run on live frames by
+    :func:`_pq_search` and on the reloaded store by pq_index_persist."""
+    q = ev.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "sub", "sv"
     )
     dt = q.join(cs, "sub").select(
@@ -688,6 +715,20 @@ def _pq_search(
             ).alias("adc_dist")
         )
     )
+    raw = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+    return _pq_rerank(adc, raw)
+
+
+def _pq_rerank(adc: DataFrame, raw: DataFrame) -> DataFrame:
+    """Shortlist + exact rerank, the last stage of every PQ search:
+    the ``_PQ_SHORTLIST`` best ADC candidates per query from
+    ``adc(query_id, vec_id, adc_dist)``, re-scored by exact rounded-6
+    squared L2 over the raw vectors ``raw(vec_id, v)``, cut to the
+    top ``_PQ_TOP_K``.  Shortlist and top-k are WindowGroupLimit
+    windows on unique orders; raw vectors are joined for
+    |queries|·shortlist rows only."""
     ws = Window.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("vec_id")
     )
@@ -696,14 +737,11 @@ def _pq_search(
         .filter(F.col("srn") <= _PQ_SHORTLIST)
         .select("query_id", "vec_id", "adc_dist")
     )
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    qv = e.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
+    qv = raw.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
     )
     rer = (
-        e.join(F.broadcast(short), "vec_id")
+        raw.join(F.broadcast(short), "vec_id")
         .join(F.broadcast(qv), "query_id")
         .select(
             "query_id",
@@ -773,56 +811,11 @@ def sim_search_pq_const(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table, shortlist and rerank from the raw vectors — plus audit
     # counts over the store — so a lossy round trip of either frame
     # (codes or codebook) changes rankings or the audit columns
-    oracle=f"""
-    WITH {_PQ_CTES},
-    q AS (
-      SELECT vec_id AS query_id, sub, dsub, sv FROM ev
-      WHERE vec_id < {_PQ_N_QUERIES}
+    oracle=_pq_search_oracle(
+        _PQ_CTES,
+        audit="CAST((SELECT COUNT(*) FROM codes) AS BIGINT) AS index_codes, "
+        "CAST((SELECT COUNT(*) FROM cs) AS BIGINT) AS index_codewords",
     ),
-    dt AS (
-      SELECT q.query_id, cs.sub, cs.cid,
-             round(list_sum(list_transform(range(1, q.dsub + 1),
-                    i -> (q.sv[i] - cs.csl[i]) * (q.sv[i] - cs.csl[i]))), 6)
-               AS d2
-      FROM q JOIN cs USING (sub)
-    ),
-    adc AS (
-      SELECT d.query_id, c.vec_id,
-             round(CAST(SUM(CAST(d.d2 AS DECIMAL(18,6))) AS DOUBLE), 6)
-               AS adc_dist
-      FROM codes c JOIN dt d ON d.sub = c.sub AND d.cid = c.code
-      WHERE c.vec_id <> d.query_id
-      GROUP BY d.query_id, c.vec_id
-    ),
-    short AS (
-      SELECT query_id, vec_id, adc_dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dist, vec_id) AS srn
-        FROM adc
-      ) WHERE srn <= {_PQ_SHORTLIST}
-    ),
-    rerank AS (
-      SELECT s.query_id, s.vec_id, s.adc_dist,
-             round(list_sum(list_transform(range(1, len(ec.v) + 1),
-                    i -> (ec.v[i] - eq.v[i]) * (ec.v[i] - eq.v[i]))), 6)
-               AS dist
-      FROM short s
-      JOIN e ec ON ec.vec_id = s.vec_id
-      JOIN e eq ON eq.vec_id = s.query_id
-    ),
-    stats AS (
-      SELECT (SELECT COUNT(*) FROM codes) AS index_codes,
-             (SELECT COUNT(*) FROM cs) AS index_codewords
-    )
-    SELECT query_id, vec_id, adc_dist, dist,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY dist, vec_id) AS BIGINT)
-             AS rank,
-           CAST(stats.index_codes AS BIGINT) AS index_codes,
-           CAST(stats.index_codewords AS BIGINT) AS index_codewords
-    FROM rerank CROSS JOIN stats
-    QUALIFY rank <= {_PQ_TOP_K}
-    """,
 )
 def pq_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ index's PERSISTED-STATE contract, executed — the
@@ -847,11 +840,12 @@ def pq_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: the persisted index is N·M one-byte-class codes
     (~8 B/vector vs 256 B raw — the entire point of PQ at scale) plus
-    a metadata-sized codebook; serving cost per query is one broadcast
-    M×nlist lookup table + an equi-join over the code table with
-    map-side partial ADC sums, identical to sim_search_pq's registered
-    shape — the index build amortizes across every query after the
-    first, and the raw corpus is read only for shortlist rerank rows."""
+    a metadata-sized codebook; serving is :func:`_pq_adc_serve` — the
+    same function sim_search_pq serves its live frames with — over the
+    reloaded store: one broadcast M×nlist lookup table per query + an
+    equi-join over the code table with map-side partial ADC sums.  The
+    index build amortizes across every query after the first, and the
+    raw corpus is read only for shortlist rerank rows."""
     from task_mapreduce_spark.operators.relational import _work_dir
 
     codes, ev, cs = _pq_encode(spark, sf_dir)
@@ -872,39 +866,6 @@ def pq_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cs_store = spark.read.schema(cs.schema).parquet(f"{base}/codebook")
 
-    q = ev.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "sub", "sv"
-    )
-    dt = q.join(cs_store, "sub").select(
-        "query_id", "sub", "cid", _pq_d2("sv", "csl").alias("d2")
-    )
-    adc = (
-        codes_store.join(
-            F.broadcast(dt),
-            (codes_store.sub == dt.sub) & (codes_store.code == dt.cid),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.round(
-                F.sum(F.col("d2").cast("decimal(18,6)")).cast("double"), 6
-            ).alias("adc_dist")
-        )
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("vec_id")
-    )
-    short = (
-        adc.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .select("query_id", "vec_id", "adc_dist")
-    )
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    qv = e.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
-    )
     stats = codes_store.agg(
         F.count(F.lit(1)).cast("bigint").alias("index_codes")
     ).crossJoin(
@@ -914,23 +875,8 @@ def pq_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    rer = (
-        e.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "adc_dist",
-            _pq_d2("v", "qvec").alias("dist"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _PQ_TOP_K)
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "vec_id", "adc_dist", "dist", "rank",
-                "index_codes", "index_codewords")
+    return _pq_adc_serve(spark, sf_dir, codes_store, ev, cs_store).crossJoin(
+        F.broadcast(stats)
     )
 
 

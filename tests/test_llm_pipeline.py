@@ -374,15 +374,25 @@ def test_ivf_hier_recall_holds_across_a_decade(spark, sf_dir, tmp_path):
     assert recall >= 0.7, f"decade recall {recall:.2f}"
 
 
-def test_deploy_scoreboard_covers_all_three_deployment_arms(spark, sf_dir):
-    # sim_eval_recall_deploy (round-12 verdict #1): the oracle-checked
-    # scoreboard must cover exactly the three linear-regime arms a
-    # deployment serves, with sane micro-averaged recall per arm.  The
-    # per-arm FLOORS live in each arm's own recall test; here we pin
-    # coverage + consistency (n_hit ≤ n_exact, recall = n_hit/n_exact).
-    rows = QUERIES["sim_eval_recall_deploy"](spark, sf_dir).collect()
+@pytest.mark.parametrize(
+    "key, arms",
+    [
+        ("sim_eval_recall_multi", {"ann", "ivf", "pq"}),
+        ("sim_eval_recall_deploy", {"ivf_hier", "pq_const", "ivfpq"}),
+    ],
+    ids=["sim_eval_recall_multi", "sim_eval_recall_deploy"],
+)
+def test_deploy_scoreboard_covers_all_three_deployment_arms(
+    spark, sf_dir, key, arms
+):
+    # each oracle-checked scoreboard must cover exactly its three arms
+    # (the deploy one: the linear-regime arms a deployment serves, the
+    # round-12 verdict #1), with sane micro-averaged recall per arm.
+    # The per-arm FLOORS live in each arm's own recall test; here we
+    # pin coverage + consistency (n_hit ≤ n_exact, recall = n_hit/n_exact).
+    rows = QUERIES[key](spark, sf_dir).collect()
     by_arm = {r["arm"]: r for r in rows}
-    assert set(by_arm) == {"ivf_hier", "pq_const", "ivfpq"}
+    assert set(by_arm) == arms
     for arm, r in by_arm.items():
         assert 0 < r["n_exact"], arm
         assert 0 <= r["n_hit"] <= r["n_exact"], arm

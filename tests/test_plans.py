@@ -993,19 +993,29 @@ def _jobs_in_group(spark, group: str, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# Build-time scheduler jobs (eager checkpoints, convergence reads) at
-# sf0.001 for the keys on the min-propagation kernel: key -> (measured,
-# slack), measured at local[4] (dedup_cluster_cc takes 15 at local[8]).
-# The slack absorbs AQE moving a runtime join conversion by a job; a
-# stray count() or checkpoint inside the kernel costs a job every round
-# and fails (a per-round count() took graph_bfs to 17).
+# Build-time scheduler jobs (eager checkpoints, convergence reads,
+# sink writes) at sf0.001: key -> (measured, slack), measured at
+# local[4] (dedup_cluster_cc takes 15 at local[8]; the ANN keys take
+# the same at local[4] and local[8]).  The slack absorbs AQE moving a
+# runtime join conversion by a job.  A stray count() or checkpoint in a
+# shared stage fails: inside the min-propagation kernel it costs a job
+# every round (a per-round count() took graph_bfs to 17), and inside a
+# PQ stage (encode, Lloyd round, ADC serve, rerank) it costs a job in
+# every ANN key that runs the stage, more in the scoreboards.
 _BUILD_JOB_CEILING = {
     "graph_bfs": (11, 2),
     "dedup_cluster_cc": (16, 2),
+    "embedding_pq": (12, 2),
+    "sim_search_pq": (12, 2),
+    "sim_search_pq_const": (12, 2),
+    "pq_index_persist": (16, 2),
+    "sim_search_ivfpq": (45, 2),
+    "sim_eval_recall_multi": (23, 2),
+    "sim_eval_recall_deploy": (57, 2),
 }
 
 
-def test_fixpoint_build_job_ceilings(spark, sf_dir):
+def test_build_job_ceilings(spark, sf_dir):
     for key, (measured, slack) in _BUILD_JOB_CEILING.items():
         jobs = _jobs_in_group(
             spark, f"build-job-ceiling/{key}", lambda: QUERIES[key](spark, sf_dir)

@@ -359,10 +359,8 @@ def test_embedding_pq_invariants(spark, sf_dir):
 
 
 def test_sim_search_pq_rerank_recall_and_invariants(spark, sf_dir):
-    from task_mapreduce_spark.operators.training_pipeline import (
-        _PQ_N_QUERIES,
-        _PQ_TOP_K,
-    )
+    from task_mapreduce_spark.operators.llm_extras import _ANN_N_QUERIES
+    from task_mapreduce_spark.operators.training_pipeline import _PQ_TOP_K
     from task_mapreduce_spark.tables import load
 
     rows = QUERIES["sim_search_pq"](spark, sf_dir).collect()
@@ -371,7 +369,7 @@ def test_sim_search_pq_rerank_recall_and_invariants(spark, sf_dir):
         assert r["vec_id"] != r["query_id"]
         assert r["dist"] >= 0.0 and r["adc_dist"] >= 0.0
         by_q.setdefault(r["query_id"], []).append(r)
-    assert set(by_q) == set(range(_PQ_N_QUERIES))
+    assert set(by_q) == set(range(_ANN_N_QUERIES))
     vecs = {
         r["vec_id"]: r["embedding"]
         for r in load(spark, sf_dir, "embeddings").collect()
