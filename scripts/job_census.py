@@ -8,7 +8,16 @@ job-count-bound keys (~0.3-0.5 s fixed floor per job here).  This script
 materializes each requested key through the noop sink inside its own job
 group and reports ``len(statusTracker.getJobIdsForGroup(group))``.
 
-Usage: python scripts/job_census.py [key,key,...|all] [sf_dir]
+With ``--sites`` each key's jobs are also credited to the package
+``file:line`` that triggered them.  Every ``localCheckpoint``,
+``collect``, ``first`` and ``count`` on a DataFrame, every
+``DataFrameWriter.parquet``/``save`` and every ``DataFrameReader.parquet``
+runs in a job group of its own, named after the innermost package frame
+that called it; the noop write of the census itself is ``run`` and jobs
+outside any of those calls are ``build-other``.  The patches switch job
+groups only, so the per-key totals equal a plain census.
+
+Usage: python scripts/job_census.py [--sites] [key,key,...|all] [sf_dir]
 Prints one ``key jobs wall_s`` line per key plus a JSON summary line.
 """
 
@@ -17,15 +26,74 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import task_mapreduce_spark  # noqa: E402
 from task_mapreduce_spark.session import get_spark  # noqa: E402
 from task_mapreduce_spark.registry import QUERIES  # noqa: E402
 
+_PKG = os.path.dirname(os.path.abspath(task_mapreduce_spark.__file__))
+
+
+def _site(frame) -> str:
+    """``file:line`` of the innermost package frame at or above ``frame``
+    (relative to the package), or ``run`` when no package code is on the
+    stack — the census's own noop write."""
+    while frame is not None:
+        fn = frame.f_code.co_filename
+        if fn.startswith(_PKG + os.sep):
+            return f"{os.path.relpath(fn, _PKG)}:{frame.f_lineno}"
+        frame = frame.f_back
+    return "run"
+
+
+def _install_site_groups(sc, seen: dict[str, set[str]]) -> None:
+    """Wrap the job-triggering calls so each runs in job group
+    ``<key>@<site>`` and records the site in ``seen[key]``.  A call made
+    inside another wrapped call (``first`` → ``collect``) keeps the
+    outer site."""
+    from pyspark.sql import DataFrameReader, DataFrameWriter
+
+    try:  # Spark 4.1: the classic DataFrame is the class instances have
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:
+        from pyspark.sql import DataFrame
+
+    state = threading.local()
+
+    def wrap(cls, name):
+        orig = getattr(cls, name)
+
+        def wrapper(*args, **kwargs):
+            key = sc.getLocalProperty("spark.jobGroup.id")
+            if key is None or getattr(state, "inside", False):
+                return orig(*args, **kwargs)
+            site = _site(sys._getframe(1))
+            seen.setdefault(key, set()).add(site)
+            state.inside = True
+            sc.setJobGroup(f"{key}@{site}", key)
+            try:
+                return orig(*args, **kwargs)
+            finally:
+                sc.setJobGroup(key, key)
+                state.inside = False
+
+        setattr(cls, name, wrapper)
+
+    for name in ("localCheckpoint", "collect", "first", "count"):
+        wrap(DataFrame, name)
+    wrap(DataFrameWriter, "parquet")
+    wrap(DataFrameWriter, "save")
+    wrap(DataFrameReader, "parquet")
+
 
 def main() -> int:
+    sites = "--sites" in sys.argv
+    if sites:
+        sys.argv.remove("--sites")
     keys = sys.argv[1] if len(sys.argv) > 1 else "all"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     names = sorted(QUERIES) if keys == "all" else keys.split(",")
@@ -38,6 +106,13 @@ def main() -> int:
         "noop"
     ).save()
 
+    seen: dict[str, set[str]] = {}
+    if sites:
+        _install_site_groups(sc, seen)
+
+    def n_jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     out: dict[str, dict] = {}
     for key in names:
         sc.setJobGroup(key, key)
@@ -47,9 +122,19 @@ def main() -> int:
         ).save()
         wall = round(time.time() - t0, 2)
         sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(key))
-        out[key] = {"jobs": jobs, "wall": wall}
-        print(f"{key} jobs={jobs} wall={wall}", flush=True)
+        row = {"jobs": n_jobs(key), "wall": wall}
+        if sites:
+            by_site = {s: n_jobs(f"{key}@{s}") for s in seen.get(key, ())}
+            by_site["build-other"] = row["jobs"]
+            row["jobs"] = sum(by_site.values())
+            row["sites"] = dict(
+                sorted(
+                    ((s, n) for s, n in by_site.items() if n),
+                    key=lambda kv: (-kv[1], kv[0]),
+                )
+            )
+        out[key] = row
+        print(f"{key} jobs={row['jobs']} wall={wall}", flush=True)
     print("CENSUS " + json.dumps(out, separators=(",", ":")))
     return 0
 

@@ -20,10 +20,16 @@ the keys):
 - ``sink_compact``   — small-files governance: range-clustered,
                        size-bounded parquet output (compaction).
 
-No key collects data to the driver; every Python-side literal is O(1).
+No key collects data rows to the driver.  Python-side literals are O(1)
+except the merge family's manifests: driver dicts of partition → data
+version, bounded by the calendar (one entry per order month).
 """
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -505,7 +511,6 @@ def join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MERGE_CUTOFF = "2001-01-01"   # the change batch: late-window orders
 _MERGE_SCHEMA = "k long, val double, p string"
-_MANIFEST_SCHEMA = "p string, ver int"
 
 _MERGE_CUTOFF_B = "2000-07-01"  # second batch window: [B_CUTOFF, B_END)
 _MERGE_END_B = "2001-05-01"     # — overlaps batch A's (>= 2001-01) without
@@ -575,114 +580,79 @@ def _merge_chain_ctes() -> str:
     )"""
 
 
-def _merge_read_snapshot(spark, store: str, man: DataFrame, vers) -> DataFrame:
-    """Read a manifest-defined snapshot: for each data VERSION the
-    manifest references, scan that version's partitioned dir pruned to
-    the partitions the manifest assigns to it.  The prune is the
-    manifest equi-join itself — dynamic partition pruning on the scan
-    (the sim_index_persist mechanism, plan-asserted), so a snapshot
-    read touches exactly the files the manifest names, never a
-    superseded partition's stale copy.  ``vers`` is the STATIC version
-    list each call site knows by construction (v2 snapshot = {1, 2}) —
-    no driver-side manifest collect.  Coverage is ASSERTED, not assumed
-    (round-12 advice): a call site handing a stale list would silently
-    lose every partition whose manifest version is absent from it (the
-    inner join just filters them out).  The assert is INLINE as of the
-    round-13 optimization pass: uncovered manifest rows become
-    raise_error poison rows unioned into the returned frame, so a stale
-    list still fails loudly at the first action over the snapshot, but
-    a COVERED read pays zero extra jobs — the previous driver-side
-    ``count()`` was one blocking metadata job per call, 2-5 jobs per
-    merge-family key on a per-job-overhead-bound host (raise_error is
-    non-foldable, so the optimizer cannot evaluate it at plan time;
-    with zero uncovered rows the branch contributes nothing but a
-    |partitions|-row manifest scan inside the consuming job)."""
-    vlist = sorted(int(v) for v in vers)
-    alarm = F.raise_error(
-        F.concat(
-            F.lit(
-                f"snapshot read covers versions {vlist} but the "
-                "manifest references partition "
-            ),
-            F.col("p"),
-            F.lit(" at version "),
-            F.col("ver").cast("string"),
-            F.lit(" outside them — stale version list at the call site"),
+def _merge_manifest(store: str, ver: int) -> dict[str, int]:
+    """Committed manifest ``ver`` of ``store``:
+    ``{partition: data version}``."""
+    with open(f"{store}/manifest/v{ver}.json") as fh:
+        return json.load(fh)
+
+
+def _merge_commit(store: str, ver: int, man: dict[str, int]) -> None:
+    """Publish manifest ``ver``.  It is written under a temp name and
+    then ``os.replace``d: the rename is the commit point, so a reader
+    sees the whole manifest or none of it."""
+    path = f"{store}/manifest/v{ver}.json"
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(f"{path}.tmp", "w") as fh:
+        json.dump(man, fh, sort_keys=True)
+    os.replace(f"{path}.tmp", path)
+
+
+def _merge_read_snapshot(spark, store: str, man: dict[str, int]) -> DataFrame:
+    """Read the snapshot manifest ``man`` describes: one declared-schema
+    scan of each data version it references, restricted by a literal
+    ``p IN (...)`` to the partitions it maps to that version (static
+    partition pruning), unioned.  A superseded partition's stale copy is
+    never read, and a version whose directory is missing (vacuumed or
+    never written) fails at read time with PATH_NOT_FOUND."""
+    by_ver: dict[int, list[str]] = {}
+    for p, v in sorted(man.items()):
+        by_ver.setdefault(v, []).append(p)
+    # an empty manifest (empty corpus, no changed partition) reads as an
+    # empty table; the optimizer drops this seed from non-empty unions
+    out = spark.createDataFrame([], _MERGE_SCHEMA)
+    for v, parts in sorted(by_ver.items()):
+        out = out.unionByName(
+            spark.read.schema(_MERGE_SCHEMA)
+            .parquet(f"{store}/data/v{v}")
+            .filter(F.col("p").isin(parts))
         )
-    )
-    # The alarm must survive BOTH prunings (round-13 advice):
-    # 1. COLUMN pruning: every projected column raises, so a consumer
-    #    that references any subset of (k, val, p) trips it — and a
-    #    consumer filter pushed below the union hits a non-foldable
-    #    raise_error expression instead of a statically-false literal
-    #    comparison (NULL-literal columns here would let PruneFilters +
-    #    PropagateEmptyRelation delete the whole branch for filtering
-    #    consumers).
-    # 2. FULL-projection pruning: a bare count() references no columns
-    #    at all, so the alarm ALSO guards the branch as a Filter
-    #    predicate — filter conditions are never column-pruned.  The
-    #    alarm is wrapped in when(~covered, ·) INSIDE the predicate so
-    #    that even if the optimizer merges/reorders it with the
-    #    membership filter it can never evaluate on a covered row.
-    trip = F.isnull(
-        F.when(~F.col("ver").isin(vlist), alarm.cast("string"))
-    )
-    poison = (
-        man.filter(~F.col("ver").isin(vlist))
-        .where(trip)
-        .select(
-            alarm.cast("long").alias("k"),
-            alarm.cast("double").alias("val"),
-            alarm.cast("string").alias("p"),
-        )
-    )
-    parts = [poison]
-    for v in vlist:
-        data = spark.read.schema(_MERGE_SCHEMA).parquet(f"{store}/data/v{v}")
-        sel = man.filter(F.col("ver") == int(v)).select("p")
-        parts.append(data.join(F.broadcast(sel), "p").select("k", "val", "p"))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
     return out
 
 
+def _merge_create(store: str, base: DataFrame) -> None:
+    """Commit version 1: ``base`` partitioned by ``p`` under ``data/v1``,
+    every partition it holds mapped to version 1."""
+    base.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
+        f"{store}/data/v1"
+    )
+    parts = base.select("p").distinct().collect()  # calendar-bounded
+    _merge_commit(store, 1, {r["p"]: 1 for r in parts})
+
+
 def _merge_apply(
-    spark, store: str, man_src: DataFrame, src_vers, batch: DataFrame,
-    dst_ver: int,
+    spark, store: str, src: dict[str, int], batch: DataFrame, dst: int
 ) -> None:
     """One copy-on-write MERGE commit: apply ``batch`` (k, p, op, bval)
-    to the snapshot ``man_src`` describes and write data version
-    ``dst_ver`` plus its manifest.
+    to the snapshot manifest ``src`` describes, write data version
+    ``dst`` and commit manifest ``dst``.
 
-    Semantics are last-write-wins UPSERT + tombstone DELETE — 'U'/'I'
-    set val to the batch's OWN bval (never a function of the target,
-    which is what makes a retried commit idempotent: re-applying the
-    same batch sets the same values and re-deletes absent rows —
-    pytest-pinned), 'D' drops the key whether present or not.  The op
-    labels record batch intent for the audit; apply treats U and I
-    identically, the MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED
-    INSERT pair.
+    Last-write-wins UPSERT + tombstone DELETE: 'U'/'I' set val to the
+    batch's OWN bval (never a function of the target, so a retried
+    commit is idempotent — pytest-pinned), 'D' drops the key whether
+    present or not.
 
-    Copy-on-write at PARTITION granularity: only partitions the batch
-    touches (affected = batch's own distinct p — metadata-sized by
-    construction, bounded by the calendar) are re-merged and rewritten
-    under ``data/v{dst}``; every other partition is carried by
-    REFERENCE — the new manifest maps it to the version that already
-    holds it.  The full-outer merge join therefore scans only affected
-    partitions (the manifest join DPP-prunes the rest), so commit cost
-    is |touched partitions| + |batch|, never |table| — the lakehouse
-    CoW idiom (Delta/Iceberg) expressed as plain parquet + a manifest,
-    with readers always consistent: they resolve a manifest version,
-    and data files under it are immutable."""
-    snap = _merge_read_snapshot(spark, store, man_src, src_vers)
-    # eager checkpoint: `affected` is metadata-sized (calendar-bounded)
-    # but BROADCAST to two consumers (the merge-scan prune and the
-    # manifest anti-join/union) — a broadcast subtree re-executes its
-    # whole child plan per consuming job (CLAUDE.md), which here means
-    # re-deriving the batch from the base scan per job
-    affected = batch.select("p").distinct().localCheckpoint()
-    tgt = snap.join(F.broadcast(affected), "p")
+    Copy-on-write at PARTITION granularity: the batch's distinct
+    partitions are collected (calendar-bounded) and only they are
+    re-merged and rewritten under ``data/v{dst}``; the new manifest
+    carries every other partition by reference.  The affected set comes
+    from the batch, never from listing the written directory: a
+    partition whose rows are all deleted writes no directory, yet must
+    still move to ``dst`` (where it reads back empty)."""
+    affected = {r["p"] for r in batch.select("p").distinct().collect()}
+    tgt = _merge_read_snapshot(
+        spark, store, {p: src[p] for p in affected if p in src}
+    )
     b = batch.select("k", F.col("p").alias("bp"), "op", "bval")
     merged = (
         tgt.join(b, "k", "full_outer")
@@ -696,12 +666,9 @@ def _merge_apply(
         )
     )
     merged.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
-        f"{store}/data/v{dst_ver}"
+        f"{store}/data/v{dst}"
     )
-    man_dst = man_src.join(affected, "p", "left_anti").unionByName(
-        affected.withColumn("ver", F.lit(int(dst_ver)).cast("int"))
-    )
-    man_dst.write.mode("overwrite").parquet(f"{store}/manifest/v{dst_ver}")
+    _merge_commit(store, dst, {**src, **dict.fromkeys(affected, dst)})
 
 
 def _merge_base_batch(spark, sf_dir: str):
@@ -779,88 +746,63 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACID-style MERGE/upsert sink with snapshot read-back — the
     lakehouse idiom the persist-family keys stop short of (round-11
     verdict #2), built engine-portably: a partitioned parquet table +
-    a tiny versioned MANIFEST (partition → data version) stand in for
-    Delta/Iceberg's snapshot metadata, which the sandbox can't install.
+    a versioned JSON MANIFEST (partition → data version) that the driver
+    owns, standing in for Delta/Iceberg's snapshot log, which the
+    sandbox can't install.
 
-    The commit path (:func:`_merge_apply`): write base table v1
-    (partitioned by order month) + manifest v1; apply the change batch
-    — inserts (keys the base never had), updates (explicit new value,
-    NOT a function of the target — the idempotency property), deletes
-    (tombstones) — as a COPY-ON-WRITE merge that rewrites ONLY the
+    Commit base table v1 (partitioned by order month), then apply the
+    change batch — inserts, updates (explicit new value, NOT a function
+    of the target — the idempotency property), deletes (tombstones) — as
+    a COPY-ON-WRITE merge (:func:`_merge_apply`) that rewrites ONLY the
     partitions the batch touches and carries the other ~90% of the
-    table BY REFERENCE in manifest v2.  The returned frame reads the
-    v2 SNAPSHOT back from disk (manifest + both data versions, the
-    carried-partition scan DPP-pruned by the manifest join) and
+    table BY REFERENCE in manifest v2.  The returned frame reads the v2
+    SNAPSHOT back from disk (reloaded manifest + both data versions) and
     certifies it per partition: row count, exact-decimal value sum,
     min/max key — against an oracle that recomputes the MERGE from
-    scratch with one full-outer join.  A stale carried partition, a
-    lost insert, or a half-applied tombstone each breaks a partition's
-    row.  The audit constants prove the bookkeeping: batch op counts
-    plus rewritten/carried partition counts read from the RELOADED
-    manifest (8 rewritten / 72 carried at sf0.1).
+    scratch with one full-outer join.  The audit constants are the batch
+    op counts plus the rewritten/carried partition counts of the
+    RELOADED manifest (8 rewritten / 72 carried at sf0.1).
 
     Concurrent readers: data files are immutable and a manifest is
-    written once per version, so a reader that resolved v1 keeps a
-    consistent table while v2 commits — snapshot isolation by
-    construction, no reader/writer lock.  Idempotent retry
-    (pytest-pinned): re-applying the same batch to v2 yields a v3
-    bit-identical to v2, because updates set batch-owned values and
-    deletes are no-ops on absent keys.
+    committed once per version by an atomic rename, so a reader that
+    resolved v1 keeps a consistent table while v2 commits.
 
-    100 TB shape: commit cost is |batch| + |touched partitions|
-    (time-localized batches touch the calendar tail, never the
-    history); the manifest is |partitions| rows — metadata; the
-    full-outer merge join shuffles only affected-partition rows on the
-    key, and the snapshot read is a static union of per-version scans
-    whose file pruning the manifest join drives.  Nothing rewrites,
-    rescans, or re-sorts the carried 99%+ of the table."""
+    100 TB shape: commit cost is |batch| + |touched partitions|; the
+    manifest is one entry per partition, read and written on the
+    driver; the full-outer merge join shuffles only affected-partition
+    rows on the key.  Nothing rewrites, rescans, or re-sorts the
+    carried 99%+ of the table."""
     base, batch = _merge_base_batch(spark, sf_dir)
-    # the batch feeds three jobs (merge write, affected derivation, the
+    # the batch feeds three jobs (affected collect, merge write, the
     # op-count audit); checkpoint it once — |batch| narrow rows, the
     # CDC working set a real commit holds as its input anyway
     batch = batch.localCheckpoint()
 
     store = _work_dir("merge_upsert")
-    base.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
-        f"{store}/data/v1"
-    )
-    man1 = base.select("p").distinct().withColumn(
-        "ver", F.lit(1).cast("int")
-    )
-    man1.write.mode("overwrite").parquet(f"{store}/manifest/v1")
+    _merge_create(store, base)
+    _merge_apply(spark, store, _merge_manifest(store, 1), batch, 2)
 
-    # ---- the MERGE commit: v1 + batch → data v2 + manifest v2 ----
-    man1_store = spark.read.schema(_MANIFEST_SCHEMA).parquet(
-        f"{store}/manifest/v1"
-    )
-    _merge_apply(spark, store, man1_store, [1], batch, 2)
-
-    # ---- snapshot read-back: everything below touches the RELOADED
-    # manifest + data store only ----
-    man2 = spark.read.schema(_MANIFEST_SCHEMA).parquet(
-        f"{store}/manifest/v2"
-    )
-    snap2 = _merge_read_snapshot(spark, store, man2, [1, 2])
-    rollup = snap2.groupBy("p").agg(
+    # ---- snapshot read-back: the RELOADED manifest + data store only ----
+    man2 = _merge_manifest(store, 2)
+    rollup = _merge_read_snapshot(spark, store, man2).groupBy("p").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         dsum("val").alias("sum_val"),
         F.min("k").cast("bigint").alias("min_k"),
         F.max("k").cast("bigint").alias("max_k"),
     )
-    ops = batch.agg(
+    audit = batch.agg(
         F.count(F.when(F.col("op") == "I", 1)).cast("bigint").alias("n_ins"),
         F.count(F.when(F.col("op") == "U", 1)).cast("bigint").alias("n_upd"),
         F.count(F.when(F.col("op") == "D", 1)).cast("bigint").alias("n_del"),
-    )
-    manstats = man2.agg(
-        F.count(F.when(F.col("ver") == 2, 1))
+    ).select(
+        "*",
+        F.lit(sum(v == 2 for v in man2.values()))
         .cast("bigint")
         .alias("parts_rewritten"),
-        F.count(F.when(F.col("ver") == 1, 1))
+        F.lit(sum(v == 1 for v in man2.values()))
         .cast("bigint")
         .alias("parts_carried"),
     )
-    audit = ops.crossJoin(F.broadcast(manstats))
     return rollup.crossJoin(F.broadcast(audit))
 
 
@@ -909,27 +851,18 @@ def _merge_batch_b(spark, sf_dir: str) -> DataFrame:
 def _build_merge_history(spark, sf_dir: str, tag: str):
     """Drive the three-commit chain (base → v1, batch A → v2, batch B
     → v3) into a fresh store under ``tag`` and return
-    ``(store, man1, man2, man3)`` — shared by sink_merge_history
-    (time travel) and sink_merge_vacuum (retention) so the two keys
-    certify the SAME committed lineage."""
+    ``(store, man1, man2, man3)``, the manifests reloaded from disk —
+    shared by sink_merge_history (time travel) and sink_merge_vacuum
+    (retention) so the two keys certify the SAME committed lineage."""
     base, batch_a = _merge_base_batch(spark, sf_dir)
     batch_a = batch_a.localCheckpoint()
     batch_b = _merge_batch_b(spark, sf_dir).localCheckpoint()
 
     store = _work_dir(tag)
-    base.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
-        f"{store}/data/v1"
-    )
-    base.select("p").distinct().withColumn(
-        "ver", F.lit(1).cast("int")
-    ).write.mode("overwrite").parquet(f"{store}/manifest/v1")
-
-    man1 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v1")
-    _merge_apply(spark, store, man1, [1], batch_a, 2)
-    man2 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v2")
-    _merge_apply(spark, store, man2, [1, 2], batch_b, 3)
-    man3 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v3")
-    return store, man1, man2, man3
+    _merge_create(store, base)
+    _merge_apply(spark, store, _merge_manifest(store, 1), batch_a, 2)
+    _merge_apply(spark, store, _merge_manifest(store, 2), batch_b, 3)
+    return (store, *(_merge_manifest(store, v) for v in (1, 2, 3)))
 
 
 @register(
@@ -983,40 +916,33 @@ def sink_merge_history(spark: SparkSession, sf_dir: str) -> DataFrame:
       pins v2 unchanged across the v3 commit).
 
     100 TB shape: identical to sink_merge_upsert per commit (cost ∝
-    |batch| + touched-partition rows; manifests are |partitions|-row
-    metadata); history adds ZERO write amplification (old versions are
+    |batch| + touched-partition rows; manifests are one entry per
+    partition); history adds ZERO write amplification (old versions are
     retained files, the Delta/Iceberg retention model) and time-travel
-    reads are ordinary DPP-pruned snapshot reads against an old
+    reads are ordinary statically pruned snapshot reads of an old
     manifest."""
-    store, man1, man2, man3 = _build_merge_history(
-        spark, sf_dir, "merge_history"
-    )
+    store, *mans = _build_merge_history(spark, sf_dir, "merge_history")
 
     # ---- time travel: certify each manifest version's table ----
-    outs = []
-    for ver, man, vers in (
-        (1, man1, [1]),
-        (2, man2, [1, 2]),
-        (3, man3, [1, 2, 3]),
-    ):
-        snap = _merge_read_snapshot(spark, store, man, vers)
-        outs.append(
-            snap.groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                dsum("val").alias("sum_val"),
-                F.min("k").cast("bigint").alias("min_k"),
-                F.max("k").cast("bigint").alias("max_k"),
-            )
-            .select(
-                F.lit(ver).cast("int").alias("ver"),
-                "p",
-                "n_rows",
-                "sum_val",
-                "min_k",
-                "max_k",
-            )
+    outs = [
+        _merge_read_snapshot(spark, store, man)
+        .groupBy("p")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            dsum("val").alias("sum_val"),
+            F.min("k").cast("bigint").alias("min_k"),
+            F.max("k").cast("bigint").alias("max_k"),
         )
+        .select(
+            F.lit(ver).cast("int").alias("ver"),
+            "p",
+            "n_rows",
+            "sum_val",
+            "min_k",
+            "max_k",
+        )
+        for ver, man in enumerate(mans, 1)
+    ]
     return outs[0].unionByName(outs[1]).unionByName(outs[2])
 
 
@@ -1086,57 +1012,40 @@ def sink_merge_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     STILL ON DISK after the vacuum (a fresh scan of data/v1) — both
     recomputed independently by the oracle from the batch definitions.
 
-    Driver-side file deletion + one ≤|partitions|-row collect: vacuum
-    IS a catalog/driver operation in every lakehouse implementation —
-    the deletable list is calendar-bounded metadata (the sort_global
-    literal class, disclosed beside the repo's three other metadata
-    collects), and no DATA rows ever reach the driver.
+    Driver-side file deletion over driver-side manifests: vacuum IS a
+    catalog/driver operation in every lakehouse implementation — the
+    deletable set is set arithmetic over calendar-bounded dicts, and no
+    DATA rows ever reach the driver.
 
-    100 TB shape: vacuum cost is |deletable files| filesystem deletes +
-    a |partitions|-row manifest anti-join — independent of table size;
-    the retained-snapshot reads are the ordinary DPP-pruned manifest
-    joins.  Retention is what bounds a CoW table's storage at 2-3× live
-    size instead of unbounded history."""
-    import os
-    import shutil
-
+    100 TB shape: vacuum cost is |deletable files| filesystem deletes —
+    independent of table size; the retained-snapshot reads are the
+    ordinary statically pruned snapshot reads.  Retention is what bounds
+    a CoW table's storage at 2-3× live size instead of unbounded
+    history."""
     store, man1, man2, man3 = _build_merge_history(
         spark, sf_dir, "merge_vacuum"
     )
 
     # deletable = v1 partitions referenced by NO retained manifest
-    referenced_v1 = (
-        man2.filter(F.col("ver") == 1)
-        .select("p")
-        .unionByName(man3.filter(F.col("ver") == 1).select("p"))
-        .distinct()
-    )
-    deletable = sorted(
-        r["p"]
-        for r in man1.select("p").join(referenced_v1, "p", "left_anti")
-        .collect()  # ≤ |partitions| rows: calendar-bounded metadata
-    )
+    kept = {p for man in (man2, man3) for p, v in man.items() if v == 1}
     deleted = 0
-    for p in deletable:
+    for p in sorted(man1.keys() - kept):
         d = f"{store}/data/v1/p={p}"
         if os.path.isdir(d):
             shutil.rmtree(d)
             deleted += 1
 
     # retained snapshots, read from the VACUUMED store
-    outs = []
-    for ver, man, vers in ((2, man2, [1, 2]), (3, man3, [1, 2, 3])):
-        snap = _merge_read_snapshot(spark, store, man, vers)
-        outs.append(
-            snap.groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                dsum("val").alias("sum_val"),
-            )
-            .select(
-                F.lit(ver).cast("int").alias("ver"), "p", "n_rows", "sum_val"
-            )
+    outs = [
+        _merge_read_snapshot(spark, store, man)
+        .groupBy("p")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            dsum("val").alias("sum_val"),
         )
+        .select(F.lit(ver).cast("int").alias("ver"), "p", "n_rows", "sum_val")
+        for ver, man in ((2, man2), (3, man3))
+    ]
     # audit from disk: deletions performed + v1 partitions surviving
     survivors = (
         spark.read.schema(_MERGE_SCHEMA)
@@ -1209,11 +1118,10 @@ def sink_changelog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale claim is WHICH data gets touched: two manifests that
     agree on a partition's version reference the SAME immutable data
     files, so that partition provably contains zero changes.  The diff
-    therefore (1) diffs the |partitions|-row manifests first (a
-    metadata full-outer join), (2) reads the pre- and post-snapshots
-    RESTRICTED to the version-changed partitions (the ordinary
-    DPP-pruned manifest-join reads — both scans prune to batch B's
-    calendar window), and (3) full-outer-joins pre/post on the key
+    therefore (1) diffs the two manifests on the driver (set arithmetic
+    over dicts), (2) reads the pre- and post-snapshots RESTRICTED to the
+    version-changed partitions (both scans prune statically to batch
+    B's calendar window), and (3) full-outer-joins pre/post on the key
     within that slice only.  A key's partition is a pure function of
     the key (its order month), so pre/post images of one key live in
     the same partition and the restricted join loses nothing — the
@@ -1232,68 +1140,52 @@ def sink_changelog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     are cents-exact; the CDC deltas are integral) — the fixed-scale
     discipline every float-bearing oracle key uses.
 
-    100 TB shape: CDF cost ∝ changed-partition rows + |manifest|
-    metadata — independent of table size (a CDC commit touches the
-    calendar tail, so the diff reads days, not decades of history).
-    This is the property that makes incremental consumers viable at
-    all: the alternative — diff two full snapshots — is a 2×-table
-    scan per sync.  Composes with sink_merge_history (any two manifest
-    versions diff the same way, v1→v3 included) and sink_merge_vacuum
-    (CDF needs only RETAINED manifests' files; vacuum keeps every
-    referenced version)."""
+    100 TB shape: CDF cost ∝ changed-partition rows — independent of
+    table size (a CDC commit touches the calendar tail, so the diff
+    reads days, not decades of history).  The alternative — diff two
+    full snapshots — is a 2×-table scan per sync."""
     store, _man1, man2, man3 = _build_merge_history(
         spark, sf_dir, "changelog_cdf"
     )
-    cdf, audit = _changelog(spark, store, man2, [1, 2], man3, [1, 2, 3])
-    return cdf.crossJoin(F.broadcast(audit))
+    cdf, changed = _changelog(spark, store, man2, man3)
+    n_parts = len(man2.keys() | man3.keys())
+    return cdf.select(
+        "*",
+        F.lit(len(changed)).cast("bigint").alias("parts_changed"),
+        F.lit(n_parts - len(changed)).cast("bigint").alias("parts_unchanged"),
+    )
 
 
-def _changelog(spark, store, man_pre, vers_pre, man_post, vers_post):
+def _changelog(spark, store, man_pre: dict, man_post: dict):
     """The manifest-pruned changelog between two snapshots — shared by
     the feed itself (:func:`sink_changelog_cdf`) and its consumer
     (:func:`rollup_cdf_maintain`) so producer and consumer can never
-    disagree on change semantics.  Returns ``(cdf, audit)``: the
-    (k, p, change_type, pre_val, post_val) feed and the 1-row
-    manifest-diff partition counts."""
-    # (1) manifest diff — |partitions|-row metadata; a partition is
-    # changed iff its (pre, post) versions differ (incl. appearing or
-    # disappearing).  Checkpointed: the changed set is broadcast to
-    # BOTH snapshot restrictions (a broadcast subtree re-executes its
-    # child per consuming job — CLAUDE.md)
-    mdiff = man_pre.select(
-        "p", F.col("ver").alias("ver_pre")
-    ).join(
-        man_post.select("p", F.col("ver").alias("ver_post")),
-        "p",
-        "full_outer",
-    )
-    changed_flag = (
-        F.col("ver_pre").isNull()
-        | F.col("ver_post").isNull()
-        | (F.col("ver_pre") != F.col("ver_post"))
-    )
-    changed = mdiff.filter(changed_flag).select("p").localCheckpoint()
+    disagree on change semantics.  Returns ``(cdf, changed)``: the
+    (k, p, change_type, pre_val, post_val) feed and the set of
+    partitions whose version differs (incl. appearing or
+    disappearing)."""
+    changed = {
+        p
+        for p in man_pre.keys() | man_post.keys()
+        if man_pre.get(p) != man_post.get(p)
+    }
 
-    # (2) snapshot reads restricted to changed partitions — the same
-    # DPP-pruned manifest-join read every snapshot consumer uses, just
-    # against a filtered manifest
-    pre = _merge_read_snapshot(
-        spark, store, man_pre.join(F.broadcast(changed), "p"), vers_pre
-    ).select(
+    def restricted(man):
+        return {p: v for p, v in man.items() if p in changed}
+
+    pre = _merge_read_snapshot(spark, store, restricted(man_pre)).select(
         F.col("k"),
         F.col("p"),
         F.col("val").cast("decimal(18,2)").alias("pre_val"),
     )
-    post = _merge_read_snapshot(
-        spark, store, man_post.join(F.broadcast(changed), "p"), vers_post
-    ).select(
+    post = _merge_read_snapshot(spark, store, restricted(man_post)).select(
         F.col("k"),
         F.col("p").alias("p_post"),
         F.col("val").cast("decimal(18,2)").alias("post_val"),
     )
 
-    # (3) the changelog: full-outer on the key within the changed
-    # slice; rows whose value is unchanged are NOT changes
+    # the changelog: full-outer on the key within the changed slice;
+    # rows whose value is unchanged are NOT changes
     cdf = (
         pre.join(post, "k", "full_outer")
         .filter(
@@ -1312,13 +1204,7 @@ def _changelog(spark, store, man_pre, vers_pre, man_post, vers_post):
             "post_val",
         )
     )
-    audit = mdiff.agg(
-        F.count(F.when(changed_flag, 1)).cast("bigint").alias("parts_changed"),
-        F.count(F.when(~changed_flag, 1))
-        .cast("bigint")
-        .alias("parts_unchanged"),
-    )
-    return cdf, audit
+    return cdf, changed
 
 
 # ---------------------------------------------------------------------------
@@ -1398,7 +1284,7 @@ def rollup_cdf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, _man1, man2, man3 = _build_merge_history(
         spark, sf_dir, "rollup_cdf"
     )
-    cdf, _audit = _changelog(spark, store, man2, [1, 2], man3, [1, 2, 3])
+    cdf, _changed = _changelog(spark, store, man2, man3)
     # two consumers (delta aggregate + feed-count audit): checkpoint the
     # feed once — |changed rows|, the working set a CDC consumer holds
     cdf = cdf.localCheckpoint()
@@ -1406,7 +1292,7 @@ def rollup_cdf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the materialized v2 state — decimal sum state, NOT double
     # (double state would drift from the from-scratch recompute)
     old = (
-        _merge_read_snapshot(spark, store, man2, [1, 2])
+        _merge_read_snapshot(spark, store, man2)
         .groupBy("p")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows_old"),

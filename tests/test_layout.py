@@ -119,9 +119,9 @@ def test_merge_upsert_retry_is_idempotent(spark, sf_dir):
     # the target) and deletes of absent keys do nothing
     from task_mapreduce_spark.operators.relational import _work_dir
     from task_mapreduce_spark.operators.scale import (
-        _MANIFEST_SCHEMA,
         _merge_apply,
         _merge_base_batch,
+        _merge_manifest,
         _merge_read_snapshot,
         sink_merge_upsert,
     )
@@ -130,12 +130,12 @@ def test_merge_upsert_retry_is_idempotent(spark, sf_dir):
     sink_merge_upsert(spark, sf_dir).collect()
     store = _work_dir("merge_upsert")
     _, batch = _merge_base_batch(spark, sf_dir)
-    man2 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v2")
-    _merge_apply(spark, store, man2, [1, 2], batch, 3)
+    man2 = _merge_manifest(store, 2)
+    _merge_apply(spark, store, man2, batch, 3)
 
-    man3 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v3")
-    snap2 = _merge_read_snapshot(spark, store, man2, [1, 2])
-    snap3 = _merge_read_snapshot(spark, store, man3, [1, 2, 3])
+    man3 = _merge_manifest(store, 3)
+    snap2 = _merge_read_snapshot(spark, store, man2)
+    snap3 = _merge_read_snapshot(spark, store, man3)
 
     rows2 = {(r["k"], r["p"]): r["val"] for r in snap2.collect()}
     rows3 = {(r["k"], r["p"]): r["val"] for r in snap3.collect()}
@@ -144,11 +144,11 @@ def test_merge_upsert_retry_is_idempotent(spark, sf_dir):
 
     # the retry rewrote exactly the batch's partitions (as v3) and
     # carried everything else at its prior version
-    v3_parts = {r["p"] for r in man3.filter(F.col("ver") == 3).collect()}
+    v3_parts = {p for p, v in man3.items() if v == 3}
     batch_parts = {r["p"] for r in batch.select("p").distinct().collect()}
     assert v3_parts == batch_parts
-    carried = {(r["p"], r["ver"]) for r in man3.filter(F.col("ver") != 3).collect()}
-    prior = {(r["p"], r["ver"]) for r in man2.collect() if r["p"] not in batch_parts}
+    carried = {(p, v) for p, v in man3.items() if v != 3}
+    prior = {(p, v) for p, v in man2.items() if p not in batch_parts}
     assert carried == prior
 
 
@@ -162,9 +162,9 @@ def test_merge_history_time_travel_and_concurrent_reader(spark, sf_dir):
     # some partition to data version 2 (carried across a generation).
     from task_mapreduce_spark.operators.relational import _work_dir
     from task_mapreduce_spark.operators.scale import (
-        _MANIFEST_SCHEMA,
         _merge_base_batch,
         _merge_batch_b,
+        _merge_manifest,
         _merge_read_snapshot,
         sink_merge_history,
     )
@@ -175,15 +175,15 @@ def test_merge_history_time_travel_and_concurrent_reader(spark, sf_dir):
     # the concurrent-reader guarantee)
     sink_merge_history(spark, sf_dir).collect()
     store = _work_dir("merge_history")
-    man2 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v2")
-    man3 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v3")
+    man2 = _merge_manifest(store, 2)
+    man3 = _merge_manifest(store, 3)
     snap2 = {
         (r["k"], r["p"]): r["val"]
-        for r in _merge_read_snapshot(spark, store, man2, [1, 2]).collect()
+        for r in _merge_read_snapshot(spark, store, man2).collect()
     }
     snap3 = {
         (r["k"], r["p"]): r["val"]
-        for r in _merge_read_snapshot(spark, store, man3, [1, 2, 3]).collect()
+        for r in _merge_read_snapshot(spark, store, man3).collect()
     }
     assert snap2, "empty v2 snapshot — fixture drift?"
 
@@ -191,10 +191,9 @@ def test_merge_history_time_travel_and_concurrent_reader(spark, sf_dir):
     # must carry at least one partition at data version 2 and at least
     # one still at version 1 (batch B's window is wider than A's but
     # neither covers the full calendar)
-    vers_by_part = {r["p"]: r["ver"] for r in man3.collect()}
-    assert 2 in set(vers_by_part.values())
-    assert 1 in set(vers_by_part.values())
-    assert 3 in set(vers_by_part.values())
+    assert 2 in set(man3.values())
+    assert 1 in set(man3.values())
+    assert 3 in set(man3.values())
 
     # (2) resurrection: keys A deleted (in base, h2%2==1, od>=cutoff A)
     # that B re-inserted (h3%3==2) are ABSENT in v2, present in v3
@@ -244,8 +243,8 @@ def test_merge_vacuum_deletes_only_unreferenced_v1_partitions(spark, sf_dir):
 
     from task_mapreduce_spark.operators.relational import _work_dir
     from task_mapreduce_spark.operators.scale import (
-        _MANIFEST_SCHEMA,
         _merge_base_batch,
+        _merge_manifest,
         _merge_read_snapshot,
         sink_merge_vacuum,
     )
@@ -266,17 +265,16 @@ def test_merge_vacuum_deletes_only_unreferenced_v1_partitions(spark, sf_dir):
     }
     assert not (a_parts & on_disk), "superseded v1 partition survived vacuum"
 
-    man2 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v2")
-    ref_v1 = {r["p"] for r in man2.filter(F.col("ver") == 1).collect()}
+    man2 = _merge_manifest(store, 2)
+    ref_v1 = {p for p, v in man2.items() if v == 1}
     assert ref_v1 <= on_disk, "vacuum deleted a partition v2 references"
 
     # v2 still serves end-to-end from the vacuumed store
-    snap2 = _merge_read_snapshot(spark, store, man2, [1, 2])
+    snap2 = _merge_read_snapshot(spark, store, man2)
     assert snap2.count() > 0
     # the expired v1 snapshot is genuinely incomplete: its manifest
     # references partitions whose files are gone
-    man1 = spark.read.schema(_MANIFEST_SCHEMA).parquet(f"{store}/manifest/v1")
-    v1_all = {r["p"] for r in man1.collect()}
+    v1_all = set(_merge_manifest(store, 1))
     assert v1_all - on_disk == a_parts
 
 
@@ -429,45 +427,25 @@ def test_rollup_cdf_maintain_is_order_independent(spark, sf_dir):
         assert gs == float(s), f"{p}: maintained sum {gs} != replay {s}"
 
 
-def test_merge_snapshot_stale_version_list_raises(spark, sf_dir):
-    # round-13 optimization regression pin: the coverage assert moved
-    # from a driver-side count() (one blocking metadata job per
-    # snapshot read) to raise_error POISON ROWS unioned into the frame
-    # — a stale static version list must still fail LOUDLY at the
-    # first action, including under column pruning (every poison
-    # column raises, so a consumer projecting any subset trips it).
+def test_merge_snapshot_missing_version_raises(spark, sf_dir):
+    # a manifest that maps a partition to a data version with no
+    # directory (vacuumed, or never written) must fail LOUDLY at read
+    # time: a silently missing partition would read back as an empty one
     import pytest
+    from pyspark.errors import AnalysisException
 
     from task_mapreduce_spark.operators.relational import _work_dir
     from task_mapreduce_spark.operators.scale import (
-        _MANIFEST_SCHEMA,
+        _merge_manifest,
         _merge_read_snapshot,
         sink_merge_upsert,
     )
 
     sink_merge_upsert(spark, sf_dir).collect()  # builds the v1/v2 store
     store = _work_dir("merge_upsert")
-    man2 = spark.read.schema(_MANIFEST_SCHEMA).parquet(
-        f"{store}/manifest/v2"
-    )
-    # man2 references versions {1, 2}; claim only {1} covers it
-    stale = _merge_read_snapshot(spark, store, man2, [1])
-    with pytest.raises(Exception, match="stale version list"):
-        stale.collect()
-    with pytest.raises(Exception, match="stale version list"):
-        # pruned-column consumer (only p survives the projection)
-        stale.groupBy("p").count().collect()
-    with pytest.raises(Exception, match="stale version list"):
-        # FULL-projection pruning (round-13 advice): a bare count()
-        # references no columns, so the projected raise_error columns
-        # alone are pruned away — the alarm must also live in a Filter
-        # predicate on the poison branch, which no pruning removes
-        stale.count()
-    with pytest.raises(Exception, match="stale version list"):
-        # pushed-down consumer filter: the predicate lands on the
-        # alarm-projected column (non-foldable), so the branch cannot
-        # be statically pruned to an empty relation
-        stale.filter(F.col("p") == "never").collect()
-    # and the covered read still serves values with no poison rows
-    ok = _merge_read_snapshot(spark, store, man2, [1, 2])
-    assert ok.count() > 0
+    man2 = _merge_manifest(store, 2)
+    p = next(p for p, v in man2.items() if v == 2)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        _merge_read_snapshot(spark, store, {**man2, p: 99}).collect()
+    # and the committed manifest still serves values
+    assert _merge_read_snapshot(spark, store, man2).count() > 0

@@ -214,13 +214,11 @@ def test_no_cartesian_anywhere(all_dfs):
         "events_attribution_incremental",  # 1-row pivot-bounds crossJoin
         "agg_quantile_merge",   # 1-row audit stats + 5-row quantile-read
         #                         frame against the ≤|bins|-row histogram
-        "sink_merge_upsert",    # two 1-row audit crossJoins (batch op
-        #                         counts × reloaded-manifest counts)
+        "sink_merge_upsert",    # 1-row audit crossJoin (batch op counts
+        #                         + reloaded-manifest counts)
         "sink_merge_vacuum",    # 1-row from-disk audit crossJoin
         #                         (deletions performed × surviving v1
         #                         partition count)
-        "sink_changelog_cdf",   # 1-row manifest-diff audit crossJoin
-        #                         (changed/unchanged partition counts)
         "rollup_cdf_maintain",  # 1-row feed-consumption-count crossJoin
         "profile_drift_psi",    # 1-row ref-stats / category-count
         #                         crossJoins (metadata broadcasts)
@@ -642,31 +640,13 @@ _BROADCAST_HINT_BUDGET = {
                                " + probe supers + |q|·S qsup + probes"
                                " + in-plan (g, np) params (two-level probe,"
                                " round 13 — measured tree count)"),
-    # manifest partition-selection joins (|partitions| rows = calendar-
-    # bounded metadata) ×2 snapshot versions + the two 1-row audit frames
-    "sink_merge_upsert": (4, "manifest prune joins ×2 versions + 1-row audits"),
-    # time-travel chain: the returned frame unions THREE snapshot reads
-    # whose manifest prune joins broadcast 1+2+3 per-version selections
-    "sink_merge_history": (6, "manifest prune joins: v1 + v2×2 + v3×3"),
-    # retained snapshots v2 (2 versions) + v3 (3 versions) + the 1-row
-    # from-disk audit broadcast
-    "sink_merge_vacuum": (6, "manifest prune joins v2×2 + v3×3 + 1-row audit"),
-    # manifest prune joins (pre ×2 + post ×3 versions) + the checkpointed
-    # changed-partition broadcast EMBEDDED once per version selection
-    # (each per-version `sel` wraps the changed-filtered manifest — the
-    # tree-count rule) + the 1-row manifest-diff audit: 5 + 5 + 1,
-    # plus 2 after the round-13 inline coverage guard: each snapshot
-    # read's POISON branch filters the same changed-pruned manifest, so
-    # the |partitions|-row changed-set hint appears once more per read
-    # (pre + post) — bounded metadata, same subtree
-    "sink_changelog_cdf": (13, "manifest prunes ×5 + changed-set subtree"
-                               " ×5 + 1-row audit + coverage-poison"
-                               " manifest ×2 (measured tree count)"),
-    # the checkpointed feed truncates the changelog subtree's hints out
-    # of the analyzed tree: v2-materialization prune joins ×2 + the
-    # 1-row feed-count audit
-    "rollup_cdf_maintain": (3, "v2 rollup manifest prunes ×2 + 1-row"
-                               " feed audit (feed subtree checkpointed)"),
+    # merge family: snapshot reads prune with literal partition filters
+    # from the driver-side manifest, so only the 1-row audit frames are
+    # hinted; sink_merge_history and sink_changelog_cdf hint nothing, so
+    # any hint there fails the audit
+    "sink_merge_upsert": (1, "1-row batch-op-count audit"),
+    "sink_merge_vacuum": (1, "1-row from-disk audit"),
+    "rollup_cdf_maintain": (1, "1-row feed-count audit"),
     # 1-row reference stats broadcast to binning + terms (tree count 2)
     # + the 10-row bin frame + the 1-row category-count aggregate
     "profile_drift_psi": (4, "1-row ref stats ×2 consumers + 10-row bin"
@@ -906,29 +886,40 @@ def test_two_level_assign_engages_on_knob_path(spark, sf_dir):
     )
 
 
-def test_sink_merge_upsert_snapshot_read_is_partition_pruned(spark, sf_dir):
-    # the CoW claim: a snapshot read resolves the manifest and scans
-    # only the partitions each data version owns — the manifest join
-    # must drive dynamic partition pruning on the data scans, or every
-    # reader re-reads superseded partition copies
-    plan = plan_of(spark, sf_dir, "sink_merge_upsert", mode="formatted")
-    assert "dynamicpruning" in plan.lower(), (
-        "snapshot read lost its dynamic-pruning subquery — carried "
-        "partitions are being scanned from every data version"
+def _assert_static_p_pruning(plan: str, key: str, n_scans: int) -> None:
+    """Every scan of a merge store's data versions (``.../data/v<N>``)
+    in the formatted ``plan`` carries a literal ``p IN (...)`` partition
+    filter, and there are at least ``n_scans`` of them."""
+    import re
+
+    filters = re.findall(
+        r"Location: \w+ \[[^\]]*/data/v\d+\]\nPartitionFilters: \[([^\n]*)\]",
+        plan,
     )
+    assert len(filters) >= n_scans, f"{key}: {len(filters)} data-version scans"
+    for f in filters:
+        assert re.search(r"\bp#\d+ (IN|INSET) ", f), (
+            f"{key}: a data-version scan lost its static p IN (...) partition"
+            f" filter — it reads every partition of that version: [{f}]"
+        )
+
+
+def test_sink_merge_upsert_snapshot_read_is_partition_pruned(spark, sf_dir):
+    # the CoW claim: a snapshot read resolves the manifest on the driver
+    # and scans only the partitions each data version owns — each data
+    # version's scan carries a literal p IN (...) partition filter, or
+    # every reader re-reads superseded partition copies
+    plan = plan_of(spark, sf_dir, "sink_merge_upsert", mode="formatted")
+    _assert_static_p_pruning(plan, "sink_merge_upsert", 2)
 
 
 def test_sink_changelog_cdf_is_partition_pruned(spark, sf_dir):
     # the CDF claim: pre/post snapshot reads are restricted to the
-    # version-changed partitions and the data scans prune through the
-    # manifest join — lose the pruning subquery and the diff re-reads
-    # the whole table from both snapshots (the 2×-table-scan cost the
-    # key exists to avoid)
+    # version-changed partitions — lose the static partition filters and
+    # the diff re-reads the whole table from both snapshots (the
+    # 2×-table-scan cost the key exists to avoid)
     plan = plan_of(spark, sf_dir, "sink_changelog_cdf", mode="formatted")
-    assert "dynamicpruning" in plan.lower(), (
-        "changelog snapshot reads lost their dynamic-pruning subquery — "
-        "the diff is scanning unchanged partitions"
-    )
+    _assert_static_p_pruning(plan, "sink_changelog_cdf", 3)
 
 
 def test_sim_index_persist_store_is_partition_pruned(spark, sf_dir):
@@ -1001,7 +992,9 @@ def _jobs_in_group(spark, group: str, action) -> int:
 # shared stage fails: inside the min-propagation kernel it costs a job
 # every round (a per-round count() took graph_bfs to 17), and inside a
 # PQ stage (encode, Lloyd round, ADC serve, rerank) it costs a job in
-# every ANN key that runs the stage, more in the scoreboards.
+# every ANN key that runs the stage, more in the scoreboards; inside
+# the merge commit path it costs jobs on every commit (a stray batch
+# count() in _merge_apply took sink_merge_history to 27).
 _BUILD_JOB_CEILING = {
     "graph_bfs": (11, 2),
     "dedup_cluster_cc": (16, 2),
@@ -1012,6 +1005,11 @@ _BUILD_JOB_CEILING = {
     "sim_search_ivfpq": (45, 2),
     "sim_eval_recall_multi": (23, 2),
     "sim_eval_recall_deploy": (57, 2),
+    "sink_merge_upsert": (13, 2),
+    "sink_merge_history": (23, 2),
+    "sink_merge_vacuum": (23, 2),
+    "sink_changelog_cdf": (21, 2),
+    "rollup_cdf_maintain": (25, 2),
 }
 
 
