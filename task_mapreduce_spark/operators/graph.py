@@ -370,14 +370,18 @@ def bfs_distances(
     round reaches no new node; the rows are the same either way."""
     from task_mapreduce_spark.operators.llm_extras import min_propagate
 
-    edges = edges.localCheckpoint()
     start = edges.sparkSession.range(1).select(
         F.lit(source).cast("long").alias("id"), F.lit(0).alias("value")
     )
-    first = edges.filter(F.col("src") == source).select(
-        F.col("dst").alias("id"), F.lit(1).alias("value")
+    dist, rounds, _ = min_propagate(
+        start,
+        edges,
+        lambda e: e.filter(F.col("src") == source).select(
+            F.col("dst").alias("id"), F.lit(1).alias("value")
+        ),
+        max_rounds=hops,
+        step=1,
     )
-    dist, rounds, _ = min_propagate(start, edges, first, max_rounds=hops, step=1)
     return dist.select(F.col("id").alias("node"), F.col("value").alias("dist")), rounds
 
 

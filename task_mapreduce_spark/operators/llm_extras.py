@@ -10,6 +10,8 @@ row path except the explicitly-Arrow multimodal decode.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 
@@ -541,26 +543,29 @@ def sim_join_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Row budget under which a round broadcasts its (id, value) join side
 # (≈ 4 MB as a hashed relation) instead of shuffling it and the edge
-# list; the count is exact, from the last round's Observation.
+# list, and under which a round's whole input (state plus at most one
+# push row per edge) runs in one partition; the counts are exact, from
+# Observations on the edge checkpoint and on the last round.
 _PROPAGATE_BCAST_ROWS = 250_000
 
 
 def min_propagate(
     state: DataFrame,
     edges: DataFrame,
-    push: DataFrame,
+    push: Callable[[DataFrame], DataFrame],
     *,
     max_rounds: int,
     step: int = 0,
     jump_from: int | None = None,
 ) -> tuple[DataFrame, int, int]:
-    """Min-fold fixpoint of ``state`` (id, value) over the static,
-    caller-checkpointed ``edges`` (src, dst) — the kernel behind
-    :func:`_min_label_cc` and ``graph.bfs_distances``, each round a map
-    over the edges, a shuffle and a min-reduce.  ``push`` holds the
-    round-0 messages (id, value), which callers derive without a join;
-    ``step`` is added as a value crosses an edge.  Returns (state,
-    rounds run, rows changed in the last round: 0 iff converged).
+    """Min-fold fixpoint of ``state`` (id, value) over the static
+    ``edges`` (src, dst) — the kernel behind :func:`_min_label_cc` and
+    ``graph.bfs_distances``, each round a map over the edges, a shuffle
+    and a min-reduce.  ``edges`` is checkpointed once here, its row count
+    observed on that checkpoint; ``push`` builds the round-0 messages
+    (id, value) from the checkpointed edges without a join.  ``step`` is
+    added as a value crosses an edge.  Returns (state, rounds run, rows
+    changed in the last round: 0 iff converged).
 
     A round is ``state ∪ push → groupBy(id).agg(min(value), max(old))``
     and ONE eager ``localCheckpoint``.  State rows carry their value as
@@ -570,43 +575,58 @@ def min_propagate(
     the round also pointer-jumps value ← value(value) by a self-join of
     its own aggregate in the same checkpoint — sound only when a value
     names a node of the same class, as CC labels do; O(log D) rounds on
-    a D-hop chain.  The changed count rides an ``Observation`` on the
-    checkpoint and is read only after it returns (a failed action can
-    leave partial metrics).  The loop stops at 0 changed rows or after
-    ``max_rounds``; the caller decides if the cap is an error.
+    a D-hop chain.  The changed and row counts ride an ``Observation`` on
+    the checkpoint and are read only after it returns (a failed action
+    can leave partial metrics).  The loop stops at 0 changed rows or
+    after ``max_rounds``; the caller decides if the cap is an error.
 
     A checkpoint keeps no hash layout under AQE (graph.py module
     docstring), so a shuffled join re-shuffles the edge list every
     round: rounds broadcast the frontier, and the hop side, while the
     last round's exact row count is within ``_PROPAGATE_BCAST_ROWS``.
+    A round whose input is provably within that budget — the last
+    round's row count plus the edge count, as a push row crosses one
+    edge — coalesces ``state ∪ push`` to one partition, so the aggregate
+    plans no Exchange and AQE runs no shuffle-map job.  Round 0 stays
+    shuffled: its state's row count is never observed.
 
     Precondition: a reached endpoint that is not an ``id`` of ``state``
     becomes a new row — what BFS wants, and why CC needs every edge
     endpoint to be a node.  No job checks it."""
+    obs = Observation()
+    edges = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    n_edges = obs.get["n"]
+    push = push(edges)
     old_type = state.schema["value"].dataType
     state = state.select("id", "value")
-    changed = rows = 0
+    changed, rows = 0, None
     for it in range(max_rounds):
-        cur = (
-            state.select("id", "value", F.col("value").alias("old"))
-            .unionByName(
-                push.select("id", "value", F.lit(None).cast(old_type).alias("old"))
-            )
-            .groupBy("id")
-            .agg(F.min("value").alias("value"), F.max("old").alias("old"))
+        both = state.select("id", "value", F.col("value").alias("old")).unionByName(
+            push.select("id", "value", F.lit(None).cast(old_type).alias("old"))
+        )
+        if rows is not None and rows + n_edges <= _PROPAGATE_BCAST_ROWS:
+            both = both.coalesce(1)
+        cur = both.groupBy("id").agg(
+            F.min("value").alias("value"), F.max("old").alias("old")
         )
         if jump_from is not None and it >= jump_from:
-            # Both sides must plan the identical aggregate, or Spark
-            # computes the round twice instead of reusing its exchange:
-            # ids are never NULL, and filtering on it here matches the
-            # isnotnull(j_id) Spark infers for the hop side; least(value,
-            # old) == value, but reading ``old`` stops column pruning
-            # from dropping max(old) on the hop side only
+            # In a shuffled round both sides must plan the identical
+            # aggregate, or Spark computes the round twice instead of
+            # reusing its exchange: ids are never NULL, and filtering on
+            # it here matches the isnotnull(j_id) Spark infers for the
+            # hop side; least(value, old) == value, but reading ``old``
+            # stops column pruning from dropping max(old) on the hop
+            # side only.  A one-partition round has no exchange to
+            # reuse, so its hop side recomputes the aggregate; that
+            # still beats the shuffle job it saves (dedup_cluster_cc
+            # jump rounds, 4 cores, median of 10: 0.22/0.21 s wall
+            # against 0.29/0.27 s shuffled at sf0.01, 0.22/0.19 against
+            # 0.24/0.24 s at sf0.1)
             cur = cur.filter(F.col("id").isNotNull())
             hop = cur.select(
                 F.col("id").alias("j_id"), F.least("value", "old").alias("j_value")
             )
-            if rows <= _PROPAGATE_BCAST_ROWS:
+            if rows is not None and rows <= _PROPAGATE_BCAST_ROWS:
                 hop = F.broadcast(hop)
             cur = cur.join(hop, F.col("value") == F.col("j_id"), "left").select(
                 "id",
@@ -644,8 +664,10 @@ _CC_MAX_ITER = 20
 # Round from which CC rounds pointer-jump (label ← label-of-label): a
 # D-hop chain converges in _CC_PJ_FROM + O(log2 D) rounds instead of D.
 # The fixpoint does not depend on the schedule; 2 saved whole rounds on
-# the fixture graphs, and 0 or 1 cost more jobs (measured when the jump
-# still took its own checkpoint).
+# the fixture graphs.  Re-measured on one-partition rounds (dedup_cluster_cc
+# / dedup_cluster_incremental jobs): 1 gives 16/35 against 2's 18/36 at
+# sf0.01 but 19/44 against 18/42 at sf0.1, and 0 gives 17/37 and 20/46,
+# so 2 stays.
 _CC_PJ_FROM = 2
 
 
@@ -660,18 +682,17 @@ def _min_label_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     Incremental use needs no seed parameter: a prior labeling is folded
     in by CONTRACTING the new edges through it and running this on the
     label-level graph, whose node ids are the prior labels themselves.
-    The symmetrized edge list is checkpointed once; round 0 pushes each
-    edge as is (identity labels).  Raises if ``_CC_MAX_ITER`` rounds
-    don't converge: a silently-split component is worse than a failure."""
-    sym = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint()
+    The kernel checkpoints the symmetrized edge list once; round 0
+    pushes each edge as is (identity labels).  Raises if
+    ``_CC_MAX_ITER`` rounds don't converge: a silently-split component
+    is worse than a failure."""
+    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
     labels, _, changed = min_propagate(
         nodes.select(F.col("doc_id").alias("id"), F.col("doc_id").alias("value")),
         sym,
-        sym.select(F.col("dst").alias("id"), F.col("src").alias("value")),
+        lambda e: e.select(F.col("dst").alias("id"), F.col("src").alias("value")),
         max_rounds=_CC_MAX_ITER,
         jump_from=_CC_PJ_FROM,
     )

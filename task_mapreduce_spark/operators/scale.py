@@ -600,11 +600,13 @@ def _merge_commit(store: str, ver: int, man: dict[str, int]) -> None:
 
 def _merge_read_snapshot(spark, store: str, man: dict[str, int]) -> DataFrame:
     """Read the snapshot manifest ``man`` describes: one declared-schema
-    scan of each data version it references, restricted by a literal
-    ``p IN (...)`` to the partitions it maps to that version (static
-    partition pruning), unioned.  A superseded partition's stale copy is
-    never read, and a version whose directory is missing (vacuumed or
-    never written) fails at read time with PATH_NOT_FOUND."""
+    scan of each data version it references, over exactly the
+    ``data/v{v}/p=…`` directories it maps to that version (``basePath``
+    keeps ``p`` a column), unioned.  A superseded partition's stale copy
+    is never read, and a partition directory that is missing (vacuumed,
+    or its version never written) fails at read time with
+    PATH_NOT_FOUND: the commit maps only partitions that wrote a
+    directory (:func:`_merge_written`), so none may read back empty."""
     by_ver: dict[int, list[str]] = {}
     for p, v in sorted(man.items()):
         by_ver.setdefault(v, []).append(p)
@@ -612,22 +614,30 @@ def _merge_read_snapshot(spark, store: str, man: dict[str, int]) -> DataFrame:
     # empty table; the optimizer drops this seed from non-empty unions
     out = spark.createDataFrame([], _MERGE_SCHEMA)
     for v, parts in sorted(by_ver.items()):
+        root = f"{store}/data/v{v}"
         out = out.unionByName(
             spark.read.schema(_MERGE_SCHEMA)
-            .parquet(f"{store}/data/v{v}")
-            .filter(F.col("p").isin(parts))
+            .option("basePath", root)
+            .parquet(*(f"{root}/p={p}" for p in parts))
         )
     return out
 
 
+def _merge_written(store: str, ver: int) -> list[str]:
+    """The partitions data version ``ver`` wrote, listed on the driver.
+    A partition with no rows writes no directory, and a partition value
+    (an order month, ``yyyy-MM``) is its directory name unescaped."""
+    names = os.listdir(f"{store}/data/v{ver}")
+    return sorted(d[len("p="):] for d in names if d.startswith("p="))
+
+
 def _merge_create(store: str, base: DataFrame) -> None:
     """Commit version 1: ``base`` partitioned by ``p`` under ``data/v1``,
-    every partition it holds mapped to version 1."""
+    every partition it wrote mapped to version 1."""
     base.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
         f"{store}/data/v1"
     )
-    parts = base.select("p").distinct().collect()  # calendar-bounded
-    _merge_commit(store, 1, {r["p"]: 1 for r in parts})
+    _merge_commit(store, 1, dict.fromkeys(_merge_written(store, 1), 1))
 
 
 def _merge_apply(
@@ -645,10 +655,10 @@ def _merge_apply(
     Copy-on-write at PARTITION granularity: the batch's distinct
     partitions are collected (calendar-bounded) and only they are
     re-merged and rewritten under ``data/v{dst}``; the new manifest
-    carries every other partition by reference.  The affected set comes
-    from the batch, never from listing the written directory: a
-    partition whose rows are all deleted writes no directory, yet must
-    still move to ``dst`` (where it reads back empty)."""
+    carries every other partition by reference and maps the partitions
+    that wrote a directory to ``dst``.  An affected partition whose
+    rows were all deleted wrote none and leaves the manifest: it has no
+    rows."""
     affected = {r["p"] for r in batch.select("p").distinct().collect()}
     tgt = _merge_read_snapshot(
         spark, store, {p: src[p] for p in affected if p in src}
@@ -668,7 +678,9 @@ def _merge_apply(
     merged.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
         f"{store}/data/v{dst}"
     )
-    _merge_commit(store, dst, {**src, **dict.fromkeys(affected, dst)})
+    man = {p: v for p, v in src.items() if p not in affected}
+    man.update(dict.fromkeys(_merge_written(store, dst), dst))
+    _merge_commit(store, dst, man)
 
 
 def _merge_base_batch(spark, sf_dir: str):
@@ -761,7 +773,12 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max key — against an oracle that recomputes the MERGE from
     scratch with one full-outer join.  The audit constants are the batch
     op counts plus the rewritten/carried partition counts of the
-    RELOADED manifest (8 rewritten / 72 carried at sf0.1).
+    RELOADED manifests (8 rewritten / 72 carried at sf0.1): v2 rewrote a
+    partition it maps to v2 or dropped from v1 (the commit left it
+    without rows), and carries one it still maps to v1.  The oracle
+    counts the batch's partitions instead; the two agree because batch
+    A deletes only base keys, so a batch partition v1 lacks keeps its
+    inserted rows.
 
     Concurrent readers: data files are immutable and a manifest is
     committed once per version by an atomic rename, so a reader that
@@ -783,7 +800,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     _merge_apply(spark, store, _merge_manifest(store, 1), batch, 2)
 
     # ---- snapshot read-back: the RELOADED manifest + data store only ----
-    man2 = _merge_manifest(store, 2)
+    man1, man2 = _merge_manifest(store, 1), _merge_manifest(store, 2)
     rollup = _merge_read_snapshot(spark, store, man2).groupBy("p").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         dsum("val").alias("sum_val"),
@@ -796,7 +813,8 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("op") == "D", 1)).cast("bigint").alias("n_del"),
     ).select(
         "*",
-        F.lit(sum(v == 2 for v in man2.values()))
+        # rewritten: mapped to v2, or emptied (in v1, gone from v2)
+        F.lit(sum(v == 2 for v in man2.values()) + len(man1.keys() - man2.keys()))
         .cast("bigint")
         .alias("parts_rewritten"),
         F.lit(sum(v == 1 for v in man2.values()))
@@ -1094,13 +1112,16 @@ def sink_merge_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE a.k IS NULL OR b.k IS NULL
          OR CAST(a.val AS DECIMAL(18,2)) <> CAST(b.val AS DECIMAL(18,2))
     ),
+    changed AS (
+      SELECT DISTINCT p FROM batch_b
+      WHERE p IN (SELECT p FROM m2 UNION SELECT p FROM m3)
+    ),
     audit AS (
-      SELECT (SELECT CAST(COUNT(DISTINCT p) AS BIGINT) FROM batch_b)
-               AS parts_changed,
+      SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM changed) AS parts_changed,
              (SELECT CAST(COUNT(*) AS BIGINT) FROM (
-                SELECT DISTINCT p FROM base
-                UNION SELECT DISTINCT p FROM batch_a
-                EXCEPT SELECT DISTINCT p FROM batch_b))
+                SELECT p FROM base UNION SELECT p FROM m2
+                UNION SELECT p FROM m3
+                EXCEPT SELECT p FROM changed))
                AS parts_unchanged
     )
     SELECT c.k, c.p, c.change_type, c.pre_val, c.post_val,
@@ -1130,11 +1151,15 @@ def sink_changelog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     an identical value emits no CDF row (value diff, not file diff).
 
     The audit columns certify the pruning derivation itself:
-    parts_changed/parts_unchanged are the manifest-diff counts, which
-    the oracle recomputes independently from the batch definitions —
-    a diff that scanned a carried partition wouldn't break the
-    changelog (same files ⇒ empty diff) but WOULD break these counts
-    if it mis-derived the changed set.
+    parts_changed/parts_unchanged are the manifest-diff counts (a
+    partition any of the chain's manifests held, and v2 → v3 kept, is
+    unchanged), which the oracle recomputes independently from the
+    batch and snapshot definitions — a diff that scanned a carried
+    partition wouldn't break the changelog (same files ⇒ empty diff)
+    but WOULD break these counts if it mis-derived the changed set.  A
+    manifest holds exactly the partitions with rows, so "changed" means
+    touched by batch B and holding rows in v2 or v3: a batch-B partition
+    empty on both sides (deletes of absent keys only) changed nothing.
 
     Values are certified as DECIMAL(18,2) on both sides (order prices
     are cents-exact; the CDC deltas are integral) — the fixed-scale
@@ -1144,11 +1169,11 @@ def sink_changelog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size (a CDC commit touches the calendar tail, so the diff
     reads days, not decades of history).  The alternative — diff two
     full snapshots — is a 2×-table scan per sync."""
-    store, _man1, man2, man3 = _build_merge_history(
+    store, man1, man2, man3 = _build_merge_history(
         spark, sf_dir, "changelog_cdf"
     )
     cdf, changed = _changelog(spark, store, man2, man3)
-    n_parts = len(man2.keys() | man3.keys())
+    n_parts = len(man1.keys() | man2.keys() | man3.keys())
     return cdf.select(
         "*",
         F.lit(len(changed)).cast("bigint").alias("parts_changed"),

@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import dsum, sql_dsum
 from task_mapreduce_spark.registry import register
-from task_mapreduce_spark.tables import load, path_of
+from task_mapreduce_spark.tables import events_schema, load, path_of
 
 _memory_sink_counter = itertools.count()
 
@@ -63,24 +63,11 @@ def stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     that determinism is what lets even the streaming entry path be
     value-checked against a plain SQL filter.
     """
-    # ``ts`` is parquet TIMESTAMP(NANOS); the stream schema must match
-    # what THIS Spark's parquet reader produces (native TIMESTAMP_NTZ on
-    # newer readers, epoch-nanos long under the legacy conf on older
-    # ones).  Probe with a batch read of the same footer — metadata
-    # only, no data scan.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = spark.read.parquet(path_of(sf_dir, "events")).schema["ts"].dataType
-    nanos_as_long = isinstance(ts_type, T.LongType)
-    raw = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    # The stream schema must match what THIS Spark's parquet reader
+    # produces for ``ts``; the footer decides it (tables.events_schema),
+    # and only a TIMESTAMP(NANOS) footer costs a batch probe.
+    raw = events_schema(spark, path_of(sf_dir, "events"))
+    nanos_as_long = isinstance(raw["ts"].dataType, T.LongType)
     # FileStreamSource needs a DIRECTORY.  Two layouts exist: the
     # driver's single-FILE table ({sf}/events.parquet is a file — glob
     # down to it from the sf dir) and the Spark-written directory table

@@ -17,6 +17,7 @@ parquet scan and express everything else declaratively on top.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow as pa
@@ -146,9 +147,8 @@ def _footer_file(path: str) -> str | None:
     return None
 
 
-def _footer_schema(name: str, path: str) -> T.StructType:
+def _footer_schema(name: str, parquet: pq.ParquetSchema) -> T.StructType:
     """Spark's types for one parquet footer, read on the driver."""
-    parquet = pq.read_metadata(path).schema
     arrow = parquet.to_arrow_schema()
     # pyarrow reads legacy INT96 timestamps as tz-less nanos, which would
     # map to TIMESTAMP_NTZ; Spark reads them as a session-zone TIMESTAMP.
@@ -165,9 +165,53 @@ def _footer_schema(name: str, path: str) -> T.StructType:
         raise ValueError(f"schema drift for table {name!r}: {e}") from e
 
 
-def _check(name: str, schema: T.StructType) -> None:
+def _is_nanos(parquet: pq.ParquetSchema, column: str) -> bool:
+    """Whether ``column`` is stored as parquet TIMESTAMP(NANOS)."""
+    for i in range(len(parquet)):
+        col = parquet.column(i)
+        if col.path == column:
+            unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+            return unit == "nanoseconds"
+    return False
+
+
+def events_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The declared schema a scan of the ``events`` table at ``path``
+    reads with, ``ts`` typed as its parquet footer decides (read once,
+    on the driver): a MICROS or MILLIS ``ts`` reads as TIMESTAMP_NTZ,
+    and a plain INT64 ``ts`` (legacy epoch nanos) as a long.  The
+    footer's other columns must match ``SCHEMAS["events"]`` as for any
+    table (:func:`_check`).
+
+    Only a TIMESTAMP(NANOS) footer, or no local footer to read, asks the
+    reader (a one-task inference job), because how it reads NANOS
+    depends on the Spark build: newer readers surface it natively as
+    TIMESTAMP_NTZ (truncated to micros), older ones only read it with
+    the legacy nanos-as-long conf.  The conf is session-global and
+    deliberately never unset — scans execute lazily, and on readers
+    that honor it the conf must still hold at execution time."""
+    footer = _footer_file(path)
+    parquet = pq.read_metadata(footer).schema if footer is not None else None
+    if parquet is not None and not _is_nanos(parquet, "ts"):
+        got = _footer_schema("events", parquet)
+    else:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        got = spark.read.parquet(path).schema
+    want = SCHEMAS["events"]
+    if "ts" in got.fieldNames() and isinstance(got["ts"].dataType, T.LongType):
+        want = T.StructType(
+            [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in want]
+        )
+    _check("events", got, want)
+    return want
+
+
+def _check(
+    name: str, schema: T.StructType, declared: T.StructType | None = None
+) -> None:
+    declared = SCHEMAS[name] if declared is None else declared
     got = {f.name: f.dataType for f in schema.fields}
-    want = {f.name: f.dataType for f in SCHEMAS[name].fields}
+    want = {f.name: f.dataType for f in declared.fields}
     if got != want:
         raise ValueError(
             f"schema drift for table {name!r}: expected {want}, got {got}"
@@ -183,42 +227,31 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``spark.read.parquet(path)`` would run a one-task schema-inference
     job per call.  The check is not optional: under a declared schema
     Spark fills a missing column with NULLs and matches a case-only
-    rename silently.  Two loads still infer (one job each) and check
-    the inferred schema: ``events``, whose reading depends on the Spark
-    build (below), and a path with no local footer to read (a remote
+    rename silently.  A path with no local footer to read (a remote
     URI, or a missing path, which then fails with Spark's own
-    ``PATH_NOT_FOUND``).
+    ``PATH_NOT_FOUND``) infers, one job, and checks the inferred schema.
 
-    ``events.ts`` is parquet ``TIMESTAMP(NANOS)``, which Spark's reader
-    rejects; we read it as epoch-nanos long (legacy conf) and truncate
-    to microseconds — the same truncation DuckDB applies, so oracle
-    parity holds at the value level.
+    ``events`` reads with the declared schema, ``ts`` typed as its
+    footer decides (:func:`events_schema`, which runs the same check): a
+    ``ts`` read as epoch nanos (a plain INT64 column, or TIMESTAMP(NANOS)
+    under the legacy conf) is then floored to microseconds — the same
+    truncation DuckDB applies, so oracle parity holds at the value
+    level.  Only a TIMESTAMP(NANOS) footer costs the load a job.
     """
     tune(spark)
     path = path_of(sf_dir, name)
     if name == "events":
-        # ``events.ts`` is parquet TIMESTAMP(NANOS).  Spark's handling
-        # differs by version: newer readers surface it natively as
-        # TIMESTAMP_NTZ (already truncated to micros), older ones only
-        # read it with the legacy nanos-as-long conf.  Branch on the
-        # schema the reader actually produces so both behaviors load
-        # identically; the conf is session-global and deliberately never
-        # unset — scans execute lazily, and on readers that honor it the
-        # conf must still hold at execution time.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            # Legacy path: epoch nanos → floor to micros (the same
-            # truncation DuckDB applies, so oracle parity holds).
+        schema = events_schema(spark, path)
+        df = spark.read.schema(schema).parquet(path)
+        if isinstance(schema["ts"].dataType, T.LongType):
             df = df.withColumn(
                 "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
             )
-        df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    else:
-        footer = _footer_file(path)
-        if footer is not None:
-            _check(name, _footer_schema(name, footer))
-            return spark.read.schema(SCHEMAS[name]).parquet(path)
-        df = spark.read.parquet(path)
+        return df
+    footer = _footer_file(path)
+    if footer is not None:
+        _check(name, _footer_schema(name, pq.read_metadata(footer).schema))
+        return spark.read.schema(SCHEMAS[name]).parquet(path)
+    df = spark.read.parquet(path)
     _check(name, df.schema)
     return df

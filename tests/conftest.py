@@ -54,3 +54,26 @@ def oracle():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(params=["one_partition", "shuffled"])
+def round_shape(request, monkeypatch):
+    """Run a fixpoint test under both plans of a ``min_propagate`` round:
+    the default row budget, under which every round after the first fits
+    a test graph and runs in one partition, and a zero budget, under
+    which every round shuffles and broadcasts nothing.  Returns the list
+    the round counts of the test's kernel calls are appended to."""
+    from task_mapreduce_spark.operators import llm_extras
+
+    if request.param == "shuffled":
+        monkeypatch.setattr(llm_extras, "_PROPAGATE_BCAST_ROWS", 0)
+    rounds: list[int] = []
+    kernel = llm_extras.min_propagate
+
+    def counted(*args, **kwargs):
+        out = kernel(*args, **kwargs)
+        rounds.append(out[1])
+        return out
+
+    monkeypatch.setattr(llm_extras, "min_propagate", counted)
+    return rounds

@@ -142,11 +142,13 @@ def test_merge_upsert_retry_is_idempotent(spark, sf_dir):
     assert rows2, "empty snapshot — fixture drift?"
     assert rows3 == rows2, "retried MERGE mutated the table"
 
-    # the retry rewrote exactly the batch's partitions (as v3) and
-    # carried everything else at its prior version
+    # the retry rewrote exactly the batch's partitions that hold rows
+    # (as v3) and carried everything else at its prior version; a batch
+    # partition left without rows is in neither manifest
     v3_parts = {p for p, v in man3.items() if v == 3}
     batch_parts = {r["p"] for r in batch.select("p").distinct().collect()}
-    assert v3_parts == batch_parts
+    assert man3.keys() == man2.keys()
+    assert v3_parts == batch_parts & man2.keys()
     carried = {(p, v) for p, v in man3.items() if v != 3}
     prior = {(p, v) for p, v in man2.items() if p not in batch_parts}
     assert carried == prior
@@ -449,3 +451,29 @@ def test_merge_snapshot_missing_version_raises(spark, sf_dir):
         _merge_read_snapshot(spark, store, {**man2, p: 99}).collect()
     # and the committed manifest still serves values
     assert _merge_read_snapshot(spark, store, man2).count() > 0
+
+
+def test_merge_snapshot_missing_partition_raises(spark, sf_dir):
+    # a partition directory deleted from a data version that is still
+    # live must fail the read, not read back as an empty partition: the
+    # commit maps only partitions that wrote a directory, so a missing
+    # one is always lost data
+    import shutil
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from task_mapreduce_spark.operators.relational import _work_dir
+    from task_mapreduce_spark.operators.scale import (
+        _merge_manifest,
+        _merge_read_snapshot,
+        sink_merge_upsert,
+    )
+
+    sink_merge_upsert(spark, sf_dir).collect()  # builds the v1/v2 store
+    store = _work_dir("merge_upsert")
+    man2 = _merge_manifest(store, 2)
+    p = next(p for p, v in sorted(man2.items()) if v == 1)
+    shutil.rmtree(f"{store}/data/v1/p={p}")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        _merge_read_snapshot(spark, store, man2).collect()

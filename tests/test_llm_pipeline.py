@@ -116,11 +116,11 @@ def test_connected_components_closes_chains(spark, tmp_path):
     assert cc[9] == 9
 
 
-def test_cc_pointer_jump_converges_on_100_hop_chain(spark):
+def test_cc_pointer_jump_converges_on_100_hop_chain(spark, round_shape):
     # a 0-1-2-...-100 path has diameter 100 > _CC_MAX_ITER (20), so
     # hop-only delta propagation would raise; convergence here proves
     # the pointer-jumping fallback engages and closes the chain in
-    # _CC_PJ_FROM + O(log2 100) ≈ 8 rounds, rooting every node at 0
+    # _CC_PJ_FROM + O(log2 100) = 8 rounds, rooting every node at 0
     from task_mapreduce_spark.operators.llm_extras import (
         _CC_MAX_ITER,
         _min_label_cc,
@@ -135,6 +135,8 @@ def test_cc_pointer_jump_converges_on_100_hop_chain(spark):
     out = {r["doc_id"]: r["label"] for r in _min_label_cc(nodes, edges).collect()}
     assert len(out) == n
     assert set(out.values()) == {0}
+    # the same 8 rounds whether rounds run in one partition or shuffle
+    assert round_shape == [8]
 
 
 def test_simhash_finds_planted_near_dup(spark, tmp_path):

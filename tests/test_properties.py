@@ -269,8 +269,12 @@ EDGES = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(edges=EDGES)
-def test_min_label_cc_matches_union_find(spark, edges):
-    from task_mapreduce_spark.operators.llm_extras import _min_label_cc
+def test_min_label_cc_matches_union_find(spark, round_shape, edges):
+    from task_mapreduce_spark.operators.llm_extras import (
+        _CC_MAX_ITER,
+        _CC_PJ_FROM,
+        _min_label_cc,
+    )
 
     n = 25
     parent = list(range(n))
@@ -298,6 +302,29 @@ def test_min_label_cc_matches_union_find(spark, edges):
         for r in _min_label_cc(nodes, edf).collect()
     }
     assert got == want
+    assert round_shape[-1] == _cc_rounds(n, edges, _CC_PJ_FROM, _CC_MAX_ITER)
+
+
+def _cc_rounds(n, edges, jump_from, max_rounds):
+    """Rounds ``_min_label_cc`` runs, replayed in Python: each round
+    min-folds the pushed labels, pointer-jumps from ``jump_from`` on,
+    and only changed nodes push next round."""
+    sym = [(a, b) for a, b in edges if a != b]
+    sym += [(b, a) for a, b in sym]
+    label = {x: x for x in range(n)}
+    push = [(b, a) for a, b in sym]
+    for it in range(max_rounds):
+        cur = dict(label)
+        for x, v in push:
+            cur[x] = min(cur[x], v)
+        if it >= jump_from:
+            cur = {x: min(v, cur[v]) for x, v in cur.items()}
+        changed = {x for x in cur if cur[x] < label[x]}
+        label = cur
+        if not changed:
+            return it + 1
+        push = [(b, label[a]) for a, b in sym if a in changed]
+    return max_rounds
 
 
 # random small directed graphs: bfs_distances (min_propagate with step 1
@@ -323,7 +350,7 @@ BFS_EDGES = st.lists(
 @example(edges=[(0, 1), (1, 2), (2, 0), (5, 6)])
 @example(edges=[(i, i + 1) for i in range(7)])
 @given(edges=BFS_EDGES)
-def test_bfs_matches_python_bfs_and_exits_early(spark, edges):
+def test_bfs_matches_python_bfs_and_exits_early(spark, round_shape, edges):
     from task_mapreduce_spark.operators.graph import _BFS_ITERS, bfs_distances
 
     want = {0: 0}

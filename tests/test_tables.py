@@ -94,3 +94,15 @@ def test_load_empty_spark_directory(spark, tmp_path, name):
 def test_load_missing_path_is_path_not_found(spark, tmp_path):
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         load(spark, f"{tmp_path}/no_such_sf", "nation")
+
+
+def test_load_events_nanos_footer_matches_micros(spark, sf_dir, tmp_path):
+    # a TIMESTAMP(NANOS) ts takes the reader-dependent branch (inferred
+    # schema, legacy nanos-as-long conf); it must load the same values
+    # as the MICROS copy, which reads with the declared schema
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    assert table.schema.field("ts").type == pa.timestamp("us")
+    pq.write_table(_cast("ts", pa.timestamp("ns"))(table), f"{tmp_path}/events.parquet")
+    back = load(spark, str(tmp_path), "events")
+    assert back.schema == SCHEMAS["events"]
+    assert sorted(back.collect()) == sorted(load(spark, sf_dir, "events").collect())
