@@ -38,6 +38,7 @@ from task_mapreduce_spark.operators.llm_pipeline import sim_search_topk
 from task_mapreduce_spark.operators.training_pipeline import (
     _PQ_TOP_K,
     _pq_d2,
+    _pq_d2_sql,
     sim_search_pq,
     sim_search_pq_const,
 )
@@ -79,11 +80,7 @@ _EXACT_L2_SQL = f"""
     SELECT query_id, vec_id FROM (
       SELECT q2.query_id, e2.vec_id,
              row_number() OVER (PARTITION BY q2.query_id
-               ORDER BY round(list_sum(list_transform(
-                          range(1, len(e2.v) + 1),
-                          i -> (e2.v[i] - q2.qv[i])
-                               * (e2.v[i] - q2.qv[i]))), 6),
-                        e2.vec_id) AS rk
+               ORDER BY {_pq_d2_sql("e2.v", "q2.qv")}, e2.vec_id) AS rk
       FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) e2
       CROSS JOIN (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
                   FROM embeddings WHERE vec_id < {_ANN_N_QUERIES}) q2

@@ -11,9 +11,9 @@ the flat-PQ stages of training_pipeline for the residual level — and
 must import after both (the ann_eval ordering convention in
 operators/__init__.py).  Only the residual slicing, the per-cell
 lookup tables and the cell-aware ADC join are written here; the
-assign (``_pq_assign``), the Lloyd round (``_pq_lloyd_step``), the
-shortlist + rerank (``_pq_rerank``) and their SQL emitters are the
-ones flat PQ runs.
+assign (``_pq_assign``), the trainer (``_pq_lloyd``, ``kmeans``' one
+Lloyd loop), the shortlist + rerank (``_pq_rerank``) and their SQL
+emitters are the ones flat PQ runs.
 
 No reference citation is possible: ``/root/reference/`` is an empty
 checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.
@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.operators import kmeans
 from task_mapreduce_spark.operators.llm_extras import (
     _hier_coarse,
     _hier_probe_ctes,
@@ -32,11 +33,10 @@ from task_mapreduce_spark.operators.llm_extras import (
 )
 from task_mapreduce_spark.operators.training_pipeline import (
     _PQ_M,
-    _pq_assign,
-    _pq_assign_ctes,
     _pq_d2,
-    _pq_lloyd_step,
-    _pq_mean_ctes,
+    _pq_d2_sql,
+    _pq_lloyd,
+    _pq_lloyd_ctes,
     _pq_rerank,
     _pq_rerank_sql,
 )
@@ -59,41 +59,22 @@ def _ivfpq_ctes() -> str:
     IVF seed rule's chars 1-12 — a same-bit rule would train the
     residual codebook preferentially on centroid vectors, whose
     residuals are ≈0: the CLAUDE.md composed-hash-rule trap in its
-    most insidious form), one exact-decimal Lloyd round and the encode
-    (the flat-PQ chain's own ``_pq_assign_ctes``/``_pq_mean_ctes``
-    emitters over the residual slices ``rsl``).  Ends in res/rsl/pcs1/
-    pcodes1 (+ the inherited e/cents/cells/sup/csup)."""
-    return ",\n    ".join(
-        [
-            _ivf_hier_ctes(),
-            f"""res AS (
+    most insidious form), then the flat-PQ trainer chain
+    (``_pq_lloyd_ctes``) over the residual slices ``rsl``.  Ends in
+    res/rsl/pcs/pcodes (+ the inherited e/cents/cells/sup/csup)."""
+    ctes = [
+        _ivf_hier_ctes(),
+        """res AS (
       SELECT c.vec_id, c.cell,
              list_transform(range(1, len(e.v) + 1),
                             i -> e.v[i] - ct.cv[i]) AS rv
       FROM cells c JOIN e USING (vec_id) JOIN cents ct ON ct.cid = c.cell
-    ),
-    p2 AS (
-      SELECT greatest(1, CAST(floor(count(*) / {_IPQ_K}) AS BIGINT))
-               AS stride
-      FROM res
-    ),
-    subs AS (SELECT unnest(range({_PQ_M})) AS sub),
-    rsl AS (
-      SELECT r.vec_id, r.cell, s.sub, len(r.rv) // {_PQ_M} AS dsub,
-             list_slice(r.rv, s.sub * (len(r.rv) // {_PQ_M}) + 1,
-                        (s.sub + 1) * (len(r.rv) // {_PQ_M})) AS sv
-      FROM res r CROSS JOIN subs s
-    ),
-    pcs0 AS (
-      SELECT vec_id AS cid, sub, sv AS csl FROM rsl, p2
-      WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 13, 12))::BIGINT
-              % p2.stride = 0
     )""",
-        ]
-        + _pq_assign_ctes("rsl", 0, "p")
-        + _pq_mean_ctes("rsl", 1, "p")
-        + _pq_assign_ctes("rsl", 1, "p")
-    )
+        kmeans.slice_cte("rsl", "res", ["vec_id", "cell"], "rv", "sv", _PQ_M),
+    ]
+    ctes += kmeans.seed_ctes("pseeds", "res", "rv", k=_IPQ_K, chars=13)
+    ctes.append(kmeans.slice_cte("pcs0", "pseeds", ["cid"], "cv", "csl", _PQ_M))
+    return ",\n    ".join(ctes + _pq_lloyd_ctes("rsl", "p"))
 
 
 @register(
@@ -101,30 +82,26 @@ def _ivfpq_ctes() -> str:
     oracle=f"""
     WITH {_ivfpq_ctes()},
     {_hier_probe_ctes()},
-    qres AS (
-      SELECT p.query_id, p.cell, s.sub, len(e.v) // {_PQ_M} AS dsub,
-             list_slice(list_transform(range(1, len(e.v) + 1),
-                                       i -> e.v[i] - ct.cv[i]),
-                        s.sub * (len(e.v) // {_PQ_M}) + 1,
-                        (s.sub + 1) * (len(e.v) // {_PQ_M})) AS sv
+    qr AS (
+      SELECT p.query_id, p.cell,
+             list_transform(range(1, len(e.v) + 1),
+                            i -> e.v[i] - ct.cv[i]) AS qrv
       FROM probes p
       JOIN e ON e.vec_id = p.query_id
       JOIN cents ct ON ct.cid = p.cell
-      CROSS JOIN subs s
     ),
+    {kmeans.slice_cte("qres", "qr", ["query_id", "cell"], "qrv", "sv", _PQ_M)},
     dt AS (
       SELECT q.query_id, q.cell, q.sub, c.cid,
-             round(list_sum(list_transform(range(1, q.dsub + 1),
-                    i -> (q.sv[i] - c.csl[i]) * (q.sv[i] - c.csl[i]))), 6)
-               AS d2
-      FROM qres q JOIN pcs1 c USING (sub)
+             {_pq_d2_sql("q.sv", "c.csl")} AS d2
+      FROM qres q JOIN pcs c USING (sub)
     ),
     adc AS (
       SELECT d.query_id, v.vec_id,
              round(CAST(SUM(CAST(d.d2 AS DECIMAL(18,6))) AS DOUBLE), 6)
                AS adc_dist
       FROM cells v
-      JOIN pcodes1 k ON k.vec_id = v.vec_id
+      JOIN pcodes k ON k.vec_id = v.vec_id
       JOIN dt d ON d.cell = v.cell AND d.sub = k.sub AND d.cid = k.code
       WHERE v.vec_id <> d.query_id
       GROUP BY d.query_id, v.vec_id
@@ -208,51 +185,18 @@ def sim_search_ivfpq(
         .localCheckpoint()
     )
 
-    dsub = F.expr(f"size(rv) div {_PQ_M}")
-    sub_ids = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("sub")
-    rsl = (
-        res.select("vec_id", "rv", sub_ids)
-        .select(
-            "vec_id",
-            "sub",
-            F.slice("rv", F.col("sub") * dsub + 1, dsub).alias("sv"),
-        )
-        .repartition(par)
-        .localCheckpoint()
-    )
+    rsl = kmeans.slices(res, ["vec_id"], "rv", "sv", _PQ_M)
+    rsl = rsl.repartition(par).localCheckpoint()
 
-    # constant-K residual codebook seeds on the INDEPENDENT hash bits
-    params = res.agg(F.count(F.lit(1)).alias("n")).select(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.floor(F.col("n") / F.lit(_IPQ_K)).cast("long"),
-        ).alias("stride")
-    )
-    h2 = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 13, 12), 16, 10
-    ).cast("long")
-    seed_res = (
-        res.crossJoin(F.broadcast(params))
-        .filter(h2 % F.col("stride") == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("rv").alias("cv"))
-    )
-    dsub_c = F.expr(f"size(cv) div {_PQ_M}")
-    # lazy like _pq_slices' seed codebook: ONE consumer (the Lloyd
-    # assign's broadcast), and the derivation is a narrow slice over
-    # the checkpointed res — an eager checkpoint here was one extra
-    # job with nothing multi-consumer to protect (round-13 pass)
-    cs = (
-        seed_res.select("cid", "cv", sub_ids)
-        .select(
-            "cid",
-            "sub",
-            F.slice("cv", F.col("sub") * dsub_c + 1, dsub_c).alias("csl"),
-        )
-    )
-
-    # one exact-decimal Lloyd round over the residual slices
-    cs = _pq_lloyd_step(rsl, cs)
-    codes = _pq_assign(rsl, cs).select("vec_id", "sub", "code")
+    # constant-K residual codebook seeds on the INDEPENDENT hash bits,
+    # lazy like _pq_slices' seed codebook: ONE consumer (the first Lloyd
+    # assign's broadcast), and the derivation is a narrow slice over the
+    # checkpointed res — an eager checkpoint here was one extra job with
+    # nothing multi-consumer to protect (round-13 pass)
+    seeds = kmeans.seeds(res, "rv", k=_IPQ_K, chars=13)
+    cs = kmeans.slices(seeds, ["cid"], "cv", "csl", _PQ_M)
+    codes, cs = _pq_lloyd(rsl, cs)
+    codes = codes.select("vec_id", "sub", "code")
 
     # ---- probe: two-level supers-first cell ranking with size-scaled
     # nprobe (the sim_search_ivf_hier probe, round 13), then
@@ -270,13 +214,7 @@ def sim_search_ivfpq(
         # job.  The HOF-collapse exposure is bounded: the 8-way slice
         # below re-evaluates zip_with on |q|·nprobe (~10²) rows only.
     )
-    dsub_q = F.expr(f"size(qrv) div {_PQ_M}")
-    qsl = probes.select("query_id", "cell", "qrv", sub_ids).select(
-        "query_id",
-        "cell",
-        "sub",
-        F.slice("qrv", F.col("sub") * dsub_q + 1, dsub_q).alias("qsv"),
-    )
+    qsl = kmeans.slices(probes, ["query_id", "cell"], "qrv", "qsv", _PQ_M)
     # lookup-table columns renamed so the three-way join condition has
     # no name (or exprId) overlap with the code/cell stream
     dt = qsl.join(cs, "sub").select(

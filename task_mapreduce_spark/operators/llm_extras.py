@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from task_mapreduce_spark.operators import kmeans
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -1625,167 +1626,68 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _IVF_NPROBE = 5        # each query searches its 5 nearest cells
-_IVF_LLOYD_STEPS = 1   # k-means refinement rounds over the hash seeds
 
 
-def _lloyd_mean_ctes(src_cells: str, idx: int) -> list:
-    """The exact-decimal / round-9 Lloyd-mean CTE triple
-    (elems/means/cents) shared by ``_ivf_cells_ctes`` (√N chain) and
-    ``_ivf_hier_ctes`` (two-level chain): ONE emitter, so the float
-    discipline the oracles' bit-stability rests on cannot fork between
-    the two generators (review, round 12)."""
+def _argmax(pairs: DataFrame, key: str, d: str, cid: str, out: str) -> DataFrame:
+    """Per ``key``, the ``cid`` with the largest score ``d``, ties to the
+    smaller id: one ``max_by`` over (d, -cid), whose partial aggregate
+    runs map-side in the stage that builds ``pairs``."""
+    return pairs.groupBy(key).agg(
+        F.max_by(cid, F.struct(F.col(d), (-F.col(cid)).alias("n"))).alias(out)
+    )
+
+
+def _ivf_assign_ctes(r: int) -> list[str]:
+    """Round r's flat assign as CTEs ``asn{r}(vec_id, cid, rn)`` (every
+    vector's ranking of the centroids ``cents{r}``) and ``cells{r}(vec_id,
+    cell)``: the SQL twin of :func:`_ivf_assign`."""
     return [
-        f"""elems{idx} AS (
-      SELECT c0.cell, unnest(e.v) AS val, unnest(range(len(e.v))) AS idx
-      FROM {src_cells} c0 JOIN e USING (vec_id)
-    )""",
-        f"""means{idx} AS (
-      SELECT cell, idx,
-             round(CAST(SUM(CAST(val AS DECIMAL(28,10))) AS DOUBLE)
-                     / COUNT(*), 9) AS m
-      FROM elems{idx} GROUP BY cell, idx
-    )""",
-        f"""cents{idx} AS (
-      SELECT cell AS cid, list(m ORDER BY idx) AS cv FROM means{idx} GROUP BY cell
-    )""",
-    ]
-
-
-def _lloyd_means(frame: DataFrame, keys: list, vec: str) -> DataFrame:
-    """Spark twin of ``_lloyd_mean_ctes``: the element-wise mean of the
-    vector column ``vec`` per ``keys`` group, returned as (*keys, vec).
-    Posexplode, exact decimal(28,10) sum over one double division
-    rounded to 9, then the (idx, m) pairs collected and sorted back
-    into a vector.  The one Lloyd mean of both trainers: IVF cells
-    (keys ``cell``) and PQ codebooks (keys ``sub, code``).  ``frame``
-    must be checkpointed: Generate over a live hash-aggregate is a
-    measured 40× cliff (see ``_ivf_cells``)."""
-    means = (
-        frame.select(*keys, F.posexplode(vec).alias("idx", "val"))
-        .groupBy(*keys, "idx")
-        .agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(28,10)")).cast("double")
-                / F.count(F.lit(1)),
-                9,
-            ).alias("m")
-        )
-    )
-    return means.groupBy(*keys).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("idx", "m"))),
-            lambda s: s["m"],
-        ).alias(vec)
-    )
-
-
-def _ivf_cells_ctes(steps: int = _IVF_LLOYD_STEPS, where: str = "") -> str:
-    """Shared IVF cell construction — the ONE clustering sim_search_ivf,
-    dedup_semantic and mine_hard_negatives all build on, as a DuckDB CTE
-    chain ending in
-      cents(cid, cv)      — the Lloyd-refined centroids
-      asn(vec_id,cid,rn)  — every vector's centroid ranking
-      cells(vec_id, cell) — the final assignment
-    (step-count-agnostic names, so downstream oracle SQL never changes
-    when ``steps`` does), mirrored 1:1 by the Spark-side
-    :func:`_ivf_cells`.  Seeds are the vectors whose PORTABLE 48-bit
-    md5(vec_id) hash is ≡ 0 mod stride — a hash-ORDER rule, so
-    nlist ≈ √N holds for ANY id distribution (raw `vec_id % stride`
-    assumed dense PKs: sparse or skewed production ids would drift the
-    seed count off √N and degrade cell balance — round-6 verdict
-    finding #1).  Each Lloyd step: element-wise mean of the previous
-    assignment's cells (exact decimal sum → one deterministic double
-    division → round 9; parallel unnests zip in DuckDB), then re-assign.
-    ``steps`` is parameterized (round 8) but PINNED at 1: a measured
-    grid showed 1 step + nprobe=5 reaches the same recall@10
-    (0.58/0.58 at sf0.001/0.01) as 2 steps + nprobe=4 (0.58/0.60)
-    while a second step doubles the clustering cost for every key
-    sharing the cells (dedup_semantic, mine_hard_negatives) — probing
-    2 more of ~√N cells is the strictly cheaper dial for this
-    workload.  A search-heavy 100 TB deployment that amortizes the
-    index over many queries turns ``steps`` up instead."""
-    # ``where`` restricts the clustered corpus (sim_index_ingest trains
-    # on the accepted slice only); default "" keeps every consumer's
-    # SQL byte-identical to the pre-parameter form
-    ctes = [
-        f"""e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings{where}
-    )""",
-        """p AS (
-      -- stride chosen so nlist ≈ ceil(sqrt(N)): the √N regime IVF wants
-      SELECT greatest(1, CAST(floor(count(*) / greatest(1, ceil(sqrt(count(*)))))
-               AS BIGINT)) AS stride
-      FROM e
-    )""",
-        """seeds AS (
-      SELECT vec_id AS cid, v AS cv FROM e, p
-      WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 12))::BIGINT
-              % p.stride = 0
-    )""",
-        """asn0 AS (
-      SELECT e.vec_id, c.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY round(list_dot_product(e.v, c.cv), 6) DESC, c.cid
-             ) AS rn
-      FROM e CROSS JOIN seeds c
-    )""",
-        "cells0 AS (SELECT vec_id, cid AS cell FROM asn0 WHERE rn = 1)",
-    ]
-    for r in range(1, steps + 1):
-        prev = f"cells{r - 1}"
-        ctes.extend(_lloyd_mean_ctes(prev, r))
-        ctes.append(
-            f"""asn{r} AS (
+        f"""asn{r} AS (
       SELECT e.vec_id, c.cid,
              row_number() OVER (
                PARTITION BY e.vec_id
                ORDER BY round(list_dot_product(e.v, c.cv), 6) DESC, c.cid
              ) AS rn
       FROM e CROSS JOIN cents{r} c
+    )""",
+        f"cells{r} AS (SELECT vec_id, cid AS cell FROM asn{r} WHERE rn = 1)",
+    ]
+
+
+def _ivf_cells_ctes(where: str = "") -> str:
+    """Shared IVF cell construction — the ONE clustering sim_search_ivf,
+    dedup_semantic and mine_hard_negatives all build on, as a DuckDB CTE
+    chain ending in
+      cents(cid, cv)      — the Lloyd-refined centroids
+      asn(vec_id,cid,rn)  — every vector's centroid ranking
+      cells(vec_id, cell) — the final assignment
+    mirrored 1:1 by the Spark-side :func:`_ivf_cells`.  Seeds are
+    ``kmeans``' √N hash-order rule (raw `vec_id % stride` assumed dense
+    PKs: sparse or skewed production ids would drift the seed count off
+    √N and degrade cell balance — round-6 verdict finding #1), followed
+    by ``kmeans.LLOYD_STEPS`` rounds of mean + flat re-assign.
+    ``where`` restricts the clustered corpus (sim_index_ingest trains on
+    the accepted slice only)."""
+    ctes = [
+        f"""e AS (
+      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings{where}
     )"""
-        )
-        ctes.append(
-            f"cells{r} AS (SELECT vec_id, cid AS cell FROM asn{r} WHERE rn = 1)"
-        )
-    # steps=0 has no cents0 CTE (the loop never ran): the final
-    # centroids ARE the seeds — emit that alias so every step count the
-    # Spark twin accepts (lloyd_steps=0 falls back to seeds) yields
-    # runnable SQL too (round-8 ADVICE: the dials must stay symmetric).
-    if steps == 0:
-        ctes.append("cents AS (SELECT cid, cv FROM seeds)")
-    else:
-        ctes.append(f"cents AS (SELECT * FROM cents{steps})")
-    ctes.append(f"asn AS (SELECT * FROM asn{steps})")
-    ctes.append(f"cells AS (SELECT * FROM cells{steps})")
+    ]
+    ctes += kmeans.seed_ctes("cents0", "e", "v")
+    ctes += kmeans.lloyd_ctes(
+        _ivf_assign_ctes, "e", ["cell"], "v", "cells", "cents", "cv"
+    )
+    ctes.append(f"asn AS (SELECT * FROM asn{kmeans.LLOYD_STEPS})")
     return ",\n    ".join(ctes)
 
 
-_IVF_CELLS_CTES = _ivf_cells_ctes(_IVF_LLOYD_STEPS)
-
-
-def _ivf_assign_topology(target_cell: int | None) -> str:
-    """The ONE rule deciding which assign topology :func:`_ivf_cells`
-    builds — named (rather than inlined) so the regime pin is
-    refactor-proof and directly testable:
-
-    - ``"flat"`` (default, registered keys): N × nlist exact dots.
-      Correct for the √N regime, where nlist grows as √N and the
-      oracles replay the assignment verbatim.
-    - ``"two_level"`` (constant-cell knob): the coarse-quantizer
-      assign.  With nlist ∝ N (the knob's regime) the flat arm is
-      N²/s — measured ×6.6 WORSE at ×100 (412.7 s flat vs 62.3 s
-      two-level, round 10) — so the knob path MUST take the two-level
-      arm; a refactor that silently reverts it re-opens the 412 s
-      cliff.  Pinned by tests/test_plans.py::
-      test_two_level_assign_engages_on_knob_path."""
-    return "flat" if target_cell is None else "two_level"
+_IVF_CELLS_CTES = _ivf_cells_ctes()
 
 
 def _super_structs(cents: DataFrame):
     """Super-centroid structures over a centroid table — the ONE
-    derivation shared by the two-level ASSIGN (per Lloyd round, inside
-    :func:`_ivf_cells`) and the two-level PROBE (final cents,
+    derivation shared by the two-level ASSIGN (per Lloyd round,
+    :func:`_ivf_assign_hier`) and the two-level PROBE (final cents,
     :func:`_hier_probes`), so build and serve can never disagree on
     the super grouping.  Returns ``(params, supers, cent_sup)``:
 
@@ -1822,10 +1724,7 @@ def _super_structs(cents: DataFrame):
         sq.alias("g"),
         F.greatest(F.lit(_IVF_NPROBE).cast("long"), sq).alias("np"),
     )
-    hcid = F.conv(
-        F.substring(F.md5(F.col("cid").cast("string")), 1, 12), 16, 10
-    ).cast("long")
-    wr = Window.orderBy(hcid.asc(), F.col("cid").asc())
+    wr = Window.orderBy(kmeans.hash48("cid").asc(), F.col("cid").asc())
     supers = (
         cents.withColumn("rk", F.row_number().over(wr))
         .crossJoin(F.broadcast(params))
@@ -1834,36 +1733,76 @@ def _super_structs(cents: DataFrame):
         .localCheckpoint()  # broadcast to ≥2 consumers
     )
     ds_cc = F.round(_dot(F.col("cv"), F.col("sv")), 6)
-    slim = (
-        cents.crossJoin(F.broadcast(supers))
-        .select("cid", ds_cc.alias("ds"), "sid")
-        .groupBy("cid")
-        .agg(
-            F.max_by(
-                "sid", F.struct(F.col("ds"), (-F.col("sid")).alias("ns"))
-            ).alias("sid")
-        )
+    pairs = cents.crossJoin(F.broadcast(supers)).select("cid", ds_cc.alias("ds"), "sid")
+    cent_sup = cents.join(_argmax(pairs, "cid", "ds", "sid", "sid"), "cid")
+    cents._super_structs_cache = (params, supers, cent_sup)
+    return cents._super_structs_cache
+
+
+def _ivf_assign(frame: DataFrame, cents: DataFrame) -> DataFrame:
+    """Flat assign ``(vec_id, cell)``: each vector's argmax over every
+    centroid, by (rounded dot DESC, cid ASC).  The partial aggregate runs
+    in the same stage as the broadcast join, so the nlist-multiplied
+    rows never hit the shuffle.  The N×nlist pair stream carries
+    SCALARS ONLY (vec_id, d, cid ≈ 24 B/row): an earlier form dragged
+    the 64-float vector through every pair row via F.first("v") in the
+    agg, which at ×100 with the constant-cell knob (nlist ≈ 3k → 625M
+    pair rows × ~560 B) sort-spilled past the 8 GiB JVM and OOMed
+    outright (round 10) — the select_dsir minimum-column rule applied
+    to the assign stage."""
+    d = F.round(_dot(F.col("v"), F.col("cv")), 6)
+    pairs = frame.crossJoin(F.broadcast(cents)).select("vec_id", d.alias("d"), "cid")
+    return _argmax(pairs, "vec_id", "d", "cid", "cell")
+
+
+def _ivf_assign_hier(frame: DataFrame, cents: DataFrame) -> DataFrame:
+    """Two-level coarse-quantizer assign ``(vec_id, cell)`` for the
+    constant-cell knob path: flat assign is N×nlist dots, and with
+    nlist ∝ N (the knob's regime) that is N²/s — measured ×6.6 WORSE
+    than the √N default at ×100 (412.7 s vs 62.3 s, round 10) because
+    the assign arm, not the pair arm, dominates.  Group the centroids
+    under ~√nlist hash-ranked super-centroids once (metadata-sized),
+    send each vector to its nearest SUPER (N×√nlist scalar dots), then
+    argmax only within that super's group via a broadcast equi-join on
+    the super id (N×E[group] ≈ N×√nlist more) — total assign work
+    N×2√nlist, the standard IVF coarse-quantizer trick (Jégou et al.
+    2011, public).  The assignment is the classic approximation (a
+    vector whose true nearest centroid lives under a different super
+    lands one cell over — acceptable by construction on the knob path,
+    which trades exactness for linearity; the oracle replays the same
+    approximation).
+
+    Super structures come from :func:`_super_structs` — the same
+    derivation the two-level PROBE runs over the final cents
+    (round-13), so build and serve share one super grouping by
+    construction."""
+    _, supers, cent_sup = _super_structs(cents)
+    ds_vs = F.round(_dot(F.col("v"), F.col("sv")), 6)
+    v_sup = _argmax(
+        frame.crossJoin(F.broadcast(supers)).select("vec_id", ds_vs.alias("ds"), "sid"),
+        "vec_id",
+        "ds",
+        "sid",
+        "sid",
     )
-    cent_sup = cents.join(slim, "cid")
-    out = (params, supers, cent_sup)
-    try:
-        cents._super_structs_cache = out
-    except AttributeError:  # defensive: frame types that forbid attrs
-        pass
-    return out
+    d = F.round(_dot(F.col("v"), F.col("cv")), 6)
+    pairs = (
+        frame.select("vec_id", "v")
+        .join(v_sup, "vec_id")
+        .join(F.broadcast(cent_sup), "sid")
+        .select("vec_id", d.alias("d"), "cid")
+    )
+    return _argmax(pairs, "vec_id", "d", "cid", "cell")
 
 
-def _ivf_cells(
-    e: DataFrame,
-    lloyd_steps: int = _IVF_LLOYD_STEPS,
-    target_cell: int | None = None,
-):
+def _ivf_cells(e: DataFrame, target_cell: int | None = None):
     """Spark twin of ``_ivf_cells_ctes`` over the normed-vector frame
     ``e``: returns (assigned, cents) where assigned = (vec_id, v, nrm,
     cell) is the Lloyd-refined cell assignment and cents = (cid, cv)
-    the refined centroids.  See sim_search_ivf's docstring for the
-    full 100 TB shape argument (broadcast centroid rows, map-side
-    max_by assignment, posexplode mean with partial aggregation).
+    the refined centroids, trained by ``kmeans.lloyd``.  See
+    sim_search_ivf's docstring for the full 100 TB shape argument
+    (broadcast centroid rows, map-side max_by assignment, posexplode
+    mean with partial aggregation).
 
     ``target_cell`` is the CONSTANT-STRIDE LINEARIZATION KNOB
     (SCALE.md's pair-family escape hatch, now in code): by default the
@@ -1875,8 +1814,10 @@ def _ivf_cells(
     within-cell pair families (dedup_semantic, mine_hard_negatives)
     turn LINEAR in N at the cost of more cells to probe.  Property-
     tested in tests/test_properties.py: E[cell size] holds ~s across a
-    ×10 corpus growth.  The registered keys pin the √N default; the
-    knob is the documented dial a 100 TB deployment turns."""
+    ×10 corpus growth.  With nlist ∝ N the flat assign is N²/s, so the
+    knob path MUST take the two-level assign (:func:`_ivf_assign_hier`;
+    pinned by tests/test_plans.py::
+    test_two_level_assign_engages_on_knob_path)."""
     # EAGER checkpoint of the normed-vector frame: without it Catalyst
     # collapses _normed_vectors' higher-order projections (the
     # transform cast and the zip_with/aggregate norm) INTO the N×nlist
@@ -1894,141 +1835,11 @@ def _ivf_cells(
     # the PQ slice frame (which measured ≈×8 at the x10 scale).
     par = e.sparkSession.sparkContext.defaultParallelism
     e = e.repartition(par).localCheckpoint()
-    if target_cell is None:
-        params = e.agg(F.count(F.lit(1)).alias("n")).select(
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.floor(
-                    F.col("n") / F.greatest(F.lit(1.0), F.ceil(F.sqrt("n")))
-                ).cast("long"),
-            ).alias("stride")
-        )
-    else:
-        params = e.sparkSession.range(1).select(
-            F.lit(int(max(1, target_cell))).cast("long").alias("stride")
-        )
-    # seed rule: portable 48-bit md5 hash of the id ≡ 0 (mod stride) —
-    # id-distribution-free, scan-side, identical in the oracle
-    id_hash = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 12), 16, 10
-    ).cast("long")
-    seeds = (
-        e.crossJoin(F.broadcast(params))
-        .filter(id_hash % F.col("stride") == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    assign = _ivf_assign if target_cell is None else _ivf_assign_hier
+    cells, cents = kmeans.lloyd(
+        e, kmeans.seeds(e, "v", stride=target_cell), assign, ["cell"], "v", "cv"
     )
-    d = F.round(_dot(F.col("v"), F.col("cv")), 6)
-
-    def assign(frame: DataFrame, centroids: DataFrame) -> DataFrame:
-        # argmax per vector: max_by over (dot DESC, cid ASC) — the
-        # partial aggregate runs in the same stage as the broadcast
-        # join, so the nlist-times-multiplied rows never hit the
-        # shuffle.  The N×nlist pair stream carries SCALARS ONLY
-        # (vec_id, d, cid ≈ 24 B/row): an earlier form dragged the
-        # 64-float vector through every pair row via F.first("v") in
-        # the agg, which at ×100 with the constant-cell knob (nlist ≈
-        # 3k → 625M pair rows × ~560 B) sort-spilled past the 8 GiB
-        # JVM and OOMed outright (round 10) — the select_dsir
-        # minimum-column rule applied to the assign stage.  The vector
-        # re-joins AFTER the argmax from the checkpointed frame: one
-        # N-row co-shuffle, paid once per assign instead of nlist
-        # times per vector.
-        slim = (
-            frame.crossJoin(F.broadcast(centroids))
-            .select("vec_id", d.alias("d"), "cid")
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    "cid", F.struct(F.col("d"), (-F.col("cid")).alias("nc"))
-                ).alias("cell")
-            )
-        )
-        return frame.select("vec_id", "v", "nrm").join(slim, "vec_id")
-
-    def assign_hier(frame: DataFrame, centroids: DataFrame) -> DataFrame:
-        """Two-level coarse-quantizer assign for the constant-cell
-        knob path: flat assign is N×nlist dots, and with nlist ∝ N
-        (the knob's regime) that is N²/s — measured ×6.6 WORSE than
-        the √N default at ×100 (412.7 s vs 62.3 s, round 10) because
-        the assign arm, not the pair arm, dominates.  Group the
-        centroids under ~√nlist hash-ranked super-centroids once
-        (metadata-sized), send each vector to its nearest SUPER
-        (N×√nlist scalar dots), then argmax only within that super's
-        group via a broadcast equi-join on the super id (N×E[group] ≈
-        N×√nlist more) — total assign work N×2√nlist, the standard
-        IVF coarse-quantizer trick (Jégou et al. 2011, public).  The
-        assignment is the classic approximation (a vector whose true
-        nearest centroid lives under a different super lands one cell
-        over — acceptable by construction on the knob path, which
-        trades exactness for linearity; the REGISTERED keys keep the
-        flat √N assign and their oracles replay it verbatim).
-
-        Super structures come from :func:`_super_structs` — the same
-        derivation the two-level PROBE runs over the final cents
-        (round-13), so build and serve share one super grouping by
-        construction."""
-        _, supers, cent_sup = _super_structs(centroids)
-        ds_vs = F.round(_dot(F.col("v"), F.col("sv")), 6)
-        v_sup = (
-            frame.crossJoin(F.broadcast(supers))
-            .select("vec_id", ds_vs.alias("ds"), "sid")
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    "sid", F.struct(F.col("ds"), (-F.col("sid")).alias("ns"))
-                ).alias("sid")
-            )
-        )
-        slim = (
-            frame.select("vec_id", "v")
-            .join(v_sup, "vec_id")
-            .join(F.broadcast(cent_sup), "sid")
-            .select("vec_id", d.alias("d"), "cid")
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    "cid", F.struct(F.col("d"), (-F.col("cid")).alias("nc"))
-                ).alias("cell")
-            )
-        )
-        return frame.select("vec_id", "v", "nrm").join(slim, "vec_id")
-
-    if _ivf_assign_topology(target_cell) == "two_level":
-        assign = assign_hier
-
-    # lloyd_steps k-means rounds over the seed assignment: element-wise
-    # exact-decimal mean per cell (see sim_search_ivf's docstring for
-    # the portability and shuffle-size argument); empty cells drop out.
-    # Each round is one posexplode mean + one broadcast re-assignment —
-    # centroid-table-sized state, never a second corpus copy.
-    cur = assign(e, seeds)
-    cents = seeds
-    for _ in range(lloyd_steps):
-        # EAGER checkpoint of the step's assignment before the
-        # posexplode mean: Generate directly over a LIVE hash-aggregate
-        # subplan is a measured 40× cliff (23 s vs 0.6 s for the same
-        # 1.28M-row explode at 20k vectors — same pathology family as
-        # the InferFiltersFromGenerate traps in CLAUDE.md).  N narrow
-        # rows + the vector — the same working set as the index build.
-        cur = cur.localCheckpoint()
-        cents = (
-            _lloyd_means(cur, ["cell"], "v")
-            .select(F.col("cell").alias("cid"), F.col("v").alias("cv"))
-            # EAGER checkpoint of the nlist-row centroid table, for two
-            # measured reasons (x10 stress, 20k vectors, round 8):
-            # (1) a BROADCAST subtree re-executes its whole child plan
-            # per consuming job — probes, the final assignment, and any
-            # caller each re-ran the full Lloyd chain (sim_search_ivf
-            # x10 46 s → 4 s once cut); (2) lazy (eager=False)
-            # checkpoints proved a placebo on this build — derived
-            # actions re-ran the live lineage anyway.  Cost: one
-            # centroid-sized plan-build job per step, the same trade
-            # dedup_semantic's assigned-checkpoint already makes.
-            .localCheckpoint()
-        )
-        cur = assign(e, cents)
-    assigned = cur.select("vec_id", "v", "nrm", "cell")
-    return assigned, cents
+    return e.join(cells, "vec_id").select("vec_id", "v", "nrm", "cell"), cents
 
 
 @register(
@@ -2064,7 +1875,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus size so nlist ≈ ceil(√N) in expectation for ANY id
     distribution (dense, sparse, or skewed) — computed as a 1-row
     aggregate cross-joined back in, no driver action, and the same
-    formula the oracle evaluates in SQL.  ``_IVF_LLOYD_STEPS`` Lloyd
+    formula the oracle evaluates in SQL.  ``kmeans.LLOYD_STEPS`` Lloyd
     refinements then replace each seed with the element-wise MEAN of
     its assigned members: hash sampling is a uniform (unstratified)
     draw, and cell balance — the quantity the whole √N cost model rests
@@ -2074,8 +1885,8 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.44/0.44) while each query still scores only ~nprobe/√N of the
     corpus.  The round-8 grid also measured 2 steps + nprobe=4 at
     0.58/0.60 — same recall, but a second step doubles clustering cost
-    for all three cell-sharing keys, so the probe dial won (see
-    :func:`_ivf_cells_ctes`).  The mean is engine-portable
+    for all three cell-sharing keys, so the probe dial won.  The mean
+    is engine-portable
     by the repo's float discipline: exact decimal(28,10) sums (merge-
     order-independent), ONE double division, round(·, 9) — mirrored
     verbatim in the oracle.  Refinement cost at scale: posexplode
@@ -2146,16 +1957,9 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_HIER_CELL = 64  # constant stride: E[cell] ≈ 64 for ANY corpus size
 
 
-def _ivf_hier_ctes(
-    steps: int = _IVF_LLOYD_STEPS, target_cell: int = _IVF_HIER_CELL
-) -> str:
-    """DuckDB twin of :func:`_ivf_cells` ON THE KNOB PATH — the
-    two-level coarse-quantizer assign replayed verbatim in SQL, so the
-    configuration a 100 TB deployment actually runs (constant-stride
-    seeds + hierarchical assign, the only linear regime measured at
-    ×100 — PERF.md round 10) is value-checked by the oracle sweep, not
-    just property/plan tests.  Per assign round r over centroid table
-    cents{r} (cents0 = the constant-stride seeds):
+def _ivf_hier_assign_ctes(r: int) -> list[str]:
+    """Round r's two-level assign over the centroid table ``cents{r}``:
+    the SQL twin of :func:`_ivf_assign_hier`.
 
     - ``g{r}``    — ceil(√nlist), the super-group width;
     - ``sup{r}``  — every g-th centroid in portable-hash rank order
@@ -2169,40 +1973,21 @@ def _ivf_hier_ctes(
       super lands one cell over — the deliberate trade the knob makes
       for N×2√nlist assign work instead of N×nlist).
 
-    Between rounds the Lloyd mean is the shared exact-decimal /
-    round(·, 9) discipline of ``_ivf_cells_ctes``.  Every ranking
-    orders by (round(dot, 6) DESC, id ASC) — identical tie-breaks to
-    the Spark ``max_by(struct(d, -id))`` argmaxes."""
-    s = int(max(1, target_cell))
-    ctes = [
-        """e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    )""",
-        f"""cents0 AS (
-      SELECT vec_id AS cid, v AS cv FROM e
-      WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 12))::BIGINT
-              % {s} = 0
-    )""",
-    ]
-    for r in range(steps + 1):
-        ctes.append(
-            f"""g{r} AS (
+    Every ranking orders by (round(dot, 6) DESC, id ASC) — identical
+    tie-breaks to the Spark ``max_by(struct(d, -id))`` argmaxes."""
+    return [
+        f"""g{r} AS (
       SELECT CAST(ceil(sqrt(greatest(1, count(*)))) AS BIGINT) AS g
       FROM cents{r}
-    )"""
-        )
-        ctes.append(
-            f"""sup{r} AS (
+    )""",
+        f"""sup{r} AS (
       SELECT cid AS sid, cv AS sv FROM (
         SELECT cid, cv, row_number() OVER (
-                 ORDER BY ('0x' || substr(md5(CAST(cid AS VARCHAR)), 1, 12))
-                            ::BIGINT ASC, cid ASC) AS rk
+                 ORDER BY {kmeans.hash48_sql("cid")} ASC, cid ASC) AS rk
         FROM cents{r}), g{r}
       WHERE (rk - 1) % g = 0
-    )"""
-        )
-        ctes.append(
-            f"""csup{r} AS (
+    )""",
+        f"""csup{r} AS (
       SELECT cid, cv, sid FROM (
         SELECT c.cid, c.cv, s.sid,
                row_number() OVER (PARTITION BY c.cid
@@ -2210,10 +1995,8 @@ def _ivf_hier_ctes(
                           s.sid) AS rn
         FROM cents{r} c CROSS JOIN sup{r} s)
       WHERE rn = 1
-    )"""
-        )
-        ctes.append(
-            f"""vsup{r} AS (
+    )""",
+        f"""vsup{r} AS (
       SELECT vec_id, sid FROM (
         SELECT e.vec_id, s.sid,
                row_number() OVER (PARTITION BY e.vec_id
@@ -2221,10 +2004,8 @@ def _ivf_hier_ctes(
                           s.sid) AS rn
         FROM e CROSS JOIN sup{r} s)
       WHERE rn = 1
-    )"""
-        )
-        ctes.append(
-            f"""cells{r} AS (
+    )""",
+        f"""cells{r} AS (
       SELECT vec_id, cell FROM (
         SELECT e.vec_id, c.cid AS cell,
                row_number() OVER (PARTITION BY e.vec_id
@@ -2232,17 +2013,31 @@ def _ivf_hier_ctes(
                           c.cid) AS rn
         FROM e JOIN vsup{r} vs USING (vec_id) JOIN csup{r} c USING (sid))
       WHERE rn = 1
+    )""",
+    ]
+
+
+def _ivf_hier_ctes() -> str:
+    """DuckDB twin of :func:`_ivf_cells` ON THE KNOB PATH — constant-
+    stride seeds and the two-level coarse-quantizer assign replayed
+    verbatim in SQL, so the configuration a 100 TB deployment actually
+    runs (the only linear regime measured at ×100 — PERF.md round 10)
+    is value-checked by the oracle sweep, not just property/plan tests.
+    The same ``kmeans`` chain as ``_ivf_cells_ctes`` with
+    :func:`_ivf_hier_assign_ctes` as the assign; ends in e/cents/cells
+    plus the last round's ``sup``/``csup``, which the two-level PROBE
+    ranks through (round-13)."""
+    ctes = [
+        """e AS (
+      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     )"""
-        )
-        if r < steps:
-            ctes.extend(_lloyd_mean_ctes(f"cells{r}", r + 1))
-    ctes.append(f"cents AS (SELECT * FROM cents{steps})")
-    ctes.append(f"cells AS (SELECT * FROM cells{steps})")
-    # the FINAL round's super structures, re-exported under step-count-
-    # agnostic names: the two-level PROBE (round-13) ranks through
-    # exactly the supers/centroid-groups the final assign used
-    ctes.append(f"sup AS (SELECT * FROM sup{steps})")
-    ctes.append(f"csup AS (SELECT * FROM csup{steps})")
+    ]
+    ctes += kmeans.seed_ctes("cents0", "e", "v", stride=_IVF_HIER_CELL)
+    ctes += kmeans.lloyd_ctes(
+        _ivf_hier_assign_ctes, "e", ["cell"], "v", "cells", "cents", "cv"
+    )
+    ctes.append(f"sup AS (SELECT * FROM sup{kmeans.LLOYD_STEPS})")
+    ctes.append(f"csup AS (SELECT * FROM csup{kmeans.LLOYD_STEPS})")
     return ",\n    ".join(ctes)
 
 
@@ -3151,7 +2946,7 @@ _INGEST_WHERE = (
     # defect in the store round trip, the no-retrain assignment, or
     # the union changes rankings or the audit counts
     oracle=f"""
-    WITH {_ivf_cells_ctes(_IVF_LLOYD_STEPS, where=_INGEST_WHERE)},
+    WITH {_ivf_cells_ctes(where=_INGEST_WHERE)},
     eb AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
       WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 13, 12))::BIGINT

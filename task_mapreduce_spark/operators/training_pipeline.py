@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import dsum, sql_dsum
-from task_mapreduce_spark.operators.llm_extras import _ANN_N_QUERIES, _lloyd_means
+from task_mapreduce_spark.operators import kmeans
+from task_mapreduce_spark.operators.llm_extras import _ANN_N_QUERIES
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -239,21 +240,27 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 8          # subspaces: dim-64 fixture → 8 dims per subspace
 _PQ_TOP_K = 10
 _PQ_SHORTLIST = 50  # ADC candidates per query fed to the exact rerank
-_PQ_LLOYD_STEPS = 1  # per-subspace k-means rounds over the hash seeds
+
+
+def _pq_d2_sql(a: str, b: str) -> str:
+    """SQL twin of :func:`_pq_d2`: rounded-6 squared L2 between two
+    DOUBLE[] expressions of equal length."""
+    return (
+        f"round(list_sum(list_transform(range(1, len({a}) + 1),\n"
+        f"                    i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), 6)"
+    )
 
 
 def _pq_assign_ctes(src: str, r: int, p: str = "") -> list[str]:
     """One PQ assignment pass as DuckDB CTEs ``{p}scored{r}`` and
     ``{p}codes{r}(vec_id, sub, code, err2)``: the rounded-6 squared L2
-    from each slice of ``src(vec_id, sub, dsub, sv)`` to each codeword
-    of ``{p}cs{r}(cid, sub, csl)`` in its subspace, argmin tie-broken
-    by codeword id.  The SQL twin of :func:`_pq_assign`."""
+    from each slice of ``src(vec_id, sub, sv)`` to each codeword of
+    ``{p}cs{r}(cid, sub, csl)`` in its subspace, argmin tie-broken by
+    codeword id.  The SQL twin of :func:`_pq_assign`."""
     return [
         f"""{p}scored{r} AS (
       SELECT {src}.vec_id, {src}.sub, c.cid,
-             round(list_sum(list_transform(range(1, {src}.dsub + 1),
-                    i -> ({src}.sv[i] - c.csl[i]) * ({src}.sv[i] - c.csl[i]))), 6)
-               AS d2
+             {_pq_d2_sql(f"{src}.sv", "c.csl")} AS d2
       FROM {src} JOIN {p}cs{r} c USING (sub)
     )""",
         f"""{p}codes{r} AS (
@@ -267,41 +274,21 @@ def _pq_assign_ctes(src: str, r: int, p: str = "") -> list[str]:
     ]
 
 
-def _pq_mean_ctes(src: str, r: int, p: str = "") -> list[str]:
-    """One PQ codebook update as DuckDB CTEs ``{p}elems{r}``,
-    ``{p}means{r}`` and ``{p}cs{r}(cid, sub, csl)``: each codeword
-    becomes the element-wise mean of the ``src`` slices that
-    ``{p}codes{r-1}`` assigned to it (exact decimal sum, one double
-    division, round 9; parallel unnests zip).  The SQL twin of
-    :func:`_pq_lloyd_step`'s mean."""
-    return [
-        f"""{p}elems{r} AS (
-      SELECT c.sub, c.code, unnest({src}.sv) AS val,
-             unnest(range(len({src}.sv))) AS idx
-      FROM {p}codes{r - 1} c
-      JOIN {src} ON {src}.vec_id = c.vec_id AND {src}.sub = c.sub
-    )""",
-        f"""{p}means{r} AS (
-      SELECT sub, code, idx,
-             round(CAST(SUM(CAST(val AS DECIMAL(28,10))) AS DOUBLE)
-                     / COUNT(*), 9) AS m
-      FROM {p}elems{r} GROUP BY sub, code, idx
-    )""",
-        f"""{p}cs{r} AS (
-      SELECT code AS cid, sub, list(m ORDER BY idx) AS csl
-      FROM {p}means{r} GROUP BY sub, code
-    )""",
-    ]
+def _pq_lloyd_ctes(src: str, p: str = "") -> list[str]:
+    """The PQ trainer chain over the slices ``src(vec_id, sub, sv)`` from
+    the seed codebook ``{p}cs0``: ``kmeans.lloyd_ctes`` with
+    :func:`_pq_assign_ctes`, ending in ``{p}cs`` and ``{p}codes``."""
+    return kmeans.lloyd_ctes(
+        lambda r: _pq_assign_ctes(src, r, p),
+        src, ["sub", "code"], "sv", f"{p}codes", f"{p}cs", "csl",
+    )
 
 
-def _pq_ctes(steps: int = _PQ_LLOYD_STEPS, target_k: int | None = None) -> str:
+def _pq_ctes(target_k: int | None = None) -> str:
     """Shared PQ construction as a DuckDB CTE chain ending in
-      ev(vec_id, sub, dsub, sv)      — per-subspace vector slices
+      ev(vec_id, sub, sv)            — per-subspace vector slices
       cs(cid, sub, csl)              — the FINAL per-subspace codebooks
       codes(vec_id, sub, code, err2) — the encoded corpus
-    (step-count-agnostic names, so downstream oracle SQL never changes
-    when ``steps`` does — the `_ivf_cells_ctes` discipline, including
-    the steps=0 case where the final codebook IS the sliced seeds),
     mirrored 1:1 by the Spark-side :func:`_pq_encode`.  Both
     embedding_pq (the encoder) and sim_search_pq (the ADC search over
     the codes) build on the SAME chain, so the two keys can never
@@ -313,56 +300,22 @@ def _pq_ctes(steps: int = _PQ_LLOYD_STEPS, target_k: int | None = None) -> str:
     portable, but encode work N·M·√N = N^1.5.  Passing ``target_k=K``
     derives the stride as floor(N/K) instead, pinning the codebook
     size to ≈K CONSTANT as the corpus grows — real PQ's K=256 regime,
-    where encoding is strictly LINEAR in N.  Each Lloyd step replaces
-    every codeword with the element-wise mean of the slices assigned
-    to it (exact decimal sum → one deterministic double division →
-    round 9; parallel unnests zip in DuckDB), then re-assigns."""
-    if target_k is None:
-        stride_expr = (
-            "greatest(1, CAST(floor(count(*) / greatest(1, "
-            "ceil(sqrt(count(*))))) AS BIGINT))"
-        )
-    else:
-        stride_expr = (
-            f"greatest(1, CAST(floor(count(*) / {int(target_k)}) AS BIGINT))"
-        )
+    where encoding is strictly LINEAR in N.  Training is the ``kmeans``
+    chain over the slices."""
     ctes = [
         """e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    )""",
-        f"""p AS (
-      SELECT {stride_expr} AS stride
-      FROM e
-    )""",
-        """seeds AS (
-      SELECT vec_id AS cid, v AS cv FROM e, p
-      WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 12))::BIGINT
-              % p.stride = 0
-    )""",
-        f"subs AS (SELECT unnest(range({_PQ_M})) AS sub)",
-        f"""ev AS (
-      SELECT e.vec_id, s.sub, len(e.v) // {_PQ_M} AS dsub,
-             list_slice(e.v, s.sub * (len(e.v) // {_PQ_M}) + 1,
-                        (s.sub + 1) * (len(e.v) // {_PQ_M})) AS sv
-      FROM e CROSS JOIN subs s
-    )""",
-        f"""cs0 AS (
-      SELECT c.cid, s.sub,
-             list_slice(c.cv, s.sub * (len(c.cv) // {_PQ_M}) + 1,
-                        (s.sub + 1) * (len(c.cv) // {_PQ_M})) AS csl
-      FROM seeds c CROSS JOIN subs s
-    )""",
+    )"""
     ]
+    ctes += kmeans.seed_ctes("seeds", "e", "v", k=target_k)
+    ctes += [
+        kmeans.slice_cte("ev", "e", ["vec_id"], "v", "sv", _PQ_M),
+        kmeans.slice_cte("cs0", "seeds", ["cid"], "cv", "csl", _PQ_M),
+    ]
+    return ",\n    ".join(ctes + _pq_lloyd_ctes("ev"))
 
-    ctes += _pq_assign_ctes("ev", 0)
-    for r in range(1, steps + 1):
-        ctes += _pq_mean_ctes("ev", r) + _pq_assign_ctes("ev", r)
-    ctes.append(f"cs AS (SELECT * FROM cs{steps})")
-    ctes.append(f"codes AS (SELECT * FROM codes{steps})")
-    return ",\n    ".join(ctes)
 
-
-_PQ_CTES = _pq_ctes(_PQ_LLOYD_STEPS)
+_PQ_CTES = _pq_ctes()
 
 
 @register(
@@ -391,7 +344,8 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing, scoring and the argmin end to end.  Distances are squared
     L2 over the dsub-element slices, rounded to 6 before the argmin
     (the cosine-family float discipline; ties broken by codeword id —
-    seed vectors therefore encode to themselves with err2 = 0).
+    against the seed codebook every seed vector therefore encodes to
+    itself with err2 = 0).
 
     Shape: the slice explosion is in-row (size-preserving sequence —
     the safe Generate case); the sliced frame is EAGERLY checkpointed
@@ -406,7 +360,7 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``target_k=K`` knob pins the codebook size CONSTANT instead (real
     PQ's K = 256 regime, which makes encoding strictly LINEAR in N —
     the PQ twin of ``_ivf_cells(target_cell=...)``, property-tested).
-    ``_PQ_LLOYD_STEPS`` per-subspace Lloyd rounds refine the seed
+    ``kmeans.LLOYD_STEPS`` per-subspace Lloyd rounds refine the seed
     codebooks (the production lever on shortlist quality)."""
     codes, _, _ = _pq_encode(spark, sf_dir)
     return codes.select(
@@ -438,38 +392,13 @@ def _pq_slices(
     """Spark twin of ``_pq_ctes`` up to (ev, cs0): the per-subspace
     vector slices (vec_id, sub, sv) — EAGERLY checkpointed per the
     HOF-collapse defense (CLAUDE.md) — and the hash-order SEED codebook
-    slices (cid, sub, csl).  ``target_k`` derives the seed stride as
+    slices (cid, sub, csl), lazy: the first Lloyd assign's broadcast is
+    their one consumer.  ``target_k`` derives the seed stride as
     floor(N/K) instead of the √N rule, pinning the codebook size to ≈K
     constant as the corpus grows (see :func:`_pq_ctes`)."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    if target_k is None:
-        params = e.agg(F.count(F.lit(1)).alias("n")).select(
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.floor(
-                    F.col("n") / F.greatest(F.lit(1.0), F.ceil(F.sqrt("n")))
-                ).cast("long"),
-            ).alias("stride")
-        )
-    else:
-        params = e.agg(F.count(F.lit(1)).alias("n")).select(
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.floor(F.col("n") / F.lit(int(target_k))).cast("long"),
-            ).alias("stride")
-        )
-    id_hash = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 12), 16, 10
-    ).cast("long")
-    seeds = (
-        e.crossJoin(F.broadcast(params))
-        .filter(id_hash % F.col("stride") == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    )
-    dsub = F.expr(f"size(v) div {_PQ_M}")
-    sub_ids = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("sub")
     # explicit-COUNT round-robin repartition before the checkpoint: the
     # slice frame inherits the parquet scan's partitioning (1-2 tasks at
     # fixture scale), and every downstream scoring join is tiny in BYTES
@@ -478,26 +407,10 @@ def _pq_slices(
     # from AQE coalescing, so the assigns actually fan out (x10 stress:
     # the whole encode ran on 2 tasks before this).
     par = spark.sparkContext.defaultParallelism
-    ev = (
-        e.select("vec_id", "v", sub_ids)
-        .select(
-            "vec_id",
-            "sub",
-            F.slice("v", F.col("sub") * dsub + 1, dsub).alias("sv"),
-        )
-        .repartition(par)
-        .localCheckpoint()
-    )
-    dsub_c = F.expr(f"size(cv) div {_PQ_M}")
-    cs = (
-        seeds.select("cid", "cv", sub_ids)
-        .select(
-            "cid",
-            "sub",
-            F.slice("cv", F.col("sub") * dsub_c + 1, dsub_c).alias("csl"),
-        )
-    )
-    return ev, cs
+    ev = kmeans.slices(e, ["vec_id"], "v", "sv", _PQ_M)
+    ev = ev.repartition(par).localCheckpoint()
+    seeds = kmeans.seeds(e, "v", k=target_k)
+    return ev, kmeans.slices(seeds, ["cid"], "cv", "csl", _PQ_M)
 
 
 def _pq_assign(ev: DataFrame, cs: DataFrame):
@@ -509,7 +422,7 @@ def _pq_assign(ev: DataFrame, cs: DataFrame):
     dragged the slice array through the agg via first(sv), which puts
     an array in the aggregation buffer — ObjectHashAggregate's
     sort-based fallback then SORTS the whole pair stream with the
-    array attached (the same cliff that OOMed _ivf_cells' flat knob
+    array attached (the same cliff that OOMed the IVF flat knob
     assign at ×100, round 10).  A consumer that needs the slice joins
     it back from the checkpointed ``ev`` on (vec_id, sub)."""
     scored = ev.join(F.broadcast(cs), "sub").select(
@@ -527,12 +440,14 @@ def _pq_assign(ev: DataFrame, cs: DataFrame):
     )
 
 
-def _pq_encode(
-    spark: SparkSession,
-    sf_dir: str,
-    lloyd_steps: int = _PQ_LLOYD_STEPS,
-    target_k: int | None = None,
-):
+def _pq_lloyd(ev: DataFrame, cs: DataFrame):
+    """The PQ trainer: ``kmeans.lloyd`` over the slices ``ev(vec_id,
+    sub, sv)`` from the seed codebook ``cs(cid, sub, csl)`` with
+    :func:`_pq_assign`.  Returns ``(codes, codebook)``."""
+    return kmeans.lloyd(ev, cs, _pq_assign, ["sub", "code"], "sv", "csl")
+
+
+def _pq_encode(spark: SparkSession, sf_dir: str, target_k: int | None = None):
     """The ONE PQ construction both registered keys consume: returns
     (codes, ev, cs) — the encoded corpus, the checkpointed slice frame,
     and the FINAL per-subspace codebooks — off a SINGLE slice
@@ -540,36 +455,16 @@ def _pq_encode(
     _pq_slices beside embedding_pq's, a redundant linear job).
 
     Checkpoint discipline (all measured cliffs, CLAUDE.md): ``ev`` is
-    checkpointed in _pq_slices (HOF-collapse defense); the codebook is
-    checkpointed because a BROADCAST subtree re-executes its whole
-    child plan per consuming job (encode assign + sim_search_pq's ADC
-    lookup table = 2 consumers); each Lloyd step checkpoints the
-    assignment before the posexplode mean (Generate over a live
-    hash-aggregate is a measured 40× cliff).  Per step the shuffle
-    carries N·M (slice + code) rows — the same working set as the
-    encode itself; codebook state is M·nlist rows, never a second
-    corpus copy."""
+    checkpointed in _pq_slices (HOF-collapse defense); the trainer
+    checkpoints each round's assignment and codebook (``kmeans.lloyd``)
+    — the final codebook has two consumers (encode assign +
+    sim_search_pq's ADC lookup table).  Per round the shuffle carries
+    N·M (slice + code) rows — the same working set as the encode
+    itself; codebook state is M·nlist rows, never a second corpus
+    copy."""
     ev, cs = _pq_slices(spark, sf_dir, target_k)
-    cs = cs.localCheckpoint()
-    for _ in range(lloyd_steps):
-        cs = _pq_lloyd_step(ev, cs)
-    return _pq_assign(ev, cs), ev, cs
-
-
-def _pq_lloyd_step(ev: DataFrame, cs: DataFrame) -> DataFrame:
-    """One per-subspace Lloyd round over the slices ``ev(vec_id, sub,
-    sv)``: assign against ``cs``, then replace each codeword with the
-    mean of its slices (:func:`_lloyd_means`).  Returns the new
-    codebook (cid, sub, csl), checkpointed.  Both checkpoints are
-    measured cliffs: the assignment's guards the posexplode mean, the
-    codebook's stops each consuming broadcast from re-running the
-    round (see :func:`_pq_encode`)."""
-    cur = _pq_assign(ev, cs).join(ev, ["vec_id", "sub"]).localCheckpoint()
-    return (
-        _lloyd_means(cur, ["sub", "code"], "sv")
-        .select(F.col("code").alias("cid"), "sub", F.col("sv").alias("csl"))
-        .localCheckpoint()
-    )
+    codes, cs = _pq_lloyd(ev, cs)
+    return codes, ev, cs
 
 
 def _pq_rerank_sql(audit: str = "") -> str:
@@ -588,9 +483,7 @@ def _pq_rerank_sql(audit: str = "") -> str:
     ),
     rerank AS (
       SELECT s.query_id, s.vec_id, s.adc_dist,
-             round(list_sum(list_transform(range(1, len(ec.v) + 1),
-                    i -> (ec.v[i] - eq.v[i]) * (ec.v[i] - eq.v[i]))), 6)
-               AS dist
+             {_pq_d2_sql("ec.v", "eq.v")} AS dist
       FROM short s
       JOIN e ec ON ec.vec_id = s.vec_id
       JOIN e eq ON eq.vec_id = s.query_id
@@ -612,14 +505,12 @@ def _pq_search_oracle(ctes: str, audit: str = "") -> str:
     return f"""
     WITH {ctes},
     q AS (
-      SELECT vec_id AS query_id, sub, dsub, sv FROM ev
+      SELECT vec_id AS query_id, sub, sv FROM ev
       WHERE vec_id < {_ANN_N_QUERIES}
     ),
     dt AS (
       SELECT q.query_id, cs.sub, cs.cid,
-             round(list_sum(list_transform(range(1, q.dsub + 1),
-                    i -> (q.sv[i] - cs.csl[i]) * (q.sv[i] - cs.csl[i]))), 6)
-               AS d2
+             {_pq_d2_sql("q.sv", "cs.csl")} AS d2
       FROM q JOIN cs USING (sub)
     ),
     adc AS (
@@ -644,12 +535,12 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the index holds M codes per vector, ~8 B instead of 256 B; raw
     vectors are fetched only for the ~50 shortlisted candidates per
     query).  Measured recall@10 vs exact L2 with ONE per-subspace Lloyd
-    round (``_PQ_LLOYD_STEPS``, round 9): 0.56 at sf0.001, 0.68 at
+    round (``kmeans.LLOYD_STEPS``, round 9): 0.56 at sf0.001, 0.68 at
     sf0.01 — the untrained seed codebooks sat at 0.62/0.52, so the
     round bought +0.16 at the driver's correctness scale; ADC alone
     sits at 0.16–0.20, which is exactly why real deployments ALWAYS
     rerank.  More Lloyd rounds remain the production lever on the
-    shortlist side (the dial is parameterized on both engines).
+    shortlist side.
 
     Shape: per query one M×nlist ADC lookup TABLE from the query's
     exact slices to every codeword (|queries|·M·nlist rows — the
@@ -767,7 +658,7 @@ _PQ_CONST_K = 32  # constant per-subspace codebook size (production: 256)
 
 @register(
     "sim_search_pq_const",
-    oracle=_pq_search_oracle(_pq_ctes(_PQ_LLOYD_STEPS, target_k=_PQ_CONST_K)),
+    oracle=_pq_search_oracle(_pq_ctes(target_k=_PQ_CONST_K)),
 )
 def sim_search_pq_const(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ search in the CONSTANT-CODEBOOK configuration — the regime

@@ -815,24 +815,23 @@ def test_two_level_assign_engages_on_knob_path(spark, sf_dir):
     # route through the two-level coarse-quantizer assign — the flat
     # arm measured 412.7 s vs 62.3 s at x100 — while the registered
     # keys keep the flat assign their oracles replay verbatim
+    from task_mapreduce_spark.operators import kmeans
     from task_mapreduce_spark.operators.llm_extras import (
-        _ivf_assign_topology,
+        _ivf_assign,
+        _ivf_assign_hier,
         _ivf_cells,
         _normed_vectors,
     )
     from task_mapreduce_spark.tables import load
-
-    assert _ivf_assign_topology(None) == "flat"
-    for s in (1, 8, 4096):
-        assert _ivf_assign_topology(s) == "two_level"
 
     # topology shows in the analyzed plan: the two-level assign ranks
     # centroids under supers and vectors under supers before the final
     # within-group argmax, so it carries MORE max_by aggregates than
     # the flat arm's single one (per assign round)
     e = _normed_vectors(load(spark, sf_dir, "embeddings"))
-    flat, _ = _ivf_cells(e, lloyd_steps=0)
-    hier, _ = _ivf_cells(e, lloyd_steps=0, target_cell=8)
+    seeds8 = kmeans.seeds(e, "v", stride=8)
+    flat = _ivf_assign(e, kmeans.seeds(e, "v"))
+    hier = _ivf_assign_hier(e, seeds8)
 
     def n_maxby(df) -> int:
         return str(df._jdf.queryExecution().analyzed()).count("max_by")
@@ -842,12 +841,16 @@ def test_two_level_assign_engages_on_knob_path(spark, sf_dir):
         "knob path lost the two-level assign — the x100 flat-assign "
         "cliff (412.7 s) is back"
     )
+    # and _ivf_cells picks the assign from target_cell: its final assign
+    # round is live in the analyzed tree (earlier rounds are
+    # checkpoint-truncated)
+    assert n_maxby(_ivf_cells(e)[0]) == 1
+    assert n_maxby(_ivf_cells(e, target_cell=8)[0]) >= 3
 
     # and the knob assignment is still a TOTAL function onto real cells
     n = e.count()
     assert hier.count() == n
-    cents_ids = {r["cid"] for r in _ivf_cells(
-        e, lloyd_steps=0, target_cell=8)[1].collect()}
+    cents_ids = {r["cid"] for r in seeds8.collect()}
     cells = {r["cell"] for r in hier.select("cell").distinct().collect()}
     assert cells <= cents_ids
 
@@ -866,8 +869,9 @@ def test_two_level_assign_engages_on_knob_path(spark, sf_dir):
     non_seed = [v for v in all_ids if h48(v) % 64 != 0][:7]
     tiny_ids = set(non_seed + seed_ids[:1])
     tiny = e.filter(F.col("vec_id").isin(*tiny_ids))
-    hier1, cents1 = _ivf_cells(tiny, lloyd_steps=0, target_cell=64)
+    cents1 = kmeans.seeds(tiny, "v", stride=64)
     assert cents1.count() == 1, "expected exactly one seed"
+    hier1 = _ivf_assign_hier(tiny, cents1)
     got = hier1.select("vec_id", "cell").collect()
     assert len(got) == len(tiny_ids), (
         "g=1 super selection dropped assignments — the rk%g==1 "
@@ -991,8 +995,10 @@ def _jobs_in_group(spark, group: str, action) -> int:
 # runtime join conversion by a job.  A stray count() or checkpoint in a
 # shared stage fails: inside the min-propagation kernel it costs a job
 # every round (a per-round count() took graph_bfs to 17), and inside a
-# PQ stage (encode, Lloyd round, ADC serve, rerank) it costs a job in
-# every ANN key that runs the stage, more in the scoreboards; inside
+# k-means trainer (operators/kmeans.py: every IVF cell, PQ codebook and
+# IVF-PQ residual codebook construction) or a PQ stage (encode, ADC
+# serve, rerank) it costs a job in every ANN key that runs the stage,
+# more in the scoreboards; inside
 # the merge commit path it costs jobs on every commit (a stray batch
 # count() in _merge_apply took sink_merge_history to 27).
 _BUILD_JOB_CEILING = {
@@ -1001,13 +1007,19 @@ _BUILD_JOB_CEILING = {
     "dedup_eval_ari": (32, 2),
     "dedup_resolve_best": (14, 2),
     "dedup_cluster_incremental": (27, 2),
-    "embedding_pq": (12, 2),
-    "sim_search_pq": (12, 2),
-    "sim_search_pq_const": (12, 2),
-    "pq_index_persist": (16, 2),
+    "embedding_pq": (11, 2),
+    "sim_search_pq": (11, 2),
+    "sim_search_pq_const": (11, 2),
+    "pq_index_persist": (15, 2),
     "sim_search_ivfpq": (45, 2),
-    "sim_eval_recall_multi": (23, 2),
-    "sim_eval_recall_deploy": (57, 2),
+    "sim_eval_recall_multi": (22, 2),
+    "sim_eval_recall_deploy": (56, 2),
+    "sim_search_ivf": (11, 2),
+    "sim_search_ivf_hier": (23, 2),
+    "mine_hard_negatives": (18, 2),
+    "dedup_semantic": (17, 2),
+    "sim_index_persist": (17, 2),
+    "sim_index_ingest": (18, 2),
     "sink_compact": (3, 2),
     "cdc_upsert": (0, 2),
     "sink_merge_upsert": (10, 2),

@@ -5,6 +5,7 @@ can't (they only check the specific registered queries)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -782,42 +783,48 @@ def test_embedding_pq_matches_pure_python_reference(spark, tmp_path, vecs):
     assert got == want
 
 
-def test_ivf_ctes_steps0_runnable_and_matches_spark(spark, oracle, sf_dir):
-    # the parameterized Lloyd dial must stay SYMMETRIC across engines at
-    # every step count it accepts: _ivf_cells(lloyd_steps=0) falls back
-    # to the hash-order seeds, and _ivf_cells_ctes(0) must emit runnable
-    # SQL whose final cells are the same assignment (round-8 ADVICE: the
-    # steps=0 CTE chain referenced an undefined cents0).
+@pytest.mark.parametrize("chain", ["ivf", "pq"])
+def test_seed_stage_matches_sql(spark, oracle, sf_dir, chain):
+    # the trainer's seed stage is the same on both engines: the Spark
+    # seed rule + assign equals the SQL chain's round-0 assignment
+    # (cells0 / codes0), and the seed centroids count the same
+    from task_mapreduce_spark.operators import kmeans
     from task_mapreduce_spark.operators.llm_extras import (
-        _ivf_cells,
-        _ivf_cells_ctes,
+        _IVF_CELLS_CTES,
+        _ivf_assign,
         _normed_vectors,
+    )
+    from task_mapreduce_spark.operators.training_pipeline import (
+        _PQ_CTES,
+        _pq_assign,
+        _pq_slices,
     )
     from task_mapreduce_spark.tables import load
 
-    assigned, cents = _ivf_cells(
-        _normed_vectors(load(spark, sf_dir, "embeddings")), lloyd_steps=0
-    )
-    got = {(r["vec_id"], r["cell"]) for r in assigned.collect()}
-    sql = f"WITH {_ivf_cells_ctes(0)} SELECT vec_id, cell FROM cells"
-    want = set(map(tuple, oracle.execute(sql).fetchall()))
-    assert got == want
-    # and the steps=0 centroids ARE the seeds on both sides
-    n_seeds = oracle.execute(
-        f"WITH {_ivf_cells_ctes(0)} SELECT count(*) FROM cents"
-    ).fetchone()[0]
-    assert cents.count() == n_seeds
+    if chain == "ivf":
+        e = _normed_vectors(load(spark, sf_dir, "embeddings"))
+        seeds = kmeans.seeds(e, "v")
+        got = _ivf_assign(e, seeds).select("vec_id", "cell")
+        ctes, asn0, seeds0 = _IVF_CELLS_CTES, "vec_id, cell FROM cells0", "cents0"
+    else:
+        ev, seeds = _pq_slices(spark, sf_dir)
+        got = _pq_assign(ev, seeds).select("vec_id", "sub", "code", "err2")
+        ctes, asn0, seeds0 = _PQ_CTES, "vec_id, sub, code, err2 FROM codes0", "cs0"
+    want = set(map(tuple, oracle.execute(f"WITH {ctes} SELECT {asn0}").fetchall()))
+    assert {tuple(r) for r in got.collect()} == want
+    n_seeds = oracle.execute(f"WITH {ctes} SELECT count(*) FROM {seeds0}").fetchone()[0]
+    assert seeds.count() == n_seeds
 
 
 def test_pq_constant_codebook_knob_keeps_k_flat(spark):
-    # the constant-codebook linearization knob (_pq_encode(target_k=K),
+    # the constant-codebook linearization knob (_pq_slices(target_k=K),
     # the PQ twin of _ivf_cells(target_cell=)): with the seed stride
     # derived as floor(N/K), the codebook size stays ≈K as the corpus
     # grows ×10 — so encode work N·M·K is LINEAR in N, real PQ's K=256
     # regime.  Checked with SPARSE NON-DENSE ids (the id regime the
     # hash-order seed rule exists for); default √N rule shown to grow
     # alongside as the contrast.
-    from task_mapreduce_spark.operators.training_pipeline import _pq_encode
+    from task_mapreduce_spark.operators.training_pipeline import _pq_slices
 
     import os
     import tempfile
@@ -838,8 +845,8 @@ def test_pq_constant_codebook_knob_keeps_k_flat(spark):
         emb.coalesce(1).write.mode("overwrite").parquet(
             f"{tmp}/embeddings.parquet"
         )
-        _, _, cs_knob = _pq_encode(spark, tmp, lloyd_steps=0, target_k=k)
-        _, _, cs_sqrt = _pq_encode(spark, tmp, lloyd_steps=0)
+        _, cs_knob = _pq_slices(spark, tmp, target_k=k)
+        _, cs_sqrt = _pq_slices(spark, tmp)
         return (
             cs_knob.select("cid").distinct().count(),
             cs_sqrt.select("cid").distinct().count(),

@@ -338,12 +338,14 @@ def test_embedding_pq_invariants(spark, sf_dir):
     # codeword IDS are preserved through Lloyd refinement (empty
     # codewords drop), so codes stay a subset of the hash-order seeds
     assert codes <= seeds
-    # at steps=0 a seed vector's own slice is at distance 0 (the
-    # self-encode identity the codebook rule rests on) ...
-    from task_mapreduce_spark.operators.training_pipeline import _pq_encode
+    # against the seed codebook a seed vector's own slice is at distance
+    # 0 (the self-encode identity the codebook rule rests on) ...
+    from task_mapreduce_spark.operators.training_pipeline import (
+        _pq_assign,
+        _pq_slices,
+    )
 
-    codes0, _, _ = _pq_encode(spark, sf_dir, lloyd_steps=0)
-    rows0 = codes0.collect()
+    rows0 = _pq_assign(*_pq_slices(spark, sf_dir)).collect()
     by_vec0 = {}
     for r in rows0:
         by_vec0.setdefault(r["vec_id"], []).append(r)
