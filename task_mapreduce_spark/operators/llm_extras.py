@@ -542,12 +542,33 @@ def sim_join_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min-propagation fixpoint kernel (connected components, BFS)
 # ---------------------------------------------------------------------------
 
-# Row budget under which a round broadcasts its (id, value) join side
-# (≈ 4 MB as a hashed relation) instead of shuffling it and the edge
-# list, and under which a round's whole input (state plus at most one
-# push row per edge) runs in one partition; the counts are exact, from
-# Observations on the edge checkpoint and on the last round.
+# Row budget under which a round runs as one job in one partition — its
+# whole input, state plus at most one push row per edge, and both of its
+# joins — and under which a larger round broadcasts its (id, value) join
+# side (≈ 4 MB as a hashed relation) instead of shuffling it and the
+# edge list; the counts are exact, from Observations on the edge
+# checkpoint and on the last round.
 _PROPAGATE_BCAST_ROWS = 250_000
+
+
+def _one_partition(df: DataFrame, bound: int) -> DataFrame:
+    """``df`` coalesced to one partition, limited to ``bound`` rows — an
+    observed count of at least ``df``'s rows, so the limit drops nothing.
+    The limit is there for its statistics.  A one-partition join child
+    satisfies the join's distribution, but Spark's EnsureRequirements
+    re-shuffles it into ``spark.sql.shuffle.partitions`` when its
+    ESTIMATED size is over ``spark.sql.maxSinglePartitionBytes``
+    (128 MB), and a ``localCheckpoint`` inherits its source plan's
+    estimate (sf0.01's BFS edge list: 97 k rows, estimated at 20.3 GiB).
+    A Limit's estimate is its bound times the row width.
+
+    A Limit's generated code names its row counter with a process-wide
+    id, so it misses the codegen cache: every run compiles it afresh and
+    runs it cold.  The Coalesce under it keeps the limit in a small
+    stage of its own; fused into an aggregate, it recompiled that
+    aggregate every round (graph_bfs rounds about 0.11 → 0.17 s at
+    sf0.01)."""
+    return df.coalesce(1).limit(bound)
 
 
 def min_propagate(
@@ -581,15 +602,17 @@ def min_propagate(
     can leave partial metrics).  The loop stops at 0 changed rows or
     after ``max_rounds``; the caller decides if the cap is an error.
 
-    A checkpoint keeps no hash layout under AQE (graph.py module
-    docstring), so a shuffled join re-shuffles the edge list every
-    round: rounds broadcast the frontier, and the hop side, while the
-    last round's exact row count is within ``_PROPAGATE_BCAST_ROWS``.
-    A round whose input is provably within that budget — the last
-    round's row count plus the edge count, as a push row crosses one
-    edge — coalesces ``state ∪ push`` to one partition, so the aggregate
-    plans no Exchange and AQE runs no shuffle-map job.  Round 0 stays
-    shuffled: its state's row count is never observed.
+    A round whose input is provably within ``_PROPAGATE_BCAST_ROWS`` —
+    the last round's row count plus the edge count — runs as one job:
+    the push join (edges ⋈ frontier), ``state ∪ push`` and the
+    pointer-jump self-join all run in one partition
+    (:func:`_one_partition`), so the round plans no Exchange and no
+    BroadcastExchange.  A larger round shuffles, and as a checkpoint
+    keeps no hash layout under AQE (graph.py module docstring), a
+    shuffled join re-shuffles the edge list every round: such a round
+    broadcasts the frontier, and the hop side, while the last round's
+    exact counts are within the budget.  Round 0 stays shuffled: its
+    state's row count is never observed.
 
     Precondition: a reached endpoint that is not an ``id`` of ``state``
     becomes a new row — what BFS wants, and why CC needs every edge
@@ -600,16 +623,23 @@ def min_propagate(
     push = push(edges)
     old_type = state.schema["value"].dataType
     state = state.select("id", "value")
-    changed, rows = 0, None
+    changed, rows, small = 0, None, False
     for it in range(max_rounds):
         both = state.select("id", "value", F.col("value").alias("old")).unionByName(
             push.select("id", "value", F.lit(None).cast(old_type).alias("old"))
         )
-        if rows is not None and rows + n_edges <= _PROPAGATE_BCAST_ROWS:
+        if small:
             both = both.coalesce(1)
         cur = both.groupBy("id").agg(
             F.min("value").alias("value"), F.max("old").alias("old")
         )
+        if small:
+            # state ids are unique (grouped by id) and so are the
+            # frontier's, so each edge pushes at most one row: the
+            # aggregate has at most rows + n_edges rows.  Its estimate
+            # then stays small in the checkpoint, for the self-join, the
+            # next round and the caller's plans.
+            cur = _one_partition(cur, rows + n_edges)
         if jump_from is not None and it >= jump_from:
             # In a shuffled round both sides must plan the identical
             # aggregate, or Spark computes the round twice instead of
@@ -617,17 +647,16 @@ def min_propagate(
             # it here matches the isnotnull(j_id) Spark infers for the
             # hop side; least(value, old) == value, but reading ``old``
             # stops column pruning from dropping max(old) on the hop
-            # side only.  A one-partition round has no exchange to
-            # reuse, so its hop side recomputes the aggregate; that
-            # still beats the shuffle job it saves (dedup_cluster_cc
-            # jump rounds, 4 cores, median of 10: 0.22/0.21 s wall
-            # against 0.29/0.27 s shuffled at sf0.01, 0.22/0.19 against
-            # 0.24/0.24 s at sf0.1)
+            # side only.  In a one-partition round both sides are the
+            # same partition, joined in place; the hop side recomputes
+            # the aggregate inside the round's one task.
             cur = cur.filter(F.col("id").isNotNull())
             hop = cur.select(
                 F.col("id").alias("j_id"), F.least("value", "old").alias("j_value")
             )
-            if rows is not None and rows <= _PROPAGATE_BCAST_ROWS:
+            if small:
+                hop = hop.hint("shuffle_hash")
+            elif rows is not None and rows <= _PROPAGATE_BCAST_ROWS:
                 hop = F.broadcast(hop)
             cur = cur.join(hop, F.col("value") == F.col("j_id"), "left").select(
                 "id",
@@ -648,9 +677,14 @@ def min_propagate(
         if changed == 0:
             return state, it + 1, 0
         frontier = cur.filter(is_changed).select(F.col("id").alias("src"), "value")
-        if changed <= _PROPAGATE_BCAST_ROWS:
+        small = rows + n_edges <= _PROPAGATE_BCAST_ROWS
+        out_edges = edges
+        if small:
+            out_edges = _one_partition(edges, n_edges)
+            frontier = _one_partition(frontier, changed).hint("shuffle_hash")
+        elif changed <= _PROPAGATE_BCAST_ROWS:
             frontier = F.broadcast(frontier)
-        push = edges.join(frontier, "src").select(
+        push = out_edges.join(frontier, "src").select(
             F.col("dst").alias("id"), (F.col("value") + step).alias("value")
         )
     return state, max_rounds, changed
@@ -665,10 +699,10 @@ _CC_MAX_ITER = 20
 # Round from which CC rounds pointer-jump (label ← label-of-label): a
 # D-hop chain converges in _CC_PJ_FROM + O(log2 D) rounds instead of D.
 # The fixpoint does not depend on the schedule; 2 saved whole rounds on
-# the fixture graphs.  Re-measured on one-partition rounds (dedup_cluster_cc
-# / dedup_cluster_incremental jobs): 1 gives 16/35 against 2's 18/36 at
-# sf0.01 but 19/44 against 18/42 at sf0.1, and 0 gives 17/37 and 20/46,
-# so 2 stays.
+# the fixture graphs.  Re-measured on one-job rounds (dedup_cluster_cc /
+# dedup_cluster_incremental census jobs): 0, 1 and 2 give 13/24, 12/22
+# and 13/23 at sf0.01 and 14/27, 13/25 and 13/25 at sf0.1; 1 is lower at
+# sf0.01 only, so 2 stays.
 _CC_PJ_FROM = 2
 
 

@@ -56,13 +56,17 @@ def sf_dir():
     return SF_DIR
 
 
-@pytest.fixture(params=["one_partition", "shuffled"])
+@pytest.fixture(params=["one_partition", "broadcast", "shuffled"])
 def round_shape(request, monkeypatch):
-    """Run a fixpoint test under both plans of a ``min_propagate`` round:
+    """Run a fixpoint test under each plan of a ``min_propagate`` round:
     the default row budget, under which every round after the first fits
-    a test graph and runs in one partition, and a zero budget, under
-    which every round shuffles and broadcasts nothing.  Returns the list
-    the round counts of the test's kernel calls are appended to."""
+    a test graph and runs in one partition as one job; a budget of the
+    kernel's edge count, under which no round fits in one partition (it
+    has at least one state row on top of the edges) but every frontier
+    is broadcast (only a node with an edge can change, and each changed
+    node owns an edge row); and a zero budget, under which every round
+    shuffles and broadcasts nothing.  Returns the list the round counts
+    of the test's kernel calls are appended to."""
     from task_mapreduce_spark.operators import llm_extras
 
     if request.param == "shuffled":
@@ -70,8 +74,10 @@ def round_shape(request, monkeypatch):
     rounds: list[int] = []
     kernel = llm_extras.min_propagate
 
-    def counted(*args, **kwargs):
-        out = kernel(*args, **kwargs)
+    def counted(state, edges, *args, **kwargs):
+        if request.param == "broadcast":
+            monkeypatch.setattr(llm_extras, "_PROPAGATE_BCAST_ROWS", edges.count())
+        out = kernel(state, edges, *args, **kwargs)
         rounds.append(out[1])
         return out
 
