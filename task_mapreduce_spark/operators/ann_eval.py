@@ -11,10 +11,6 @@ SQL).  An arm is its registered operator, and the oracle embeds that
 operator's registered SQL verbatim, so the eval can never drift from
 what the operators ship.
 
-Lives in its own module because it composes oracles from llm_extras,
-llm_pipeline, training_pipeline AND ivfpq: it must import after all
-four (see operators/__init__.py's ordering note for curation).
-
 No reference citation is possible: ``/root/reference/`` is an empty
 checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.
 """

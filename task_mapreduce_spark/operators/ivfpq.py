@@ -7,13 +7,11 @@ one-byte-class codes instead of raw floats.
 
 Lives in its own module because it composes the two registered
 constructions — ``_ivf_cells`` (llm_extras) for the coarse level and
-the flat-PQ stages of training_pipeline for the residual level — and
-must import after both (the ann_eval ordering convention in
-operators/__init__.py).  Only the residual slicing, the per-cell
-lookup tables and the cell-aware ADC join are written here; the
-assign (``_pq_assign``), the trainer (``_pq_lloyd``, ``kmeans``' one
-Lloyd loop), the shortlist + rerank (``_pq_rerank``) and their SQL
-emitters are the ones flat PQ runs.
+the flat-PQ stages of training_pipeline for the residual level.  Only
+the residual slicing, the per-cell lookup tables and the cell-aware
+ADC join are written here; the assign (``_pq_assign``), the trainer
+(``_pq_lloyd``, ``kmeans``' one Lloyd loop), the shortlist + rerank
+(``_pq_rerank``) and their SQL emitters are the ones flat PQ runs.
 
 No reference citation is possible: ``/root/reference/`` is an empty
 checkout (SURVEY.md §0); the capability bar is SURVEY.md §2.

@@ -327,20 +327,28 @@ def _dot(a, b):
 # broadcast the build side only while the packed vector table fits
 # (≈ dim·8 B + ids per row, dim measured from the data — a hardcoded
 # dim would silently misestimate if the embeddings table ever ships a
-# different width); above it the plain keyed equi-join takes over — at
-# that scale the cell id is a √N-valued k-means/LSH code, so the keyed
-# shuffle spreads on its own (see sim_join_knn docstring)
+# different width); above it the plain keyed equi-join takes over (see
+# _cell_join_sides)
 _COS_BCAST_BYTES_MAX = 64 << 20
 
 
 def _cell_join_sides(e: DataFrame):
     """(probe_transform, build_transform) for a cell-blocked scoring
-    self-join over the checkpointed normed-vector frame ``e``: while
-    the build side fits `_COS_BCAST_BYTES_MAX` the build is broadcast
-    and the probe round-robin-repartitioned (the few-distinct-cells
-    fixture defense); above the budget both sides pass through
-    untouched and the keyed shuffle handles distribution.  Row count
-    and vector width ride ONE aggregate job over the checkpointed
+    self-join over the checkpointed normed-vector frame ``e``.
+
+    The scoring join is per-row-CPU-heavy, and the FIXTURE has only ~10
+    distinct cell keys: the serialize-killer shape, where a keyed
+    shuffle would confine the dot-product work to ≤ |cells| tasks.
+    Defense as in the minhash/simhash band joins: while the
+    build side fits `_COS_BCAST_BYTES_MAX` it is broadcast and the
+    probe side round-robin ``repartition(par)``-ed, so every core gets
+    an equal scoring slice.  At cluster scale the cell id is a
+    k-means/LSH code with ~√N distinct values, so a keyed shuffle
+    spreads on its own and the plain equi-join (no broadcast — the
+    vector table is |corpus|-sized) is the right plan: above the budget
+    both sides pass through untouched, so an oversized corpus falls
+    back to the keyed join by construction rather than by hope.  Row
+    count and vector width ride ONE aggregate job over the checkpointed
     frame (same cost as the bare count)."""
     n_rows, dim = e.agg(
         F.count(F.lit(1)), F.max(F.size("v"))
@@ -354,16 +362,100 @@ def _cell_join_sides(e: DataFrame):
 
 def _normed_vectors(emb: DataFrame, *extra_cols: str) -> DataFrame:
     """(vec_id, *extra_cols, v: array<double>, nrm) — the ONE embedding
-    projection for the whole cosine family (dedup_embedding,
-    sim_join_knn, sim_search_ann, sim_search_ivf): double-cast once,
-    norm once per vector.  Keeping the cast/norm discipline in a single
-    place is what keeps the rounded-cosine oracle identity holding
-    across every operator that builds on it."""
+    projection for the whole cosine family: the within-cell joins, the
+    LSH and IVF searches, the two index keys and every consumer of the
+    IVF clustering (dedup_eval_ari included).  Double-cast once, norm
+    once per vector: computing norms per pair would redo 2/3 of the
+    floating-point work |pairs| times.  Keeping the cast/norm
+    discipline in a single place is what keeps the rounded-cosine
+    oracle identity holding across every operator that builds on it."""
     return emb.select(
         "vec_id",
         *extra_cols,
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+
+
+def _cell_pairs(e: DataFrame, cell: str, *carry: str) -> DataFrame:
+    """The within-cell self-join of the checkpointed normed-vector frame
+    ``e``: ``(a, b, <cell>, <c>_a, <c>_b for c in carry, cosine)``, one
+    row per unordered pair of vectors sharing ``cell``, scored by the
+    rounded-6 cosine.  The map emits the blocking key and the reduce
+    scores pairs within it: the all-pairs cross join never happens.
+
+    Cosine symmetry (score(a,b) = score(b,a)) HALVES the pair work: the
+    join scores each unordered pair once (a < b).  Multiplication is
+    commutative and the zip_with fold order is index-sequential on both
+    engines, so the once-computed rounded cosine is bit-identical to
+    scoring each orientation separately; :func:`_pair_topk` emits both
+    orientations when a key needs them.  Sides come from
+    :func:`_cell_join_sides`.
+
+    The CELL SIZE is the scale contract: within-cell scoring is
+    all-pairs, so per-item work ∝ cell population (PERF.md measures the
+    adversarial case — ×10 vectors with the cell count pinned → ×100
+    pair work).  At 100 TB the cell id is therefore a derived √N-sized
+    code — the IVF cells' count-derived centroid stride or
+    sim_search_ann's size-derived hyperplane buckets — never a fixed
+    taxonomy."""
+    probe_t, build_t = _cell_join_sides(e)
+
+    def side(s: str) -> DataFrame:
+        return e.select(
+            F.col("vec_id").alias(s),
+            F.col(cell).alias(f"cell_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            F.col("v").alias(f"v_{s}"),
+            F.col("nrm").alias(f"n_{s}"),
+        )
+
+    return probe_t(side("a")).join(
+        build_t(side("b")),
+        (F.col("cell_a") == F.col("cell_b")) & (F.col("a") < F.col("b")),
+    ).select(
+        "a",
+        "b",
+        F.col("cell_a").alias(cell),
+        *[f"{c}_{s}" for c in carry for s in "ab"],
+        F.round(
+            _dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
+        ).alias("cosine"),
+    )
+
+
+def _pair_topk(pairs: DataFrame, k: int, *carry: str) -> DataFrame:
+    """Per vector, its top-``k`` neighbours from :func:`_cell_pairs`'
+    one-orientation ``pairs``: ``(vec_id, *carry, nb_id, nb_<c>...,
+    cosine, rank)``.
+
+    Both orientations of a scored pair come out of a size-2
+    inline-array explode — one pass, no recompute, no pair-list
+    checkpoint.  An explode of an inline never-empty literal array is
+    the size-preserving safe shape (an explode of a computed array that
+    may be empty makes InferFiltersFromGenerate push a size() copy of
+    the whole expression below the projection).  The rank orders by (cosine DESC, nb_id), a unique key, so
+    ranks are engine-stable; Spark executes the ``rank <= k`` window
+    with WindowGroupLimit, which drops rows past k before the sort
+    completes: O(k) state per vector at any scale."""
+
+    def orient(q: str, n: str):
+        return F.struct(
+            F.col(q).alias("vec_id"),
+            *[F.col(f"{c}_{q}").alias(c) for c in carry],
+            F.col(n).alias("nb_id"),
+            *[F.col(f"{c}_{n}").alias(f"nb_{c}") for c in carry],
+        )
+
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nb_id"))
+    return (
+        pairs.select(
+            F.explode(F.array(orient("a", "b"), orient("b", "a"))).alias("p"),
+            "cosine",
+        )
+        .select("p.*", "cosine")
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+    )
 
 
 @register(
@@ -382,43 +474,12 @@ def _normed_vectors(emb: DataFrame, *extra_cols: str) -> DataFrame:
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked by the label column (the
     coarse IVF cell: at 100 TB the blocker is a k-means/LSH cell id
-    computed the same way for both sides).  Equi-join on the cell, exact
-    cosine inside — the all-pairs cross join never happens.
-
-    The fixture has only ~10 distinct cells, so the CPU-heavy scoring
-    join gets the same serialize-killer defense as sim_join_knn and
-    the band joins: broadcast the checkpointed build side, round-robin
-    repartition the probe, gated on estimated build bytes
-    (:func:`_cell_join_sides`) — at cluster scale (√N cells) the
-    plain keyed shuffle takes over, see sim_join_knn's docstring."""
-    emb = load(spark, sf_dir, "embeddings")
-    # norms computed ONCE per vector before the join — computing them
-    # per pair would redo 2/3 of the floating-point work |pairs| times
-    e = _normed_vectors(emb, "label").localCheckpoint()
-    probe_t, build_t = _cell_join_sides(e)
-    a = probe_t(
-        e.select(
-            F.col("vec_id").alias("a"),
-            F.col("label").alias("label"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-    )
-    b = e.select(
-        F.col("vec_id").alias("b"),
-        F.col("label").alias("label_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-    )
+    computed the same way for both sides): :func:`_cell_pairs` on the
+    label, kept at cosine ≥ 0.3."""
+    e = _normed_vectors(load(spark, sf_dir, "embeddings"), "label").localCheckpoint()
     return (
-        a.join(
-            build_t(b),
-            (F.col("label") == F.col("label_b")) & (F.col("a") < F.col("b")),
-        )
-        .select("a", "b", F.col("label").cast("bigint").alias("label"), cos.alias("cosine"))
+        _cell_pairs(e, "label")
+        .select("a", "b", F.col("label").cast("bigint").alias("label"), "cosine")
         .filter(F.col("cosine") >= 0.3)
     )
 
@@ -448,94 +509,16 @@ def sim_join_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN JOIN: for EVERY vector its top-5 cosine neighbors — the
     all-items variant of sim_search_topk (which serves 5 probe
     queries), and the primitive behind hard-negative mining, semantic
-    dedup clustering and retrieval-index evaluation.
-
-    Same candidate discipline as dedup_embedding: equi-join on the
-    coarse cell (label here; a k-means/LSH cell id computed
-    identically for both sides at 100 TB, cf. sim_search_ivf's
-    broadcast centroid rows), norms folded into the rounded cosine
-    once per pair, NO all-pairs cross join.  The per-vector top-k is
-    a window partitioned by vec_id ordering by (rounded cosine desc,
-    nb_id) — a unique order key, so ranks are engine-stable — which
-    Spark executes with WindowGroupLimit: partitions drop rows past
-    k before the sort completes, O(k) state per vector at any scale.
-    The scoring join is per-row-CPU-heavy with only ~10 distinct cell
-    keys on the FIXTURE, i.e. the CLAUDE.md serialize-killer shape: a
-    keyed shuffle would confine the dot-product work to ≤ |cells|
-    tasks.  Defense as in the minhash/simhash band joins: broadcast
-    the (checkpointed) build side, round-robin ``repartition(par)``
-    the probe side — every core gets an equal scoring slice.  At
-    cluster scale the cell id is a k-means/LSH code with ~√N distinct
-    values, so a keyed shuffle spreads naturally and the plain
-    equi-join (no broadcast — the vector table is |corpus|-sized) is
-    the right plan; the broadcast is the degenerate-cell-count fixture
-    defense, exactly as in the band joins, and is GATED on the
-    estimated build-side bytes (:func:`_cell_join_sides`) so an
-    oversized corpus falls back to the keyed join by construction
-    rather than by hope.
-
-    The CELL SIZE is the scale contract: within-cell scoring is
-    all-pairs, so per-item work ∝ cell population (PERF.md measures
-    the adversarial case — ×10 vectors with the cell count pinned →
-    ×100 pair work).  At 100 TB the cell id is therefore a derived
-    √N-sized code — sim_search_ivf's count-derived centroid stride or
-    sim_search_ann's size-derived hyperplane buckets, both with
-    engine-portable oracles in this repo — never a fixed taxonomy;
-    k-NN quality across sub-cell boundaries comes from hamming-1
-    multiprobe exactly as in sim_search_ann.  Cosine symmetry
-    (score(a,b) = score(b,a)) HALVES the pair work: the join scores
-    each unordered pair once (a < b) and both orientations are emitted
-    from the scored row by a size-2 inline-array explode — one pass,
-    no recompute, no pair-list checkpoint (an explode of an inline
-    never-empty literal array is the size-preserving safe shape per
-    the repo invariant).  Multiplication is commutative and the
-    zip_with fold order is index-sequential on both engines, so the
-    once-computed rounded cosine is bit-identical to scoring each
-    orientation separately — the oracle (which scores both ways) still
-    value-matches."""
+    dedup clustering and retrieval-index evaluation.  Candidates are
+    :func:`_cell_pairs` on the label (a k-means/LSH cell id at 100 TB,
+    cf. sim_search_ivf's centroid cells; k-NN quality across sub-cell
+    boundaries comes from hamming-1 multiprobe exactly as in
+    sim_search_ann), ranked by :func:`_pair_topk`.  The oracle scores
+    both orientations separately and still value-matches."""
     # checkpoint: the cast+norm projection feeds both join sides (and
     # the broadcast ships materialized rows, not replayed lineage)
     e = _normed_vectors(load(spark, sf_dir, "embeddings"), "label").localCheckpoint()
-    probe_t, build_t = _cell_join_sides(e)
-    a = probe_t(
-        e.select(
-            F.col("vec_id").alias("vec_id"),
-            F.col("label").alias("la"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-    )
-    b = e.select(
-        F.col("vec_id").alias("nb_id"),
-        F.col("label").alias("lb"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nb_id"))
-    scored = a.join(
-        build_t(b),
-        (F.col("la") == F.col("lb")) & (F.col("vec_id") < F.col("nb_id")),
-    ).select("vec_id", "nb_id", cos.alias("cosine"))
-    both = scored.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("vec_id").alias("q"), F.col("nb_id").alias("n")
-                ),
-                F.struct(
-                    F.col("nb_id").alias("q"), F.col("vec_id").alias("n")
-                ),
-            )
-        ).alias("p"),
-        "cosine",
-    ).select(
-        F.col("p.q").alias("vec_id"), F.col("p.n").alias("nb_id"), "cosine"
-    )
-    return (
-        both.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _KNN_K)
-    )
+    return _pair_topk(_cell_pairs(e, "label"), _KNN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -805,6 +788,31 @@ _ANN_TOP_K = 10
 _ANN_N_QUERIES = 5  # the ANN-family query set: vec_id < 5
 
 
+def _probe_topk(members: DataFrame, probes: DataFrame, key: str) -> DataFrame:
+    """The ANN family's one serve path: ``(query_id, vec_id, score,
+    rank)``, each query's top ``_ANN_TOP_K`` members.  ``probes`` rows
+    ``(query_id, qv, qn, <key>)`` are broadcast and equi-joined on the
+    blocking ``key`` (an LSH ``bucket`` or an IVF ``cell``) against the
+    ``members`` rows ``(vec_id, v, nrm, <key>)``, so per-task work is
+    |block| × probes, never |corpus| × |queries|.  A query never matches
+    itself; the score is the rounded-6 cosine and the rank orders by
+    (score DESC, vec_id), a unique key, so ranks are engine-stable."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
+    return (
+        members.join(F.broadcast(probes), key)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(
+                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
+            ).alias("score"),
+        )
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= _ANN_TOP_K)
+    )
+
+
 def _hyperplanes(dim: int = 64) -> list[list[float]]:
     """Deterministic pseudo-random hyperplane POOL (fixed seed → same
     values every run, every engine).  The ACTIVE count for an N-vector
@@ -959,22 +967,7 @@ def sim_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bucket"),
     )
-    scored = (
-        e.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _ANN_TOP_K)
-    )
+    return _probe_topk(e, probes, "bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -1876,6 +1869,30 @@ def _ivf_cells(e: DataFrame, target_cell: int | None = None):
     return e.join(cells, "vec_id").select("vec_id", "v", "nrm", "cell"), cents
 
 
+def _ivf_probes(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """The flat IVF probe: ``(query_id, qv, qn, cell)`` for each query of
+    the normed-vector frame ``e`` and each of its ``_IVF_NPROBE``
+    nearest centroids in ``cents``, ranked by (rounded dot DESC, cid),
+    the assign's rule.  The probes (5 rows) rank the centroids through a
+    broadcast join and a tiny window; ``qn`` is ``_normed_vectors``'
+    ``nrm``."""
+    d = F.round(_dot(F.col("qv"), F.col("cv")), 6)
+    w = Window.partitionBy("query_id").orderBy(F.desc("d"), F.asc("cell"))
+    return (
+        e.filter(F.col("vec_id") < _ANN_N_QUERIES)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("v").alias("qv"),
+            F.col("nrm").alias("qn"),
+        )
+        .crossJoin(F.broadcast(cents))
+        .select("query_id", "qv", "qn", d.alias("d"), F.col("cid").alias("cell"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _IVF_NPROBE)
+        .select("query_id", "qv", "qn", "cell")
+    )
+
+
 @register(
     "sim_search_ivf",
     oracle=f"""
@@ -1935,52 +1952,16 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``max_by`` aggregate, so the shuffle carries exactly N narrow
       (vec_id, cell) rows — never the multiplied join output and never
       a monolithic all-centroids array row;
-    - probes (5 rows) rank all centroids through the same broadcast
-      join + a tiny window and keep their ``_IVF_NPROBE`` nearest;
-    - the search is an equi-join on cell against broadcast probes —
-      per-task work is |cell| × nprobe, never |corpus| × |queries|.
+    - probes are :func:`_ivf_probes` and the search is
+      :func:`_probe_topk` on the cell.
 
     Every argmax/ranking orders by (rounded dot DESC, centroid id) so
-    cell assignment is stable across engines' SIMD fold orders; scores
-    are cosine rounded to 6 (same discipline as the whole family).
+    cell assignment is stable across engines' SIMD fold orders.
     Seeds are the hash-order rule (md5(vec_id) % stride == 0), shared
     with dedup_semantic via :func:`_ivf_cells` / ``_IVF_CELLS_CTES``."""
-    emb = load(spark, sf_dir, "embeddings")
-    e = _normed_vectors(emb)
+    e = _normed_vectors(load(spark, sf_dir, "embeddings"))
     assigned, cents = _ivf_cells(e)
-    d = F.round(_dot(F.col("v"), F.col("cv")), 6)
-    pr = (
-        e.filter(F.col("vec_id") < _ANN_N_QUERIES)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            d.alias("d"),
-            F.col("cid").alias("cell"),
-        )
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.desc("d"), F.asc("cell"))
-    probes = (
-        pr.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("query_id", "qv", F.sqrt(_dot(F.col("qv"), F.col("qv"))).alias("qn"), "cell")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _ANN_TOP_K)
-    )
+    return _probe_topk(assigned, _ivf_probes(e, cents), "cell")
 
 
 # ---------------------------------------------------------------------------
@@ -2284,23 +2265,7 @@ def sim_search_ivf_hier(
     if _coarse is None:
         _coarse = _hier_coarse(spark, sf_dir)
     e, assigned, cents = _coarse
-    probes = _hier_probes(e, cents)
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _ANN_TOP_K)
-    )
+    return _probe_topk(assigned, _hier_probes(e, cents), "cell")
 
 
 # ---------------------------------------------------------------------------
@@ -2340,75 +2305,24 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the negatives that actually move a retrieval loss; random
     negatives are trivially easy).
 
-    Candidates come from the shared IVF cells (:func:`_ivf_cells` /
-    ``_IVF_CELLS_CTES`` — hash-order √N seeds + Lloyd refinement), NOT
-    the label column: hard negatives live across label boundaries, so
-    the blocker must be geometric.  Within-cell scoring carries the
-    sim_join_knn cell-size contract and the same broadcast/round-robin
-    serialize-killer defense; cosine symmetry halves pair work (a < b
-    scored once, both orientations emitted by the size-2 inline-array
-    explode, exactly as in sim_join_knn); the per-vector top-k is a
-    WindowGroupLimit window over the unique (cosine DESC, nb_id)
-    order.  Vectors whose cell holds no other-label mates produce no
-    row, identically in both engines.  The oracle replays seeding,
-    Lloyd refinement, assignment, cross-label scoring and ranking."""
+    Candidates are :func:`_cell_pairs` on the shared IVF cells
+    (:func:`_ivf_cells` / ``_IVF_CELLS_CTES`` — hash-order √N seeds +
+    Lloyd refinement), NOT the label column: hard negatives live across
+    label boundaries, so the blocker must be geometric.  Same-label
+    pairs are filtered out (Catalyst pushes the filter into the join)
+    and :func:`_pair_topk` ranks the rest.  Vectors whose cell holds no
+    other-label mates produce no row, identically in both engines.  The
+    oracle replays seeding, Lloyd refinement, assignment, cross-label
+    scoring and ranking."""
     emb = load(spark, sf_dir, "embeddings")
     e = _normed_vectors(emb)
     assigned, _ = _ivf_cells(e)
     labels = emb.select("vec_id", F.col("label").cast("bigint").alias("label"))
     nv = assigned.join(labels, "vec_id").localCheckpoint()
-    probe_t, build_t = _cell_join_sides(nv)
-    a = probe_t(
-        nv.select(
-            F.col("vec_id").alias("qa"),
-            F.col("label").alias("la"),
-            F.col("cell").alias("cell_a"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
+    pairs = _cell_pairs(nv, "cell", "label").filter(
+        F.col("label_a") != F.col("label_b")
     )
-    b = build_t(
-        nv.select(
-            F.col("vec_id").alias("qb"),
-            F.col("label").alias("lb"),
-            F.col("cell").alias("cell_b"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        )
-    )
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    scored = a.join(
-        b,
-        (F.col("cell_a") == F.col("cell_b"))
-        & (F.col("qa") < F.col("qb"))
-        & (F.col("la") != F.col("lb")),
-    ).select("qa", "la", "qb", "lb", cos.alias("cosine"))
-    both = scored.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("qa").alias("q"), F.col("la").alias("l"),
-                    F.col("qb").alias("n"), F.col("lb").alias("nl"),
-                ),
-                F.struct(
-                    F.col("qb").alias("q"), F.col("lb").alias("l"),
-                    F.col("qa").alias("n"), F.col("la").alias("nl"),
-                ),
-            )
-        ).alias("p"),
-        "cosine",
-    ).select(
-        F.col("p.q").alias("vec_id"),
-        F.col("p.l").alias("label"),
-        F.col("p.n").alias("nb_id"),
-        F.col("p.nl").alias("nb_label"),
-        "cosine",
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nb_id"))
-    return (
-        both.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _HARDNEG_K)
-    )
+    return _pair_topk(pairs, _HARDNEG_K, "label")
 
 
 # ---------------------------------------------------------------------------
@@ -2458,44 +2372,18 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-order √N seeds, exact-decimal Lloyd refinement, broadcast
     centroids, map-side max_by assignment) — so the oracle replays
     seeding, refinement, assignment, within-cell scoring AND the prune
-    decision, end to end.  Within-cell pair scoring carries the
-    sim_join_knn cell-size contract (per-item work ∝ cell population,
-    cells ≈ √N by construction) and the same serialize-killer defense
-    (:func:`_cell_join_sides`: broadcast build + round-robin probe
-    while the build side fits, keyed shuffle above it).  The prune
-    pick is ONE hash-aggregate per pruned vector — max over the
-    (cos, -candidate_id) struct (the dedup_resolve_best idiom), no
-    window over data-sized frames.  Output is one row per vector:
+    decision, end to end.  Pairs are :func:`_cell_pairs` on the cell.
+    The prune pick is ONE hash-aggregate per pruned vector — max over
+    the (cosine, -candidate_id) struct (the dedup_resolve_best idiom),
+    no window over data-sized frames.  Output is one row per vector:
     (vec_id, cell, keep, dup_of, max_cos)."""
     e = _normed_vectors(load(spark, sf_dir, "embeddings"))
     assigned, _ = _ivf_cells(e)
     assigned = assigned.localCheckpoint()  # feeds both sides of the
     # within-cell join AND the final left join — materialize once
-    probe_t, build_t = _cell_join_sides(assigned)
-    a = probe_t(
-        assigned.select(
-            F.col("vec_id").alias("a"),
-            F.col("cell").alias("cell_a"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-    )
-    b = build_t(
-        assigned.select(
-            F.col("vec_id").alias("b"),
-            F.col("cell").alias("cell_b"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        )
-    )
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    pairs = (
-        a.join(b, (F.col("cell_a") == F.col("cell_b")) & (F.col("a") < F.col("b")))
-        .select("b", "a", cos.alias("cos"))
-        .filter(F.col("cos") >= _SEMDEDUP_T)
-    )
+    pairs = _cell_pairs(assigned, "cell").filter(F.col("cosine") >= _SEMDEDUP_T)
     d = pairs.groupBy("b").agg(
-        F.max(F.struct(F.col("cos"), (-F.col("a")).alias("neg_a"))).alias("m")
+        F.max(F.struct(F.col("cosine"), (-F.col("a")).alias("neg_a"))).alias("m")
     )
     return (
         assigned.select("vec_id", "cell")
@@ -2505,7 +2393,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cell").cast("bigint").alias("cell"),
             F.col("b").isNull().alias("keep"),
             (-F.col("m.neg_a")).cast("bigint").alias("dup_of"),
-            F.col("m.cos").alias("max_cos"),
+            F.col("m.cosine").alias("max_cos"),
         )
     )
 
@@ -2856,11 +2744,10 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid row breaks them even if the probe set happens to dodge it.
 
     Queries arrive FRESH (from the raw corpus, as in serving) — only
-    the index side comes from disk.  Probe ranking runs the same
-    (rounded dot DESC, cid) rule as sim_search_ivf against the
-    reloaded centroid table, so the two keys' cell choices agree
-    bit-for-bit; the search is the same broadcast-probes equi-join on
-    cell.
+    the index side comes from disk.  Probes are sim_search_ivf's
+    :func:`_ivf_probes` over the reloaded centroid table, so the two
+    keys' cell choices agree bit-for-bit, and the search is
+    :func:`_probe_topk` on the reloaded postings.
 
     100 TB shape: the store is the standard IVF serving layout —
     centroids ≈ √N rows (broadcastable at 1 B vectors), postings N
@@ -2908,34 +2795,6 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{base}/postings"
     ).select("vec_id", "v", "nrm", "cell")
 
-    d = F.round(_dot(F.col("qv"), F.col("cv")), 6)
-    pr = (
-        e.filter(F.col("vec_id") < _ANN_N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        .crossJoin(F.broadcast(cents_store))
-        .select("query_id", "qv", "qn", d.alias("d"), F.col("cid").alias("cell"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.desc("d"), F.asc("cell"))
-    probes = (
-        pr.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("query_id", "qv", "qn", "cell")
-    )
-    scored = (
-        post_store.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
-    )
     stats = post_store.agg(
         F.count(F.lit(1)).cast("bigint").alias("index_vecs")
     ).crossJoin(
@@ -2945,10 +2804,8 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _ANN_TOP_K)
+        _probe_topk(post_store, _ivf_probes(e, cents_store), "cell")
         .crossJoin(F.broadcast(stats))
         .select("query_id", "vec_id", "score", "rank",
                 "index_vecs", "index_cells")
@@ -3044,10 +2901,9 @@ def sim_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Real systems assign arrivals to the FROZEN centroids and append
     their postings — retraining per ingest would re-cluster a 1 B-row
     corpus daily — so that is exactly what this key executes: reload
-    the store, flat-argmax the batch against the RELOADED centroids
-    (the same (rounded dot DESC, cid) rule every registered IVF key
-    uses), union the postings, and answer the probe queries against
-    the MERGED index.
+    the store, assign the batch to the RELOADED centroids with the
+    flat Lloyd assign (:func:`_ivf_assign`), union the postings, and
+    answer the probe queries against the MERGED index.
 
     Semantics the oracle pins: centroids are those of the accepted
     slice only (training never saw the batch — the assignment is the
@@ -3097,57 +2953,14 @@ def sim_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # round-robin + eager checkpoint of the batch frame (the
     # serialize-killer defense: the scan is 1 task and the ×nlist pair
-    # stream below is CPU-heavy interpreted-HOF dots), then the
-    # SCALAR-ONLY argmax stream with v/nrm re-joined AFTER — an array
-    # in this agg buffer over the |batch|×nlist pair stream is the
-    # exact ObjectHashAggregate sort-fallback class that OOMed the
-    # flat knob assign at ×100 (round 10, CLAUDE.md)
+    # stream of the assign is CPU-heavy interpreted-HOF dots)
     par = spark.sparkContext.defaultParallelism
     eb = e.filter(is_batch).repartition(par).localCheckpoint()
-    d_bc = F.round(_dot(F.col("v"), F.col("cv")), 6)
-    slim = (
-        eb.crossJoin(F.broadcast(cents_store))
-        .select("vec_id", d_bc.alias("d"), "cid")
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cid", F.struct(F.col("d"), (-F.col("cid")).alias("nc"))
-            ).alias("cell")
-        )
+    batch_assigned = eb.select("vec_id", "v", "nrm").join(
+        _ivf_assign(eb, cents_store), "vec_id"
     )
-    batch_assigned = eb.select("vec_id", "v", "nrm").join(slim, "vec_id")
     merged = post_store.select("vec_id", "v", "nrm", "cell").unionByName(
         batch_assigned
-    )
-
-    d_qc = F.round(_dot(F.col("qv"), F.col("cv")), 6)
-    pr = (
-        e.filter(F.col("vec_id") < _ANN_N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        .crossJoin(F.broadcast(cents_store))
-        .select("query_id", "qv", "qn", d_qc.alias("d"),
-                F.col("cid").alias("cell"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.desc("d"), F.asc("cell"))
-    probes = (
-        pr.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("query_id", "qv", "qn", "cell")
-    )
-    scored = (
-        merged.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
     )
     stats = post_store.agg(
         F.count(F.lit(1)).cast("bigint").alias("index_vecs")
@@ -3158,10 +2971,8 @@ def sim_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _ANN_TOP_K)
+        _probe_topk(merged, _ivf_probes(e, cents_store), "cell")
         .crossJoin(F.broadcast(stats))
         .select("query_id", "vec_id", "score", "rank",
                 "index_vecs", "ingested_vecs")

@@ -1068,9 +1068,10 @@ def _jobs_in_group(spark, group: str, action) -> int:
 # shared stage fails: inside the min-propagation kernel it costs a job
 # every round (a per-round count() took graph_bfs to 17), and inside a
 # k-means trainer (operators/kmeans.py: every IVF cell, PQ codebook and
-# IVF-PQ residual codebook construction) or a PQ stage (encode, ADC
-# serve, rerank) it costs a job in every ANN key that runs the stage,
-# more in the scoreboards; inside
+# IVF-PQ residual codebook construction), a PQ stage (encode, ADC
+# serve, rerank) or a cosine-family stage (llm_extras' _cell_pairs,
+# _pair_topk, _probe_topk, _ivf_probes) it costs a job in every key
+# that runs the stage, more in the scoreboards; inside
 # the merge commit path it costs jobs on every commit (a stray batch
 # count() in _merge_apply took sink_merge_history to 27).
 _BUILD_JOB_CEILING = {
@@ -1092,6 +1093,10 @@ _BUILD_JOB_CEILING = {
     "dedup_semantic": (17, 2),
     "sim_index_persist": (17, 2),
     "sim_index_ingest": (18, 2),
+    "dedup_embedding": (3, 2),
+    "sim_join_knn": (3, 2),
+    "sim_search_ann": (0, 2),
+    "sim_eval_recall": (0, 2),
     "sink_compact": (3, 2),
     "cdc_upsert": (0, 2),
     "sink_merge_upsert": (10, 2),
