@@ -23,9 +23,10 @@ Scale notes (SCALE.md "corpus tools"):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.operators import rounds
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -742,9 +743,13 @@ def tokenizer_train_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, documented bound = exactly 1 row per round).  That
     keeps the vocabulary lineage a LINEAR chain of in-row replaces —
     round r's pair count replays r-1 replace layers over |vocab| rows,
-    trivial — so the whole training runs the one corpus-scale word
-    count plus K vocabulary-sized argmax jobs, with no per-round
-    checkpoint and no crossJoin."""
+    trivial — with no per-round checkpoint and no crossJoin.  A
+    vocabulary within ``rounds._PROPAGATE_BCAST_ROWS`` (its size is
+    observed on the word-count checkpoint) is checkpointed once more in
+    one partition, and each round's pair count and argmax then run as
+    ONE job: the training runs the corpus-scale word count, that one
+    checkpoint and K one-job rounds.  A larger vocabulary shuffles each
+    round's pair count (two jobs a round)."""
     merges, _ = _bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges,
@@ -759,7 +764,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     merges is the K-row learned table as Python tuples
     (rank, left, right, merged, cnt) and vocab is the final
     (w, seq, freq) frame with every learned merge applied — the
-    word-level subword segmentation tokenizer_apply_bpe joins against."""
+    word-level subword segmentation tokenizer_apply_bpe joins against.
+    A small vocabulary runs its rounds in one partition, one job each
+    (:func:`rounds._one_partition`)."""
     d = load(spark, sf_dir, "documents")
     words = (
         d.select(
@@ -770,14 +777,22 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    cur = words.select(
-        "w",
-        F.concat(
-            F.lit(" "), F.regexp_replace("w", "(.)", "$1 ")
-        ).alias("seq"),
-        "freq",
-    ).localCheckpoint()  # the ONE corpus-scale job; everything after
-    # operates on |vocab| rows
+    vocab = Observation()
+    cur = (
+        words.select(
+            "w",
+            F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 ")).alias("seq"),
+            "freq",
+        )
+        .observe(vocab, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )  # the ONE corpus-scale job; everything after operates on |vocab| rows
+    n_vocab = vocab.get["n"]
+    if n_vocab <= rounds._PROPAGATE_BCAST_ROWS:
+        # a small vocabulary runs every round in one partition: the pair
+        # count needs no shuffle, and the count and its argmax run as one
+        # job instead of two
+        cur = rounds._one_partition(cur, n_vocab).localCheckpoint()
 
     merges: list[tuple] = []
     for r in range(1, _BPE_MERGES + 1):
@@ -860,8 +875,9 @@ def tokenizer_apply_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-level memo keyed on sf_dir would serve STALE merges if the
     parquet under that path changed between calls, a silent-wrongness
     class this repo never trades for speed.  The accepted cost is one
-    extra train (~1.4 s at sf0.1: one corpus word-count + K=8
-    vocabulary-sized argmax jobs, measured in PERF.md); a real 100 TB
+    extra train (~1.4 s at sf0.1 in PERF.md, before the rounds ran
+    as one job each: one corpus word-count + K=8 vocabulary-sized
+    rounds); a real 100 TB
     deployment persists the K-row merge table as an artifact and
     applies it forever — the recompute is a fixture-contract artifact,
     not the scale shape."""
@@ -937,7 +953,8 @@ def tokenizer_eval_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: everything derives from the shared :func:`_bpe_train` final
     vocabulary — the ONE corpus-scale word-count job plus K
-    vocabulary-sized argmax jobs the train/apply keys already run; the
+    vocabulary-sized rounds (one job each on a small vocabulary) the
+    train/apply keys already run; the
     eval itself is ONE frequency-weighted hash-agg over |vocab| rows
     collapsing to a single output row (metadata-sized at any corpus
     size — the eval-key discipline).  Ratios are exact-integer

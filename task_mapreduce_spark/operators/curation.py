@@ -37,7 +37,7 @@ from task_mapreduce_spark.operators.llm_extras import (
 )
 from task_mapreduce_spark.operators.llm_pipeline import sim_search_topk
 from task_mapreduce_spark.registry import ORACLES, register
-from task_mapreduce_spark.tables import load
+from task_mapreduce_spark.tables import load, row_count
 
 
 # ---------------------------------------------------------------------------
@@ -1133,8 +1133,9 @@ def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_edges = flagged.filter(~F.col("ab") & ~F.col("bb")).select("a", "b")
     new_edges = flagged.filter(F.col("ab") | F.col("bb")).select("a", "b")
     base_nodes = d.select("doc_id").filter(~is_batch(F.col("doc_id")))
-    # yesterday's state: labels of the accepted corpus only
-    prior = _min_label_cc(base_nodes, base_edges)
+    # yesterday's state: labels of the accepted corpus only; the
+    # documents table's footer count bounds its node set
+    prior = _min_label_cc(base_nodes, base_edges, row_count(sf_dir, "documents"))
     merged = _contract_merge(d.select("doc_id"), prior, new_edges)
     return merged.select(
         "doc_id", F.col("label").cast("bigint").alias("component_id")

@@ -31,16 +31,19 @@ and a join against it plans an Exchange on that side —
 tests/test_plans.py::test_checkpoint_forgets_partitioning_under_aqe
 pins this on the installed Spark.  So every iteration re-shuffles the
 edge list as well as the |V|-sized side; pre-partitioning the static
-side on the join key only adds a shuffle.
+side on the join key only adds a shuffle.  A graph within
+``rounds._PROPAGATE_BCAST_ROWS`` shuffles nothing: PageRank and BFS run
+it in one partition (``rounds._one_partition``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.operators import rounds
 from task_mapreduce_spark.registry import register
-from task_mapreduce_spark.tables import load
+from task_mapreduce_spark.tables import load, row_count
 
 _PR_SCALE = 1_000_000_000          # fixed-point: 1.0 == 1e9
 _PR_BASE = 150_000_000             # 0.15 * _PR_SCALE (teleport mass)
@@ -135,7 +138,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (see the module docstring), so each iteration re-shuffles the
     # edge list either way.  Broadcasting the rank table instead breaks
     # at 1 B nodes (a multi-GB broadcast per iteration).
-    edeg = edges.join(deg, "src").localCheckpoint()
+    obs = Observation()
+    edeg = (
+        edges.join(deg, "src")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_e = obs.get["n"]
 
     nodes = (
         load(spark, sf_dir, "customer")
@@ -146,6 +155,20 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
+    # A graph within the row budget (edges counted on the checkpoint,
+    # nodes from the tables' footers) runs every iteration in one
+    # partition: the edge and node lists, each iteration's sums (at most
+    # one row per edge) and its ranks (one row per node) all carry exact
+    # size estimates, so no join or aggregate plans an Exchange and the
+    # five iterations run in one task.  Without the limit on the sums,
+    # the join output's estimate re-shuffles the aggregate and the next
+    # iteration's join.
+    n_c, n_s = row_count(sf_dir, "customer"), row_count(sf_dir, "supplier")
+    n_v = None if n_c is None or n_s is None else n_c + n_s
+    small = n_v is not None and n_e + n_v <= rounds._PROPAGATE_BCAST_ROWS
+    if small:
+        edeg = rounds._one_partition(edeg, n_e)
+        nodes = rounds._one_partition(nodes, n_v)
     ranks = nodes.select("node", F.lit(_PR_SCALE).cast("long").alias("rank"))
     for _ in range(_PR_ITERS):
         r = ranks.select(F.col("node").alias("src_node"), F.col("rank").alias("src_rank"))
@@ -160,6 +183,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("contrib").alias("incoming"))
         )
+        if small:
+            incoming = rounds._one_partition(incoming, n_e)
         # same discipline for the vertex-table maintenance join: both
         # sides are |V|-keyed (node/dst), shuffle-hash avoids a
         # per-iteration sort of either
@@ -172,6 +197,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.expr("(85 * coalesce(incoming, 0)) div 100")
             ).alias("rank"),
         )
+        if small:
+            ranks = rounds._one_partition(ranks, n_v)
     return ranks.select("node", F.col("rank").cast("bigint").alias("rank_fp"))
 
 
@@ -362,18 +389,17 @@ def bfs_distances(
     """(node, dist) for every node within ``hops`` hops of ``source``
     over the directed ``edges`` (src, dst), and the rounds run.
 
-    BFS is a min-fold with step 1 (:func:`llm_extras.min_propagate`):
-    the state starts as the source alone, round 0 pushes the source's
-    out-edges (a filter, no join), and round k reaches hop k+1 — only
-    nodes first reached last round push, so per-round join input is
-    ∝ |frontier|.  The loop stops after ``hops`` rounds or as soon as a
-    round reaches no new node; the rows are the same either way."""
-    from task_mapreduce_spark.operators.llm_extras import min_propagate
-
+    BFS is a min-fold with step 1 (:func:`rounds.min_propagate`): the
+    state starts as the source alone (one row, so a small round 0 runs
+    as one job), round 0 pushes the source's out-edges (a filter, no
+    join), and round k reaches hop k+1 — only nodes first reached last
+    round push, so per-round join input is ∝ |frontier|.  The loop stops
+    after ``hops`` rounds or as soon as a round reaches no new node; the
+    rows are the same either way."""
     start = edges.sparkSession.range(1).select(
         F.lit(source).cast("long").alias("id"), F.lit(0).alias("value")
     )
-    dist, rounds, _ = min_propagate(
+    dist, n_rounds, _ = rounds.min_propagate(
         start,
         edges,
         lambda e: e.filter(F.col("src") == source).select(
@@ -381,8 +407,10 @@ def bfs_distances(
         ),
         max_rounds=hops,
         step=1,
+        state_rows=1,
     )
-    return dist.select(F.col("id").alias("node"), F.col("value").alias("dist")), rounds
+    dist = dist.select(F.col("id").alias("node"), F.col("value").alias("dist"))
+    return dist, n_rounds
 
 
 @register("graph_bfs", oracle=_bfs_oracle())

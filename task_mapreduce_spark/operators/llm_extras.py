@@ -10,18 +10,16 @@ row path except the explicitly-Arrow multimodal decode.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from task_mapreduce_spark.operators import kmeans
+from task_mapreduce_spark.operators import kmeans, rounds
 from task_mapreduce_spark.registry import register
-from task_mapreduce_spark.tables import load
+from task_mapreduce_spark.tables import load, row_count
 
 
 # ---------------------------------------------------------------------------
@@ -522,158 +520,6 @@ def sim_join_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# min-propagation fixpoint kernel (connected components, BFS)
-# ---------------------------------------------------------------------------
-
-# Row budget under which a round runs as one job in one partition — its
-# whole input, state plus at most one push row per edge, and both of its
-# joins — and under which a larger round broadcasts its (id, value) join
-# side (≈ 4 MB as a hashed relation) instead of shuffling it and the
-# edge list; the counts are exact, from Observations on the edge
-# checkpoint and on the last round.
-_PROPAGATE_BCAST_ROWS = 250_000
-
-
-def _one_partition(df: DataFrame, bound: int) -> DataFrame:
-    """``df`` coalesced to one partition, limited to ``bound`` rows — an
-    observed count of at least ``df``'s rows, so the limit drops nothing.
-    The limit is there for its statistics.  A one-partition join child
-    satisfies the join's distribution, but Spark's EnsureRequirements
-    re-shuffles it into ``spark.sql.shuffle.partitions`` when its
-    ESTIMATED size is over ``spark.sql.maxSinglePartitionBytes``
-    (128 MB), and a ``localCheckpoint`` inherits its source plan's
-    estimate (sf0.01's BFS edge list: 97 k rows, estimated at 20.3 GiB).
-    A Limit's estimate is its bound times the row width.
-
-    A Limit's generated code names its row counter with a process-wide
-    id, so it misses the codegen cache: every run compiles it afresh and
-    runs it cold.  The Coalesce under it keeps the limit in a small
-    stage of its own; fused into an aggregate, it recompiled that
-    aggregate every round (graph_bfs rounds about 0.11 → 0.17 s at
-    sf0.01)."""
-    return df.coalesce(1).limit(bound)
-
-
-def min_propagate(
-    state: DataFrame,
-    edges: DataFrame,
-    push: Callable[[DataFrame], DataFrame],
-    *,
-    max_rounds: int,
-    step: int = 0,
-    jump_from: int | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Min-fold fixpoint of ``state`` (id, value) over the static
-    ``edges`` (src, dst) — the kernel behind :func:`_min_label_cc` and
-    ``graph.bfs_distances``, each round a map over the edges, a shuffle
-    and a min-reduce.  ``edges`` is checkpointed once here, its row count
-    observed on that checkpoint; ``push`` builds the round-0 messages
-    (id, value) from the checkpointed edges without a join.  ``step`` is
-    added as a value crosses an edge.  Returns (state, rounds run, rows
-    changed in the last round: 0 iff converged).
-
-    A round is ``state ∪ push → groupBy(id).agg(min(value), max(old))``
-    and ONE eager ``localCheckpoint``.  State rows carry their value as
-    ``old`` and push rows NULL, so a row changed when ``old`` is NULL or
-    the minimum dropped; only changed rows push next round (delta form,
-    same fixpoint as full propagation).  From round ``jump_from`` on,
-    the round also pointer-jumps value ← value(value) by a self-join of
-    its own aggregate in the same checkpoint — sound only when a value
-    names a node of the same class, as CC labels do; O(log D) rounds on
-    a D-hop chain.  The changed and row counts ride an ``Observation`` on
-    the checkpoint and are read only after it returns (a failed action
-    can leave partial metrics).  The loop stops at 0 changed rows or
-    after ``max_rounds``; the caller decides if the cap is an error.
-
-    A round whose input is provably within ``_PROPAGATE_BCAST_ROWS`` —
-    the last round's row count plus the edge count — runs as one job:
-    the push join (edges ⋈ frontier), ``state ∪ push`` and the
-    pointer-jump self-join all run in one partition
-    (:func:`_one_partition`), so the round plans no Exchange and no
-    BroadcastExchange.  A larger round shuffles, and as a checkpoint
-    keeps no hash layout under AQE (graph.py module docstring), a
-    shuffled join re-shuffles the edge list every round: such a round
-    broadcasts the frontier, and the hop side, while the last round's
-    exact counts are within the budget.  Round 0 stays shuffled: its
-    state's row count is never observed.
-
-    Precondition: a reached endpoint that is not an ``id`` of ``state``
-    becomes a new row — what BFS wants, and why CC needs every edge
-    endpoint to be a node.  No job checks it."""
-    obs = Observation()
-    edges = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    n_edges = obs.get["n"]
-    push = push(edges)
-    old_type = state.schema["value"].dataType
-    state = state.select("id", "value")
-    changed, rows, small = 0, None, False
-    for it in range(max_rounds):
-        both = state.select("id", "value", F.col("value").alias("old")).unionByName(
-            push.select("id", "value", F.lit(None).cast(old_type).alias("old"))
-        )
-        if small:
-            both = both.coalesce(1)
-        cur = both.groupBy("id").agg(
-            F.min("value").alias("value"), F.max("old").alias("old")
-        )
-        if small:
-            # state ids are unique (grouped by id) and so are the
-            # frontier's, so each edge pushes at most one row: the
-            # aggregate has at most rows + n_edges rows.  Its estimate
-            # then stays small in the checkpoint, for the self-join, the
-            # next round and the caller's plans.
-            cur = _one_partition(cur, rows + n_edges)
-        if jump_from is not None and it >= jump_from:
-            # In a shuffled round both sides must plan the identical
-            # aggregate, or Spark computes the round twice instead of
-            # reusing its exchange: ids are never NULL, and filtering on
-            # it here matches the isnotnull(j_id) Spark infers for the
-            # hop side; least(value, old) == value, but reading ``old``
-            # stops column pruning from dropping max(old) on the hop
-            # side only.  In a one-partition round both sides are the
-            # same partition, joined in place; the hop side recomputes
-            # the aggregate inside the round's one task.
-            cur = cur.filter(F.col("id").isNotNull())
-            hop = cur.select(
-                F.col("id").alias("j_id"), F.least("value", "old").alias("j_value")
-            )
-            if small:
-                hop = hop.hint("shuffle_hash")
-            elif rows is not None and rows <= _PROPAGATE_BCAST_ROWS:
-                hop = F.broadcast(hop)
-            cur = cur.join(hop, F.col("value") == F.col("j_id"), "left").select(
-                "id",
-                F.least("value", F.coalesce("j_value", "value")).alias("value"),
-                "old",
-            )
-        is_changed = F.col("old").isNull() | (F.col("value") < F.col("old"))
-        obs = Observation()
-        cur = cur.observe(
-            obs,
-            F.sum(is_changed.cast("long")).alias("changed"),
-            F.count(F.lit(1)).alias("rows"),
-        ).localCheckpoint()
-        # sum() over zero rows is NULL — an empty state is converged
-        metrics = obs.get
-        changed, rows = int(metrics["changed"] or 0), metrics["rows"]
-        state = cur.select("id", "value")
-        if changed == 0:
-            return state, it + 1, 0
-        frontier = cur.filter(is_changed).select(F.col("id").alias("src"), "value")
-        small = rows + n_edges <= _PROPAGATE_BCAST_ROWS
-        out_edges = edges
-        if small:
-            out_edges = _one_partition(edges, n_edges)
-            frontier = _one_partition(frontier, changed).hint("shuffle_hash")
-        elif changed <= _PROPAGATE_BCAST_ROWS:
-            frontier = F.broadcast(frontier)
-        push = out_edges.join(frontier, "src").select(
-            F.col("dst").alias("id"), (F.col("value") + step).alias("value")
-        )
-    return state, max_rounds, changed
-
-
-# ---------------------------------------------------------------------------
 # dedup: full connected components over the verified near-dup edges
 # ---------------------------------------------------------------------------
 
@@ -681,21 +527,30 @@ _CC_MAX_ITER = 20
 
 # Round from which CC rounds pointer-jump (label ← label-of-label): a
 # D-hop chain converges in _CC_PJ_FROM + O(log2 D) rounds instead of D.
-# The fixpoint does not depend on the schedule; 2 saved whole rounds on
-# the fixture graphs.  Re-measured on one-job rounds (dedup_cluster_cc /
-# dedup_cluster_incremental census jobs): 0, 1 and 2 give 13/24, 12/22
-# and 13/23 at sf0.01 and 14/27, 13/25 and 13/25 at sf0.1; 1 is lower at
-# sf0.01 only, so 2 stays.
-_CC_PJ_FROM = 2
+# The fixpoint does not depend on the schedule.  Re-measured with a
+# one-job round 0 (census jobs, local[4], of dedup_cluster_cc /
+# dedup_cluster_incremental / dedup_resolve_best / dedup_eval_ari):
+#
+#   _CC_PJ_FROM   sf0.01          sf0.1
+#   0             11/22/13/35     12/25/14/36
+#   1             11/21/13/35     12/24/14/36
+#   2             12/22/14/36     12/24/14/36
+#
+# 1 is lowest or tied on every key at both scales.
+_CC_PJ_FROM = 1
 
 
-def _min_label_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def _min_label_cc(
+    nodes: DataFrame, edges: DataFrame, n_nodes: int | None = None
+) -> DataFrame:
     """Connected components over ``nodes`` (doc_id) and undirected
     ``edges`` (a, b): (doc_id, label), label = the component's minimum
-    doc_id, by :func:`min_propagate` with pointer jumping from round
-    ``_CC_PJ_FROM``.  Precondition: every edge endpoint is a node, as
-    dedup_cluster_cc, dedup_eval_ari and dedup_cluster_incremental's
-    two runs guarantee.
+    doc_id, by :func:`rounds.min_propagate` with pointer jumping from
+    round ``_CC_PJ_FROM``.  Precondition: every edge endpoint is a node,
+    as dedup_cluster_cc, dedup_eval_ari and dedup_cluster_incremental's
+    two runs guarantee.  ``n_nodes``, an upper bound on the node rows
+    known without a job, is the kernel's ``state_rows``: with it a small
+    round 0 runs as one job, and a bound below the true count raises.
 
     Incremental use needs no seed parameter: a prior labeling is folded
     in by CONTRACTING the new edges through it and running this on the
@@ -707,12 +562,13 @@ def _min_label_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    labels, _, changed = min_propagate(
+    labels, _, changed = rounds.min_propagate(
         nodes.select(F.col("doc_id").alias("id"), F.col("doc_id").alias("value")),
         sym,
         lambda e: e.select(F.col("dst").alias("id"), F.col("src").alias("value")),
         max_rounds=_CC_MAX_ITER,
         jump_from=_CC_PJ_FROM,
+        state_rows=n_nodes,
     )
     if changed:
         # chains longer than the jump-accelerated bound must raise
@@ -773,7 +629,9 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     verified = jaccard_pairs(_doc_token_sets(d)).select("a", "b")
-    labels = _min_label_cc(d.select("doc_id"), verified)
+    labels = _min_label_cc(
+        d.select("doc_id"), verified, row_count(sf_dir, "documents")
+    )
     return labels.select("doc_id", F.col("label").alias("component_id"))
 
 
@@ -2133,33 +1991,32 @@ def _hier_probes(
     (``ccv``) to the output — the residual consumer's shape
     (sim_search_ivfpq derives the query's cell-relative residual from
     it); the plain-IVF consumers leave it off and Catalyst prunes the
-    column below the ranking window."""
+    column below the ranking window.  ``qn`` is ``_normed_vectors``'
+    ``nrm``, carried from ``e``."""
     params, supers, cent_sup = _super_structs(cents)
     q = e.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
     )
     ds_qs = F.round(_dot(F.col("qv"), F.col("sv")), 6)
     wq = Window.partitionBy("query_id").orderBy(F.desc("ds"), F.asc("sid"))
     qsup = (
         q.crossJoin(F.broadcast(supers))
-        .select("query_id", "qv", ds_qs.alias("ds"), "sid")
+        .select("query_id", "qv", "qn", ds_qs.alias("ds"), "sid")
         .withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= _IVF_SUPER_PROBE)
-        .select("query_id", "qv", "sid")
+        .select("query_id", "qv", "qn", "sid")
     )
     d_qc = F.round(_dot(F.col("qv"), F.col("cv")), 6)
     wc = Window.partitionBy("query_id").orderBy(F.desc("d"), F.asc("cell"))
-    out_cols = [
-        "query_id",
-        "qv",
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))).alias("qn"),
-        "cell",
-    ] + ([F.col("ccv")] if with_centroid else [])
+    out_cols = ["query_id", "qv", "qn", "cell"] + (["ccv"] if with_centroid else [])
     return (
         cent_sup.join(F.broadcast(qsup), "sid")
         .select(
             "query_id",
             "qv",
+            "qn",
             d_qc.alias("d"),
             F.col("cid").alias("cell"),
             F.col("cv").alias("ccv"),

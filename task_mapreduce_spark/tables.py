@@ -130,21 +130,41 @@ def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-def _footer_file(path: str) -> str | None:
-    """The file whose footer Spark would infer the table's schema from:
-    the table itself, or a directory table's first data file (Spark
-    skips ``_``/``.`` names such as ``_SUCCESS`` and ``.crc`` sidecars).
-    None when there is no local data file to read: a missing path, a
-    remote URI, or a directory holding only partition subdirectories."""
+def _data_files(path: str) -> list[str]:
+    """A table's local data files, sorted: the table itself, or a
+    directory table's files (Spark skips ``_``/``.`` names such as
+    ``_SUCCESS`` and ``.crc`` sidecars).  Empty when there is no local
+    data file to read: a missing path, a remote URI, or a directory
+    holding only partition subdirectories."""
     if os.path.isfile(path):
-        return path
+        return [path]
     if not os.path.isdir(path):
+        return []
+    return [
+        full
+        for entry in sorted(os.listdir(path))
+        if not entry.startswith(("_", "."))
+        and os.path.isfile(full := os.path.join(path, entry))
+    ]
+
+
+def _footer_file(path: str) -> str | None:
+    """The file whose footer Spark would infer the table's schema from
+    (the first of :func:`_data_files`), or None when there is none."""
+    files = _data_files(path)
+    return files[0] if files else None
+
+
+def row_count(sf_dir: str, name: str) -> int | None:
+    """Table ``name``'s row count, summed over its data files' parquet
+    footers on the driver (as :func:`load` reads them), so it runs no
+    Spark job.  None when there is no local footer to read (a remote
+    URI, a missing path): a caller that wants a bound then goes
+    without."""
+    files = _data_files(path_of(sf_dir, name))
+    if not files:
         return None
-    for entry in sorted(os.listdir(path)):
-        full = os.path.join(path, entry)
-        if not entry.startswith(("_", ".")) and os.path.isfile(full):
-            return full
-    return None
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def _footer_schema(name: str, parquet: pq.ParquetSchema) -> T.StructType:

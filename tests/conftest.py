@@ -58,28 +58,29 @@ def sf_dir():
 
 @pytest.fixture(params=["one_partition", "broadcast", "shuffled"])
 def round_shape(request, monkeypatch):
-    """Run a fixpoint test under each plan of a ``min_propagate`` round:
-    the default row budget, under which every round after the first fits
-    a test graph and runs in one partition as one job; a budget of the
+    """Run a fixpoint test under each plan of a ``rounds.min_propagate``
+    round: the default row budget, under which every round after the
+    first (and round 0 too, when the caller bounds its state) fits a
+    test graph and runs in one partition as one job; a budget of the
     kernel's edge count, under which no round fits in one partition (it
     has at least one state row on top of the edges) but every frontier
     is broadcast (only a node with an edge can change, and each changed
     node owns an edge row); and a zero budget, under which every round
     shuffles and broadcasts nothing.  Returns the list the round counts
     of the test's kernel calls are appended to."""
-    from task_mapreduce_spark.operators import llm_extras
+    from task_mapreduce_spark.operators import rounds
 
     if request.param == "shuffled":
-        monkeypatch.setattr(llm_extras, "_PROPAGATE_BCAST_ROWS", 0)
-    rounds: list[int] = []
-    kernel = llm_extras.min_propagate
+        monkeypatch.setattr(rounds, "_PROPAGATE_BCAST_ROWS", 0)
+    counts: list[int] = []
+    kernel = rounds.min_propagate
 
     def counted(state, edges, *args, **kwargs):
         if request.param == "broadcast":
-            monkeypatch.setattr(llm_extras, "_PROPAGATE_BCAST_ROWS", edges.count())
+            monkeypatch.setattr(rounds, "_PROPAGATE_BCAST_ROWS", edges.count())
         out = kernel(state, edges, *args, **kwargs)
-        rounds.append(out[1])
+        counts.append(out[1])
         return out
 
-    monkeypatch.setattr(llm_extras, "min_propagate", counted)
-    return rounds
+    monkeypatch.setattr(rounds, "min_propagate", counted)
+    return counts

@@ -132,7 +132,7 @@ def test_cc_pointer_jump_converges_on_100_hop_chain(spark, round_shape):
     edges = spark.range(n - 1).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
-    out = {r["doc_id"]: r["label"] for r in _min_label_cc(nodes, edges).collect()}
+    out = {r["doc_id"]: r["label"] for r in _min_label_cc(nodes, edges, n).collect()}
     assert len(out) == n
     assert set(out.values()) == {0}
     # the same 8 rounds whether rounds run in one partition or shuffle

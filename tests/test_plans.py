@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import uuid
 
 import pytest
 
@@ -940,7 +941,7 @@ def test_sim_index_persist_store_is_partition_pruned(spark, sf_dir):
 
 def test_checkpoint_forgets_partitioning_under_aqe(spark):
     # The Spark fact the iterative keys are built around (graph.py module
-    # docstring, llm_extras.min_propagate): under the session's AQE a
+    # docstring, rounds.min_propagate): under the session's AQE a
     # checkpoint of a hash-repartitioned frame reports UnknownPartitioning,
     # so a join against it still shuffles that side and pre-partitioning
     # a static edge list buys nothing.  If a Spark upgrade fails this
@@ -978,13 +979,13 @@ def test_checkpoint_forgets_partitioning_under_aqe(spark):
 
 def test_one_partition_join_needs_an_exact_size_estimate(spark):
     # The Spark fact min_propagate's one-job rounds are built around
-    # (llm_extras._one_partition): a checkpoint inherits its source
+    # (rounds._one_partition): a checkpoint inherits its source
     # plan's size estimate (here a join of two 2000-row ranges, estimated
     # as the product of their sizes), and EnsureRequirements re-shuffles
     # a one-partition join child estimated over
     # spark.sql.maxSinglePartitionBytes.  A limit at an exact row bound
     # carries the true size, and the same join plans no Exchange.
-    from task_mapreduce_spark.operators.llm_extras import _one_partition
+    from task_mapreduce_spark.operators.rounds import _one_partition
 
     side = (
         spark.range(2000)
@@ -1005,47 +1006,102 @@ def test_one_partition_join_needs_an_exact_size_estimate(spark):
     assert exchanges(_one_partition(side, 2000), _one_partition(small, 13)) == 0
 
 
-def test_small_propagate_rounds_run_as_one_job(spark, monkeypatch):
-    # A min_propagate round within the row budget runs its push join,
-    # its min-aggregate and its pointer-jump self-join in one partition:
-    # its plan has no Exchange and no BroadcastExchange, and its
-    # checkpoint runs one scheduler job.  Round 0 (state never counted)
-    # stays shuffled.  A 30-node chain runs 6 rounds, 4 of them jumping.
-    from task_mapreduce_spark.operators.llm_extras import _min_label_cc
-
+def _record_jobs(spark, monkeypatch, method: str, plans: list) -> None:
+    """Make every DataFrame ``method`` call (``localCheckpoint``,
+    ``first``) append its frame's physical plan and the scheduler jobs
+    the call ran, counted in a job group of its own, to ``plans``."""
     cls = type(spark.range(1))
-    checkpoint = cls.localCheckpoint
+    call = getattr(cls, method)
     sc = spark.sparkContext
-    rounds: list[tuple[str, int]] = []
+    run = uuid.uuid4().hex  # job groups outlive the test: keep them apart
 
     def recorded(df, *args, **kwargs):
-        group = f"one-job-round/{len(rounds)}"
+        group = f"one-job-round/{run}/{len(plans)}"
         sc.setJobGroup(group, group)
         try:
-            out = checkpoint(df, *args, **kwargs)
+            out = call(df, *args, **kwargs)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        rounds.append((explain_str(df).split("\n\n")[0], jobs))
+        plans.append((explain_str(df).split("\n\n")[0], jobs))
         return out
 
-    monkeypatch.setattr(cls, "localCheckpoint", recorded)
-    n = 30
+    monkeypatch.setattr(cls, method, recorded)
+
+
+def _chain(spark, n: int):
     nodes = spark.range(n).select(F.col("id").alias("doc_id"))
     edges = spark.range(n - 1).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
-    labels = _min_label_cc(nodes, edges)
+    return nodes, edges
+
+
+def test_small_propagate_rounds_run_as_one_job(spark, monkeypatch):
+    # A min_propagate round within the row budget runs its push join,
+    # its min-aggregate and its pointer-jump self-join in one partition:
+    # its plan has no Exchange and no BroadcastExchange, and its
+    # checkpoint runs one scheduler job.  Round 0 runs so too when the
+    # caller bounds its state rows, and stays shuffled when it does not.
+    # A 30-node chain runs 6 rounds, 5 of them jumping.
+    from task_mapreduce_spark.operators.llm_extras import _min_label_cc
+
+    for n_nodes in (None, 30):
+        rounds: list[tuple[str, int]] = []
+        _record_jobs(spark, monkeypatch, "localCheckpoint", rounds)
+        labels = _min_label_cc(*_chain(spark, 30), n_nodes)
+        monkeypatch.undo()
+        assert {r["label"] for r in labels.collect()} == {0}
+        # rounds[0] is the edge-list checkpoint, rounds[1] round 0
+        if n_nodes is None:
+            assert "Exchange" in rounds[1][0]
+            one_job = rounds[2:]
+        else:
+            one_job = rounds[1:]
+        assert len(one_job) == (5 if n_nodes is None else 6)
+        assert sum("ShuffledHashJoin LeftOuter" in p for p, _ in one_job) == 5
+        for plan, jobs in one_job:
+            assert "Exchange" not in plan, plan
+            assert jobs == 1
+
+
+def test_state_rows_below_the_true_count_raises(spark):
+    # A round-0 bound below the state's rows would let the aggregate's
+    # limit drop rows; round 0's job counts state ∪ push, and the kernel
+    # raises instead of returning short labels.
+    from task_mapreduce_spark.operators.llm_extras import _min_label_cc
+
+    with pytest.raises(ValueError, match="over its bound of 87"):
+        _min_label_cc(*_chain(spark, 30), 29)
+
+
+@pytest.mark.parametrize("budget", ["default", "zero"])
+def test_small_bpe_rounds_run_as_one_job(spark, tmp_path, monkeypatch, budget):
+    # Over a vocabulary within the row budget, _bpe_train checkpoints the
+    # word table once more in one partition: each merge round's pair
+    # count and its argmax then plan no Exchange and run as one job.
+    # With a zero budget the rounds shuffle, as every round did before.
+    from task_mapreduce_spark.operators import rounds
+    from task_mapreduce_spark.operators.corpus_tools import _BPE_MERGES, _bpe_train
+
+    text = "low lower lowest newer newest wider widest slow slower tower"
+    spark.createDataFrame(
+        [(0, text, "en", "s", len(text))],
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    ).coalesce(1).write.parquet(f"{tmp_path}/documents.parquet")
+    if budget == "zero":
+        monkeypatch.setattr(rounds, "_PROPAGATE_BCAST_ROWS", 0)
+    argmaxes: list[tuple[str, int]] = []
+    _record_jobs(spark, monkeypatch, "first", argmaxes)
+    merges, _ = _bpe_train(spark, str(tmp_path))
     monkeypatch.undo()
-    assert {r["label"] for r in labels.collect()} == {0}
-    # rounds[0] is the edge-list checkpoint, rounds[1] the shuffled round 0
-    assert "Exchange" in rounds[1][0]
-    one_job = rounds[2:]
-    assert len(one_job) == 5
-    assert sum("ShuffledHashJoin LeftOuter" in plan for plan, _ in one_job) == 4
-    for plan, jobs in one_job:
-        assert "Exchange" not in plan, plan
-        assert jobs == 1
+    assert len(merges) == len(argmaxes) == _BPE_MERGES
+    for plan, jobs in argmaxes:
+        if budget == "zero":
+            assert "Exchange" in plan, plan
+        else:
+            assert "Exchange" not in plan, plan
+            assert jobs == 1
 
 
 def _jobs_in_group(spark, group: str, action) -> int:
@@ -1066,7 +1122,9 @@ def _jobs_in_group(spark, group: str, action) -> int:
 # the same at local[4] and local[8]).  The slack absorbs AQE moving a
 # runtime join conversion by a job.  A stray count() or checkpoint in a
 # shared stage fails: inside the min-propagation kernel it costs a job
-# every round (a per-round count() took graph_bfs to 17), and inside a
+# every round (a per-round count() took graph_bfs to 17), as it does
+# inside a BPE merge round (operators/corpus_tools.py: _bpe_train runs
+# its 8 rounds for each tokenizer key), and inside a
 # k-means trainer (operators/kmeans.py: every IVF cell, PQ codebook and
 # IVF-PQ residual codebook construction), a PQ stage (encode, ADC
 # serve, rerank) or a cosine-family stage (llm_extras' _cell_pairs,
@@ -1075,11 +1133,14 @@ def _jobs_in_group(spark, group: str, action) -> int:
 # the merge commit path it costs jobs on every commit (a stray batch
 # count() in _merge_apply took sink_merge_history to 27).
 _BUILD_JOB_CEILING = {
-    "graph_bfs": (7, 2),
-    "dedup_cluster_cc": (11, 2),
-    "dedup_eval_ari": (28, 2),
-    "dedup_resolve_best": (11, 2),
-    "dedup_cluster_incremental": (19, 2),
+    "graph_bfs": (6, 2),
+    "dedup_cluster_cc": (10, 2),
+    "dedup_eval_ari": (27, 2),
+    "dedup_resolve_best": (10, 2),
+    "dedup_cluster_incremental": (18, 2),
+    "tokenizer_train_bpe": (11, 2),
+    "tokenizer_apply_bpe": (11, 2),
+    "tokenizer_eval_vocab": (11, 2),
     "embedding_pq": (11, 2),
     "sim_search_pq": (11, 2),
     "sim_search_pq_const": (11, 2),

@@ -298,9 +298,10 @@ def test_min_label_cc_matches_union_find(spark, round_shape, edges):
     edf = spark.createDataFrame(
         [(a, b) for a, b in edges if a != b] or [(0, 0)], "a LONG, b LONG"
     ).filter(F.col("a") != F.col("b"))
+    # n bounds the node rows, so a small round 0 runs in one partition
     got = {
         r["doc_id"]: r["label"]
-        for r in _min_label_cc(nodes, edf).collect()
+        for r in _min_label_cc(nodes, edf, n).collect()
     }
     assert got == want
     assert round_shape[-1] == _cc_rounds(n, edges, _CC_PJ_FROM, _CC_MAX_ITER)
@@ -611,7 +612,8 @@ def test_two_successive_contract_merges_equal_from_scratch(spark, edges):
 
     base_ids = [x for x in range(n) if wave[x] == 0]
     thru1 = [x for x in range(n) if wave[x] <= 1]
-    prior = _min_label_cc(ndf(base_ids), edf(e0)).localCheckpoint()
+    # the prior run takes a node bound, as dedup_cluster_incremental's does
+    prior = _min_label_cc(ndf(base_ids), edf(e0), n).localCheckpoint()
     l1 = _contract_merge(ndf(thru1), prior, edf(e1)).localCheckpoint()
     l2 = _contract_merge(ndf(range(n)), l1, edf(e2))
 

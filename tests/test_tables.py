@@ -1,7 +1,7 @@
 """``tables.load``: the driver-side footer check catches schema drift that a
 declared-schema read alone would hide, and the layouts the repo writes
 itself (multi-file directories, Spark output with ``_SUCCESS``) load
-clean."""
+clean.  ``tables.row_count`` reads the same footers."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from task_mapreduce_spark.tables import SCHEMAS, load
+from task_mapreduce_spark.tables import SCHEMAS, load, row_count
 
 
 def _renamed(old, new):
@@ -106,3 +106,33 @@ def test_load_events_nanos_footer_matches_micros(spark, sf_dir, tmp_path):
     back = load(spark, str(tmp_path), "events")
     assert back.schema == SCHEMAS["events"]
     assert sorted(back.collect()) == sorted(load(spark, sf_dir, "events").collect())
+
+
+def test_row_count_one_file(sf_dir):
+    want = pq.read_table(f"{sf_dir}/documents.parquet").num_rows
+    assert want > 0
+    assert row_count(sf_dir, "documents") == want
+
+
+def test_row_count_sums_a_multi_file_directory(spark, sf_dir, tmp_path):
+    # a 4-file Spark-written directory counts every part file, and the
+    # _SUCCESS and .crc sidecars add nothing
+    src = load(spark, sf_dir, "documents")
+    src.repartition(4).write.parquet(f"{tmp_path}/documents.parquet")
+    d = f"{tmp_path}/documents.parquet"
+    parts = [f for f in os.listdir(d) if f.startswith("part-")]
+    assert len(parts) == 4
+    assert row_count(str(tmp_path), "documents") == sum(
+        pq.read_metadata(f"{d}/{f}").num_rows for f in parts
+    )
+    assert row_count(str(tmp_path), "documents") == src.count()
+
+
+def test_row_count_of_a_directory_without_data_files_is_none(tmp_path):
+    os.makedirs(f"{tmp_path}/documents.parquet")
+    open(f"{tmp_path}/documents.parquet/_SUCCESS", "w").close()
+    assert row_count(str(tmp_path), "documents") is None
+
+
+def test_row_count_of_a_missing_path_is_none(tmp_path):
+    assert row_count(f"{tmp_path}/no_such_sf", "documents") is None
