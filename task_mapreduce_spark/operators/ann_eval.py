@@ -22,9 +22,9 @@ from functools import partial, reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.operators.cosine import _ANN_N_QUERIES
 from task_mapreduce_spark.operators.ivfpq import sim_search_ivfpq
 from task_mapreduce_spark.operators.llm_extras import (
-    _ANN_N_QUERIES,
     _hier_coarse,
     sim_search_ann,
     sim_search_ivf,

@@ -23,10 +23,19 @@ Scale notes (SCALE.md "corpus tools"):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.functions.hashing import hash48
 from task_mapreduce_spark.operators import rounds
+from task_mapreduce_spark.operators.cosine import (
+    _ANN_N_QUERIES,
+    _ANN_TOP_K,
+    _normed_vectors,
+    _probe_scores,
+    _probes,
+    _top_scores,
+)
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -113,6 +122,15 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def split_of(doc_id: Column | str) -> Column:
+    """The 80/10/10 train/valid/test split of a document id: its
+    portable 48-bit hash mod 10 (``functions.hashing.hash48``), 0-7
+    train, 8 valid, 9 test.  split_train_test, pipeline_corpus_e2e and
+    split_leakage_report all split by it."""
+    b = hash48(doc_id) % 10
+    return F.when(b < 8, "train").when(b == 8, "valid").otherwise("test")
+
+
 @register(
     "split_train_test",
     oracle="""
@@ -139,20 +157,10 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-based (not random) splitting is the production discipline:
     the assignment is a pure function of the id, so re-runs, engine
     swaps, and incremental backfills can never leak a document across
-    splits.  Uses the repo's portable hash idiom (CLAUDE.md):
-    ``conv(substr(md5(id),1,12),16,10)`` ≡ DuckDB
-    ``('0x'||substr(md5(id),1,12))::BIGINT``."""
+    splits.  The rule is :func:`split_of`."""
     docs = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        % 10
-    )
-    split = (
-        F.when(bucket < 8, "train").when(bucket == 8, "valid").otherwise("test")
-    )
     return (
-        docs.groupBy(split.alias("split"), "lang")
+        docs.groupBy(split_of("doc_id").alias("split"), "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("n_chars_total"),
@@ -209,6 +217,54 @@ _BM25_B = 0.75
 _BM25_TOPK = 20
 
 
+def _bm25_corpus(d: DataFrame):
+    """``(docs, dl, stats)``, BM25's corpus stage over the documents
+    frame ``d``: token arrays ``(doc_id, toks)``, doc lengths
+    ``(doc_id, doclen)`` and the one-row ``(n_docs, avgdl)``."""
+    docs = d.select("doc_id", F.split("text", " ").alias("toks"))
+    dl = docs.select("doc_id", F.size("toks").alias("doclen"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("doclen").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+    return docs, dl, stats
+
+
+def _bm25_scores(hits: DataFrame, dl, stats, fan=lambda tf: tf, by=()) -> DataFrame:
+    """``(*by, doc_id, bm25)``: Okapi BM25 (k1=1.2, b=0.75, Lucene's
+    +1-inside-ln idf) over ``hits``, the ``(doc_id, tok)`` token rows a
+    key's term filter kept.  ``fan`` maps the ``(doc_id, tok, tf)`` rows
+    to the rows scored; retrieval_fuse_rrf fans them out to the queries
+    holding each term, scored ``by`` query_id.
+
+    Determinism discipline for a transcendental score: each (doc, term)
+    part is rounded to 9 decimals and cast to DECIMAL(18,9) BEFORE the
+    per-doc sum (exact, order-independent; a double fold would be
+    merge-order-dependent), and the sum is rounded to 6.  df and the
+    corpus stats are tiny aggregates broadcast back."""
+    tf = hits.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
+    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    part = F.round(
+        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+        * (F.col("tf") * (_BM25_K1 + 1))
+        / (
+            F.col("tf")
+            + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("doclen") / F.col("avgdl"))
+        ),
+        9,
+    ).cast("decimal(18,9)")
+    parts = (
+        fan(tf)
+        .join(F.broadcast(df), "tok")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select(*by, "doc_id", part.alias("part_score"))
+    )
+    return parts.groupBy(*by, "doc_id").agg(
+        F.round(F.sum("part_score").cast("double"), 6).alias("bm25")
+    )
+
+
 def _bm25_sql() -> str:
     terms = ", ".join(f"'{t}'" for t in _BM25_QUERY)
     return f"""
@@ -260,58 +316,18 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexical half of a retrieval pipeline (the vector half is
     sim_search_topk/ann); k1=1.2, b=0.75, Lucene's +1-inside-ln idf.
 
-    Determinism discipline for a transcendental score: each (doc,term)
-    partial is rounded to 9 decimals and cast to DECIMAL(18,9) BEFORE
-    the per-doc sum (exact, order-independent — a 3-double fold would
-    be merge-order-dependent), and the final score is rounded to 6;
-    rank ties break on doc_id.
+    Scoring is :func:`_bm25_scores`; rank ties break on doc_id.
 
     100 TB shape: the term filter prunes the token explosion to query
     terms ONLY (the shuffle carries |query|·|matching docs| rows, not
-    the corpus vocabulary); df and corpus stats are tiny aggregates
-    broadcast back; top-k is a rank window over docs that matched ≥ 1
-    term.  For a standing query SET, the same plan batches by adding a
-    query_id column to the terms literal."""
-    d = load(spark, sf_dir, "documents")
-    docs = d.select("doc_id", F.split("text", " ").alias("toks"))
-    dl = docs.select("doc_id", F.size("toks").alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("doclen").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    the corpus vocabulary); top-k is a rank window over docs that
+    matched ≥ 1 term.  For a standing query SET, the same plan batches
+    by adding a query_id column to the terms (retrieval_fuse_rrf)."""
+    docs, dl, stats = _bm25_corpus(load(spark, sf_dir, "documents"))
+    hits = docs.select("doc_id", F.explode("toks").alias("tok")).filter(
+        F.col("tok").isin(list(_BM25_QUERY))
     )
-    tf = (
-        docs.select("doc_id", F.explode("toks").alias("tok"))
-        .filter(F.col("tok").isin(list(_BM25_QUERY)))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    parts = (
-        tf.join(F.broadcast(df), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1
-                )
-                * (F.col("tf") * (_BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + _BM25_K1
-                    * (1 - _BM25_B + _BM25_B * F.col("doclen") / F.col("avgdl"))
-                ),
-                9,
-            )
-            .cast("decimal(18,9)")
-            .alias("part_score"),
-        )
-    )
-    scored = parts.groupBy("doc_id").agg(
-        F.round(F.sum("part_score").cast("double"), 6).alias("bm25")
-    )
+    scored = _bm25_scores(hits, dl, stats)
     # top-k FIRST via orderBy+limit (TakeOrderedAndProject: O(k) per
     # partition, no global sort), THEN the rank window over ≤k rows —
     # an unpartitioned window over all matching docs would funnel them
@@ -1083,9 +1099,19 @@ def text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RRF_K = 60          # the standard RRF damping constant (Cormack 2009)
 _RRF_ARM_K = 20      # candidate-list depth fed into the fusion per arm
 _RRF_TOPK = 10       # fused results returned per query
-_RRF_N_QUERIES = 5   # doc_id/vec_id < 5: the standing probe set
-#                      (sim_search_topk's _N_QUERIES — same probes, so a
-#                      user can line the fused list up against each arm)
+
+
+def _rrf_score(rank_a: str, rank_b: str) -> Column:
+    """Reciprocal-rank fusion of two arm ranks, Σ 1/(_RRF_K + rank),
+    where an arm whose list misses the doc adds 0.  Ranks are integers,
+    so this is two exact double divisions summed in a written order,
+    identical in both engines; rounded to 9 only for safety.
+    retrieval_fuse_rrf and pipeline_retrieval_e2e fuse with it."""
+    return F.round(
+        F.coalesce(1.0 / (_RRF_K + F.col(rank_a)), F.lit(0.0))
+        + F.coalesce(1.0 / (_RRF_K + F.col(rank_b)), F.lit(0.0)),
+        9,
+    )
 
 
 def _rrf_sql() -> str:
@@ -1102,7 +1128,7 @@ def _rrf_sql() -> str:
     ),
     qterms AS (
       SELECT DISTINCT doc_id AS query_id, unnest(toks) AS tok
-      FROM docs WHERE doc_id < {_RRF_N_QUERIES}
+      FROM docs WHERE doc_id < {_ANN_N_QUERIES}
     ),
     tf AS (
       SELECT doc_id, tok, COUNT(*) AS tf
@@ -1142,7 +1168,7 @@ def _rrf_sql() -> str:
       SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
              round(list_cosine_similarity(q.ev, c.ev), 6) AS cos
       FROM e q JOIN e c ON c.vec_id <> q.vec_id
-      WHERE q.vec_id < {_RRF_N_QUERIES}
+      WHERE q.vec_id < {_ANN_N_QUERIES}
     ),
     sem_top AS (
       SELECT query_id, doc_id,
@@ -1188,13 +1214,11 @@ def retrieval_fuse_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arms whose top-20 list contains d; fused top-10 per query,
     ties on doc_id; arm ranks stay in the output.
 
-    Determinism: each arm ranks on its ROUNDED score with the repo's
-    standard discipline (BM25 partials rounded(9)→DECIMAL(18,9) before
-    the per-doc sum, cosine rounded(6)); ranks are integers, so the
-    fused score 1/(60+r) + 1/(60+r') is two exact double divisions in
-    a written order — identical in both engines — rounded(9) only for
-    safety.  lex_rank/sem_rank stay in the output (nullable: a doc can
-    reach the fused list through one arm alone).
+    Determinism: each arm ranks on its ROUNDED score (text_bm25's
+    :func:`_bm25_scores`; sim_search_topk's probe scorer, so a
+    ``sem_rank`` ≤ 10 is that key's rank) and the fusion is
+    :func:`_rrf_score`.  lex_rank/sem_rank stay in the output
+    (nullable: a doc can reach the fused list through one arm alone).
 
     100 TB shape: the query-vocab semi-join prunes the corpus token
     explosion to |Q|-query terms BEFORE the tf aggregation, so the
@@ -1207,53 +1231,23 @@ def retrieval_fuse_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-sized regardless of corpus scale.  At a 1 B-doc corpus
     the semantic arm swaps to the registered IVF index (sim_search_ivf)
     without touching the fusion contract, which only consumes ranks."""
-    d = load(spark, sf_dir, "documents")
-    docs = d.select("doc_id", F.split("text", " ").alias("toks"))
-    dl = docs.select("doc_id", F.size("toks").alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("doclen").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
+    docs, dl, stats = _bm25_corpus(load(spark, sf_dir, "documents"))
     qterms = (
-        docs.filter(F.col("doc_id") < _RRF_N_QUERIES)
+        docs.filter(F.col("doc_id") < _ANN_N_QUERIES)
         .select(F.col("doc_id").alias("query_id"), F.explode("toks").alias("tok"))
         .distinct()
     )
-    tf = (
-        docs.select("doc_id", F.explode("toks").alias("tok"))
-        .join(F.broadcast(qterms.select("tok").distinct()), "tok", "leftsemi")
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    hits = docs.select("doc_id", F.explode("toks").alias("tok")).join(
+        F.broadcast(qterms.select("tok").distinct()), "tok", "leftsemi"
     )
-    df_ = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    parts = (
-        tf.join(F.broadcast(qterms), "tok")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .join(F.broadcast(df_), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1
-                )
-                * (F.col("tf") * (_BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + _BM25_K1
-                    * (1 - _BM25_B + _BM25_B * F.col("doclen") / F.col("avgdl"))
-                ),
-                9,
-            )
-            .cast("decimal(18,9)")
-            .alias("part_score"),
-        )
-    )
-    lex = parts.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("part_score").cast("double"), 6).alias("bm25")
+    lex = _bm25_scores(
+        hits,
+        dl,
+        stats,
+        fan=lambda tf: tf.join(F.broadcast(qterms), "tok").filter(
+            F.col("doc_id") != F.col("query_id")
+        ),
+        by=("query_id",),
     )
     wl = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
     lex_top = (
@@ -1262,40 +1256,10 @@ def retrieval_fuse_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "lex_rank")
     )
 
-    emb = load(spark, sf_dir, "embeddings")
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    e = emb.select("vec_id", dv.alias("v")).withColumn(
-        "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
-    )
-    q = e.filter(F.col("vec_id") < _RRF_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    sem = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("cos"),
-        )
-    )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("doc_id"))
-    sem_top = (
-        sem.withColumn("sem_rank", F.row_number().over(ws).cast("bigint"))
-        .filter(F.col("sem_rank") <= _RRF_ARM_K)
-        .select("query_id", "doc_id", "sem_rank")
+    e = _normed_vectors(load(spark, sf_dir, "embeddings"))
+    sem = _probe_scores(e.crossJoin(F.broadcast(_probes(e))))
+    sem_top = _top_scores(sem, _RRF_ARM_K).select(
+        "query_id", F.col("vec_id").alias("doc_id"), F.col("rank").alias("sem_rank")
     )
 
     fused = lex_top.join(sem_top, ["query_id", "doc_id"], "full_outer").select(
@@ -1303,11 +1267,7 @@ def retrieval_fuse_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lex_rank",
         "sem_rank",
-        F.round(
-            F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (_RRF_K + F.col("sem_rank")), F.lit(0.0)),
-            9,
-        ).alias("rrf_score"),
+        _rrf_score("lex_rank", "sem_rank").alias("rrf_score"),
     )
     wf = Window.partitionBy("query_id").orderBy(
         F.desc("rrf_score"), F.asc("doc_id")
@@ -1327,16 +1287,19 @@ def _rank_eval_oracle() -> str:
     as nested-WITH CTE bodies (the sim_eval_recall pattern lifted to
     SQL composition): system-under-eval = retrieval_fuse_rrf, ground
     truth = sim_search_topk — the eval and the arms can never drift."""
-    from task_mapreduce_spark.operators import llm_pipeline  # registers topk
+    # llm_pipeline is imported inside functions: this module registers
+    # its keys first, so a module-level import would move llm_pipeline's
+    # keys ahead of text_langid..retrieval_fuse_rrf in the registry.
+    # Importing it here registers sim_search_topk before this key.
+    from task_mapreduce_spark.operators import llm_pipeline  # noqa: F401
     from task_mapreduce_spark.registry import ORACLES
 
-    k = llm_pipeline._TOP_K
     return f"""
     WITH fused AS ({ORACLES["retrieval_fuse_rrf"]}),
     exact AS ({ORACLES["sim_search_topk"]}),
     rel AS (
       SELECT query_id, vec_id AS doc_id,
-             CAST({k} + 1 - rank AS BIGINT) AS rel
+             CAST({_ANN_TOP_K} + 1 - rank AS BIGINT) AS rel
       FROM exact
     ),
     scored AS (
@@ -1399,10 +1362,7 @@ def retrieval_eval_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: inherits the arms' shapes verbatim; everything after
     the arm lists touches |Q|·k rows — metadata at any corpus size."""
-    from task_mapreduce_spark.operators.llm_pipeline import (
-        _TOP_K,
-        sim_search_topk,
-    )
+    from task_mapreduce_spark.operators.llm_pipeline import sim_search_topk
 
     fused = retrieval_fuse_rrf(spark, sf_dir).select(
         "query_id", "doc_id", "fused_rank"
@@ -1410,7 +1370,7 @@ def retrieval_eval_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = sim_search_topk(spark, sf_dir).select(
         "query_id",
         F.col("vec_id").alias("doc_id"),
-        (F.lit(_TOP_K) + 1 - F.col("rank")).cast("bigint").alias("rel"),
+        (F.lit(_ANN_TOP_K) + 1 - F.col("rank")).cast("bigint").alias("rel"),
     )
     scored = (
         fused.join(rel, ["query_id", "doc_id"], "left")

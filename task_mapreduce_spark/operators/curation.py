@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.functions.hashing import hash48
+from task_mapreduce_spark.operators.corpus_tools import split_of
+from task_mapreduce_spark.operators.cosine import _normed_vectors
 from task_mapreduce_spark.operators.llm_extras import (
     _DECON_SHINGLES_SQL,
     _FP_WINDOW,
@@ -24,7 +27,6 @@ from task_mapreduce_spark.operators.llm_extras import (
     _doc_token_sets,
     _ivf_cells,
     _min_label_cc,
-    _normed_vectors,
     _rk_window_frame,
     corpus_filter,
     dedup_cluster_cc,
@@ -140,9 +142,6 @@ def corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = spark.createDataFrame(
         weighted or [("", 0, 1)], "lang STRING, n_docs BIGINT, w BIGINT"
     )
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10).cast(
-        "long"
-    )
     keep = (
         F.col("h").cast("decimal(15,0)")
         * F.lit(w_ref).cast("decimal(4,0)")
@@ -153,7 +152,7 @@ def corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.lit(_HASH_SPACE).cast("decimal(15,0)")
     )
     flags = (
-        docs.withColumn("h", h)
+        docs.withColumn("h", hash48("doc_id"))
         .join(F.broadcast(counts), "lang")
         .select("lang", keep.alias("keep"))
     )
@@ -508,7 +507,7 @@ def _band_buckets(sh: DataFrame) -> DataFrame:
         "doc_id",
         F.transform(
             "shingles",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
+            lambda s: hash48(s),  # a lambda: bare, chars binds the index
         ).alias("hs"),
     )
     sig = hv.select(
@@ -714,12 +713,7 @@ def _is_batch_expr(c):
     # pure function of doc_id — evaluated as an expression wherever
     # needed, never joined (a |corpus|-row flag join would need a
     # shuffle; this stays scan-side at any scale)
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        % _INCR_BATCH_MOD
-        == 0
-    )
+    return hash48(c) % _INCR_BATCH_MOD == 0
 
 
 def _incr_oracle() -> str:
@@ -1116,23 +1110,16 @@ def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = (
         jaccard_pairs(_doc_token_sets(d)).select("a", "b").localCheckpoint()
     )
-
-    def is_batch(c):
-        # the dedup_incremental batch rule: portable 48-bit md5 slice,
-        # evaluated as a scan-side expression, never a flag join
-        return (
-            F.conv(F.substring(F.md5(c.cast("string")), 1, 12), 16, 10)
-            .cast("long")
-            % _INCR_BATCH_MOD
-            == 0
-        )
-
+    # the dedup_incremental batch rule, a scan-side expression
     flagged = verified.select(
-        "a", "b", is_batch(F.col("a")).alias("ab"), is_batch(F.col("b")).alias("bb")
+        "a",
+        "b",
+        _is_batch_expr(F.col("a")).alias("ab"),
+        _is_batch_expr(F.col("b")).alias("bb"),
     )
     base_edges = flagged.filter(~F.col("ab") & ~F.col("bb")).select("a", "b")
     new_edges = flagged.filter(F.col("ab") | F.col("bb")).select("a", "b")
-    base_nodes = d.select("doc_id").filter(~is_batch(F.col("doc_id")))
+    base_nodes = d.select("doc_id").filter(~_is_batch_expr(F.col("doc_id")))
     # yesterday's state: labels of the accepted corpus only; the
     # documents table's footer count bounds its node set
     prior = _min_label_cc(base_nodes, base_edges, row_count(sf_dir, "documents"))
@@ -1390,10 +1377,7 @@ def select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "is_tgt",
-            (
-                F.conv(F.substring(F.md5("g"), 1, 12), 16, 10).cast("long")
-                % _DSIR_BUCKETS
-            ).alias("b"),
+            (hash48("g") % _DSIR_BUCKETS).alias("b"),
         )
         .localCheckpoint()
     )
@@ -1769,20 +1753,9 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     es_key = F.array_max(
         F.transform(
             F.sequence(F.lit(0), (F.col("w") - 1).cast("int")),
-            lambda j: F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "#", F.col("doc_id").cast("string"),
-                            j.cast("string"),
-                        )
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            lambda j: hash48(
+                F.concat_ws("#", F.col("doc_id").cast("string"), j.cast("string"))
+            ),
         )
     )
     keyed = d.select(
@@ -2033,16 +2006,6 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(_lsh_verify_cond(inter))  # union-free J ≥ 1/2 verify
         .select("a", "b")
     )
-
-    def split_of(col):
-        h = (
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 12), 16, 10)
-            .cast("long")
-            % 10
-        )
-        return (
-            F.when(h < 8, "train").when(h == 8, "valid").otherwise("test")
-        )
 
     pa, pb = split_of(F.col("a")), split_of(F.col("b"))
     crossed = (

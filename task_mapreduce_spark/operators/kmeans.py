@@ -34,6 +34,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.functions.hashing import hash48, hash48_sql
+
 # Lloyd rounds over the hash seeds.  One round + a wider probe measured
 # the same recall as two rounds (sim_search_ivf: 0.58 either way), and a
 # round doubles clustering cost for every key that shares the cells.
@@ -43,12 +45,6 @@ LLOYD_STEPS = 1
 # ---------------------------------------------------------------------------
 # Spark
 # ---------------------------------------------------------------------------
-
-
-def hash48(col: str, chars: int = 1):
-    """Portable 48-bit hash: md5 chars ``chars``..``chars``+11 as a long."""
-    h = F.substring(F.md5(F.col(col).cast("string")), chars, 12)
-    return F.conv(h, 16, 10).cast("long")
 
 
 def seeds(
@@ -155,11 +151,6 @@ def lloyd(
 # ---------------------------------------------------------------------------
 # DuckDB SQL
 # ---------------------------------------------------------------------------
-
-
-def hash48_sql(col: str, chars: int = 1) -> str:
-    """SQL twin of :func:`hash48`."""
-    return f"('0x' || substr(md5(CAST({col} AS VARCHAR)), {chars}, 12))::BIGINT"
 
 
 def seed_ctes(

@@ -17,7 +17,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from task_mapreduce_spark.functions.hashing import hash48, hash48_sql
 from task_mapreduce_spark.operators import kmeans, rounds
+from task_mapreduce_spark.operators.cosine import (
+    _ANN_N_QUERIES,
+    _ANN_TOP_K,
+    _dot,
+    _normed_vectors,
+    _probe_topk,
+    _probes,
+)
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load, row_count
 
@@ -110,7 +119,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.transform(
             F.array_distinct(F.split("text", " ")),
-            lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("long"),
+            lambda t: hash48(t),  # a lambda: bare, chars binds the index
         ).alias("hs"),
     )
     # bit b contribution: +1 if bit set else -1; simhash bit = sign of sum.
@@ -315,12 +324,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 # serialize-killer defense budget for the cell-blocked cosine joins:
 # broadcast the build side only while the packed vector table fits
 # (≈ dim·8 B + ids per row, dim measured from the data — a hardcoded
@@ -356,22 +359,6 @@ def _cell_join_sides(e: DataFrame):
     if small:
         return (lambda a: a.repartition(par)), F.broadcast
     return (lambda a: a), (lambda b: b)
-
-
-def _normed_vectors(emb: DataFrame, *extra_cols: str) -> DataFrame:
-    """(vec_id, *extra_cols, v: array<double>, nrm) — the ONE embedding
-    projection for the whole cosine family: the within-cell joins, the
-    LSH and IVF searches, the two index keys and every consumer of the
-    IVF clustering (dedup_eval_ari included).  Double-cast once, norm
-    once per vector: computing norms per pair would redo 2/3 of the
-    floating-point work |pairs| times.  Keeping the cast/norm
-    discipline in a single place is what keeps the rounded-cosine
-    oracle identity holding across every operator that builds on it."""
-    return emb.select(
-        "vec_id",
-        *extra_cols,
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
 
 
 def _cell_pairs(e: DataFrame, cell: str, *carry: str) -> DataFrame:
@@ -642,33 +629,6 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_MIN_PLANES = 4         # floor: 16 buckets even on tiny fixtures
 _ANN_MAX_PLANES = 16        # fixed-seed plane POOL size (the cap)
 _ANN_TARGET_BUCKET = 64     # derive planes so E[bucket size] ≈ this
-_ANN_TOP_K = 10
-_ANN_N_QUERIES = 5  # the ANN-family query set: vec_id < 5
-
-
-def _probe_topk(members: DataFrame, probes: DataFrame, key: str) -> DataFrame:
-    """The ANN family's one serve path: ``(query_id, vec_id, score,
-    rank)``, each query's top ``_ANN_TOP_K`` members.  ``probes`` rows
-    ``(query_id, qv, qn, <key>)`` are broadcast and equi-joined on the
-    blocking ``key`` (an LSH ``bucket`` or an IVF ``cell``) against the
-    ``members`` rows ``(vec_id, v, nrm, <key>)``, so per-task work is
-    |block| × probes, never |corpus| × |queries|.  A query never matches
-    itself; the score is the rounded-6 cosine and the rank orders by
-    (score DESC, vec_id), a unique key, so ranks are engine-stable."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        members.join(F.broadcast(probes), key)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _ANN_TOP_K)
-    )
 
 
 def _hyperplanes(dim: int = 64) -> list[list[float]]:
@@ -814,10 +774,8 @@ def sim_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(_ANN_MAX_PLANES)
         ],
     )
-    probes = e.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
+    probes = _probes(
+        e,
         F.explode(
             F.transform(
                 F.filter(cand, lambda s: s["i"] < F.col("np")),
@@ -1609,7 +1567,7 @@ def _super_structs(cents: DataFrame):
         sq.alias("g"),
         F.greatest(F.lit(_IVF_NPROBE).cast("long"), sq).alias("np"),
     )
-    wr = Window.orderBy(kmeans.hash48("cid").asc(), F.col("cid").asc())
+    wr = Window.orderBy(hash48("cid").asc(), F.col("cid").asc())
     supers = (
         cents.withColumn("rk", F.row_number().over(wr))
         .crossJoin(F.broadcast(params))
@@ -1737,12 +1695,7 @@ def _ivf_probes(e: DataFrame, cents: DataFrame) -> DataFrame:
     d = F.round(_dot(F.col("qv"), F.col("cv")), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("d"), F.asc("cell"))
     return (
-        e.filter(F.col("vec_id") < _ANN_N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
+        _probes(e)
         .crossJoin(F.broadcast(cents))
         .select("query_id", "qv", "qn", d.alias("d"), F.col("cid").alias("cell"))
         .withColumn("rn", F.row_number().over(w))
@@ -1856,7 +1809,7 @@ def _ivf_hier_assign_ctes(r: int) -> list[str]:
         f"""sup{r} AS (
       SELECT cid AS sid, cv AS sv FROM (
         SELECT cid, cv, row_number() OVER (
-                 ORDER BY {kmeans.hash48_sql("cid")} ASC, cid ASC) AS rk
+                 ORDER BY {hash48_sql("cid")} ASC, cid ASC) AS rk
         FROM cents{r}), g{r}
       WHERE (rk - 1) % g = 0
     )""",
@@ -1994,11 +1947,7 @@ def _hier_probes(
     column below the ranking window.  ``qn`` is ``_normed_vectors``'
     ``nrm``, carried from ``e``."""
     params, supers, cent_sup = _super_structs(cents)
-    q = e.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
+    q = _probes(e)
     ds_qs = F.round(_dot(F.col("qv"), F.col("sv")), 6)
     wq = Window.partitionBy("query_id").orderBy(F.desc("ds"), F.asc("sid"))
     qsup = (
@@ -2785,10 +2734,7 @@ def sim_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _normed_vectors(emb)
     # chars 13..24 of the digest: independent of the seed rule's bits
     # (see _INGEST_WHERE)
-    split_hash = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 13, 12), 16, 10
-    ).cast("long")
-    is_batch = (split_hash % _INGEST_MOD) == 0
+    is_batch = (hash48("vec_id", 13) % _INGEST_MOD) == 0
     assigned, cents = _ivf_cells(e.filter(~is_batch))
 
     # ---- build + persist the accepted-corpus index ----

@@ -28,6 +28,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import davg, sql_davg
+from task_mapreduce_spark.operators.cosine import (
+    _ANN_N_QUERIES,
+    _ANN_TOP_K,
+    _normed_vectors,
+    _probe_scores,
+    _probes,
+    _top_scores,
+)
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -492,16 +500,13 @@ def edges_to_clusters(d: DataFrame, verified: DataFrame) -> DataFrame:
 # Similarity search
 # ---------------------------------------------------------------------------
 
-_TOP_K = 10
-_N_QUERIES = 5  # vec_id < 5 are the probe vectors
-
 
 @register(
     "sim_search_topk",
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      FROM embeddings WHERE vec_id < {_N_QUERIES}
+      FROM embeddings WHERE vec_id < {_ANN_N_QUERIES}
     ),
     e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
     scored AS (
@@ -514,7 +519,7 @@ _N_QUERIES = 5  # vec_id < 5 are the probe vectors
       SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY score DESC, vec_id) AS rn
       FROM scored
-    ) WHERE rn <= {_TOP_K}
+    ) WHERE rn <= {_ANN_TOP_K}
     """,
 )
 def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,43 +531,12 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6 places on both engines (SIMD fold order is an ulp
     apart).  For the 100 TB / large-probe-set path see sim_search_ann:
     same plan, but both sides pre-bucketed by random-projection LSH so
-    each task only scores its bucket."""
-    emb = load(spark, sf_dir, "embeddings")
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    # norms once per VECTOR, before the pairwise join — recomputing them
-    # per pair would redo 2/3 of the floating-point work |pairs| times
-    e = emb.select("vec_id", dv.alias("v")).withColumn(
-        "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
-    )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
-    )
+    each task only scores its bucket.  The probe set, the scorer and the
+    rank window are ``operators/cosine.py``'s, shared with every ANN arm
+    graded against this key."""
+    e = _normed_vectors(load(spark, sf_dir, "embeddings"))
+    scored = _probe_scores(e.crossJoin(F.broadcast(_probes(e))))
+    return _top_scores(scored, _ANN_TOP_K)
 
 
 # ---------------------------------------------------------------------------

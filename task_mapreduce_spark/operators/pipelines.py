@@ -8,8 +8,8 @@ stage's projections; one shuffle serves adjacent stages keyed alike).
   quality gate → exact dedup → deterministic split → per-(split, lang)
   accounting.  Each stage is the registered operator's logic applied
   in sequence (gate = corpus_filter's length screen, dedup =
-  dedup_exact's min-id-per-digest, split = split_train_test's portable
-  hash), composed as ONE declarative plan.
+  dedup_exact's min-id-per-digest, split = split_train_test's
+  ``split_of``), composed as ONE declarative plan.
 - ``pipeline_events_e2e`` — the product-analytics pass: sessionize
   (imported from the registered operator, literally the same function)
   → per-user engagement → session-count distribution.
@@ -20,6 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.operators.corpus_tools import (
+    _RRF_K,
+    _rrf_score,
+    split_of,
+    text_bm25,
+)
+from task_mapreduce_spark.operators.cosine import _normed_vectors, _probe_scores
 from task_mapreduce_spark.operators.training_pipeline import sessionize_events
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
@@ -84,15 +91,7 @@ def pipeline_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        % 10
-    )
-    split = (
-        F.when(bucket < 8, "train").when(bucket == 8, "valid").otherwise("test")
-    )
-    return kept.groupBy(split.alias("split"), "lang").agg(
+    return kept.groupBy(split_of("doc_id").alias("split"), "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_toks").cast("bigint").alias("n_tokens_total"),
     )
@@ -169,7 +168,6 @@ def pipeline_events_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline_retrieval_e2e — hybrid retrieval: BM25 ∪ vector ANN → RRF fusion
 # ---------------------------------------------------------------------------
 
-_RRF_K = 60          # the standard reciprocal-rank-fusion constant
 _FUSE_TOPK = 10
 _QUERY_VEC = 0       # embeddings.vec_id 0 is the standing query vector
 
@@ -252,62 +250,40 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-sized regardless of corpus scale.  Ranks fuse, not raw
     scores — RRF needs no cross-arm score calibration, which is why
     it's the production default.  Determinism: both arm ranks break
-    ties on doc_id, the RRF sum is two IEEE terms in fixed order
-    rounded to 9, and the fused rank breaks ties on doc_id again.
+    ties on doc_id, the vector arm scores with sim_search_topk's probe
+    scorer, the fusion is retrieval_fuse_rrf's ``_rrf_score``, and the
+    fused rank breaks ties on doc_id again.
 
     At 100 TB: the lexical arm scales as text_bm25 (term-filtered
     explosion), the vector arm as sim_search_topk/ann (bucketed
     scoring); fusion cost is constant.  Swapping the exact-cosine arm
     for sim_search_ann's LSH buckets changes recall, not this plan's
     shape."""
-    from task_mapreduce_spark.operators.corpus_tools import text_bm25
-
     lex = text_bm25(spark, sf_dir).select(
         "doc_id", F.col("rank").alias("lex_rank")
     )
-    emb = load(spark, sf_dir, "embeddings")
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    e = emb.select("vec_id", dv.alias("v")).withColumn(
-        "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
-    )
+    e = _normed_vectors(load(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nrm").alias("qn")
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
     )
     # top-k via orderBy+limit (TakeOrderedAndProject) BEFORE the rank
     # window — an unpartitioned window would funnel the whole corpus
     # through one task; the window then ranks only the 20 survivors.
-    w_vec = Window.orderBy(F.desc("cos"), F.asc("doc_id"))
+    w_vec = Window.orderBy(F.desc("score"), F.asc("vec_id"))
     vec = (
-        e.filter(F.col("vec_id") != _QUERY_VEC)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("doc_id"))
+        _probe_scores(e.crossJoin(F.broadcast(q)))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(20)
         .withColumn("vec_rank", F.row_number().over(w_vec).cast("int"))
-        .select("doc_id", "vec_rank")
+        .select(F.col("vec_id").alias("doc_id"), "vec_rank")
     )
     fused = (
         lex.join(vec, "doc_id", "full_outer")
         .select(
             "doc_id",
-            F.round(
-                F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (_RRF_K + F.col("vec_rank")), F.lit(0.0)),
-                9,
-            ).alias("rrf"),
+            _rrf_score("lex_rank", "vec_rank").alias("rrf"),
             F.col("lex_rank").isNotNull().alias("in_lexical"),
             F.col("vec_rank").isNotNull().alias("in_vector"),
         )

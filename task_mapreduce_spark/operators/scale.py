@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from task_mapreduce_spark.functions.exact import dsum, dsum_exact, sql_dsum, sql_dsum_exact
+from task_mapreduce_spark.functions.hashing import hash48
 from task_mapreduce_spark.operators.joins import _REVENUE_SQL, revenue_col
 from task_mapreduce_spark.operators.relational import _work_dir
 from task_mapreduce_spark.registry import register
@@ -698,13 +699,7 @@ def _merge_base_batch(spark, sf_dir: str):
         F.col("o_totalprice").alias("val"),
         F.col("o_orderdate").alias("od"),
     )
-    h1 = F.conv(
-        F.substring(F.md5(F.col("k").cast("string")), 1, 12), 16, 10
-    ).cast("long")
-    h2 = F.conv(
-        F.substring(F.md5(F.col("k").cast("string")), 13, 12), 16, 10
-    ).cast("long")
-    o = o.withColumn("h1", h1).withColumn("h2", h2)
+    o = o.withColumn("h1", hash48("k")).withColumn("h2", hash48("k", 13))
     base = o.filter(F.col("h1") % 10 != 0).select("k", "val", "p")
     batch = o.filter(
         F.col("od") >= F.lit(_MERGE_CUTOFF).cast("timestamp")

@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import dsum, sql_dsum
 from task_mapreduce_spark.operators import kmeans
-from task_mapreduce_spark.operators.llm_extras import _ANN_N_QUERIES
+from task_mapreduce_spark.operators.cosine import _ANN_N_QUERIES, _dot
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import load
 
@@ -2078,7 +2078,7 @@ def embedding_project_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides rather than silently mis-scored — in production the
     matrix is generated for the incoming dim (a k×dim broadcast
     literal at any scale)."""
-    from task_mapreduce_spark.operators.llm_extras import _dot, _hyperplanes
+    from task_mapreduce_spark.operators.llm_extras import _hyperplanes
 
     e = load(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))

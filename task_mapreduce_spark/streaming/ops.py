@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import dsum, sql_dsum
+from task_mapreduce_spark.functions.hashing import hash48
 from task_mapreduce_spark.registry import register
 from task_mapreduce_spark.tables import events_schema, load, path_of
 
@@ -666,12 +667,7 @@ def stream_state_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the certificate the restart pytest pins.  Two rules, two
     # independent hash inputs (different columns), so neither slices
     # the other (CLAUDE.md's composed-hash-rule trap).
-    def _h48(col: str):
-        return F.conv(
-            F.substring(F.md5(F.col(col).cast("string")), 1, 12), 16, 10
-        ).cast("long")
-
-    half = (_h48("user_id") % 4 == 0) | (_h48("event_id") % 2 == 0)
+    half = (hash48("user_id") % 4 == 0) | (hash48("event_id") % 2 == 0)
     tmp = os.path.join(tempfile.gettempdir(), f"tmrs_sse_{os.getpid()}")
     run_id = next(_memory_sink_counter)
     src, ck = f"{tmp}/src_{run_id}", f"{tmp}/ckpt_{run_id}"

@@ -410,9 +410,11 @@ def test_rrf_fused_ranks_dense_and_ordered(spark, sf_dir):
 
 
 def test_rrf_semantic_ranks_agree_with_sim_search_topk(spark, sf_dir):
-    # the fused key's semantic arm is sim_search_topk's construction on
+    # the fused key's semantic arm is sim_search_topk's probe scorer on
     # the SAME probe set: wherever a fused row carries a sem_rank inside
     # topk's depth, the standalone operator must assign the same rank
+    from task_mapreduce_spark.operators.cosine import _ANN_TOP_K
+
     topk = {
         (r["query_id"], r["vec_id"]): r["rank"]
         for r in QUERIES["sim_search_topk"](spark, sf_dir).collect()
@@ -420,7 +422,7 @@ def test_rrf_semantic_ranks_agree_with_sim_search_topk(spark, sf_dir):
     fused = QUERIES["retrieval_fuse_rrf"](spark, sf_dir).collect()
     checked = 0
     for r in fused:
-        if r["sem_rank"] is not None and r["sem_rank"] <= 10:
+        if r["sem_rank"] is not None and r["sem_rank"] <= _ANN_TOP_K:
             # .get, not [·]: a rank disagreement that pushes the pair
             # past topk's depth must read as a rank mismatch, not a
             # KeyError (round-10 ADVICE)
@@ -441,10 +443,10 @@ def test_retrieval_eval_rank_matches_pure_python_replay(spark, sf_dir):
     import math
     from decimal import Decimal
 
-    # the operator and oracle derive rel from llm_pipeline._TOP_K —
-    # import it so a depth change can't silently grade against stale
-    # relevance (round-11 ADVICE)
-    from task_mapreduce_spark.operators.llm_pipeline import _TOP_K as K
+    # the operator and oracle derive rel from sim_search_topk's depth
+    # (cosine._ANN_TOP_K) — import it so a depth change can't silently
+    # grade against stale relevance (round-11 ADVICE)
+    from task_mapreduce_spark.operators.cosine import _ANN_TOP_K as K
     rel = {
         (r["query_id"], r["vec_id"]): K + 1 - r["rank"]
         for r in QUERIES["sim_search_topk"](spark, sf_dir).collect()

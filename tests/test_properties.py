@@ -10,6 +10,8 @@ from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
+from task_mapreduce_spark.functions.hashing import hash48, hash48_sql
+
 ROWS = st.lists(
     st.tuples(
         st.integers(min_value=-50, max_value=50),
@@ -205,24 +207,36 @@ _TEXT = st.text(
 @_SETTINGS
 @given(tokens=st.lists(_TEXT, min_size=1, max_size=8, unique=True))
 def test_portable_hash_identical_across_engines(spark, oracle, tokens):
-    # CLAUDE.md's portable 48-bit token hash: Spark conv/md5 must equal
-    # DuckDB's hex-cast md5 for ANY string (incl. unicode and ''),
-    # because LSH/fingerprint/split keys are value-checked through it.
+    # functions.hashing's portable 48-bit token hash: Spark's hash48
+    # must equal its DuckDB twin hash48_sql for ANY string (incl.
+    # unicode and ''), at both md5 offsets the keys read, because
+    # LSH/fingerprint/split keys are value-checked through it.
     sdf = spark.createDataFrame([(t,) for t in tokens], "t STRING")
-    got = {
-        r["t"]: r["h"]
-        for r in sdf.select(
-            "t",
-            F.conv(F.substring(F.md5("t"), 1, 12), 16, 10)
-            .cast("long")
-            .alias("h"),
-        ).collect()
-    }
-    for t in tokens:
-        want = oracle.execute(
-            "SELECT ('0x' || substr(md5(?), 1, 12))::BIGINT", [t]
-        ).fetchone()[0]
-        assert got[t] == want, f"hash diverged for {t!r}"
+    for chars in (1, 13):
+        got = {
+            r["t"]: r["h"]
+            for r in sdf.select("t", hash48("t", chars).alias("h")).collect()
+        }
+        for t in tokens:
+            want = oracle.execute(
+                f"SELECT {hash48_sql('?', chars)}", [t]
+            ).fetchone()[0]
+            assert got[t] == want, f"hash diverged for {t!r} at chars {chars}"
+
+
+@_SETTINGS
+@example(tokens=["a", "b", "c"])
+@given(tokens=st.lists(_TEXT, min_size=3, max_size=8))
+def test_hash48_in_a_transform_hashes_each_element(spark, tokens):
+    # F.transform binds a function's second parameter to the element
+    # INDEX: passed bare, hash48 would read md5 chars from the index and
+    # every element from the third on would hash differently.  Called
+    # from a one-parameter lambda, each element hashes as itself.
+    sdf = spark.createDataFrame([(tokens,)], "arr ARRAY<STRING>")
+    got = sdf.select(F.transform("arr", lambda t: hash48(t)).alias("hs")).first()
+    exploded = sdf.select(F.posexplode("arr")).select("pos", hash48("col").alias("h"))
+    want = [r["h"] for r in sorted(exploded.collect(), key=lambda r: r["pos"])]
+    assert got["hs"] == want
 
 
 @_SETTINGS
