@@ -17,7 +17,15 @@ that called it; the noop write of the census itself is ``run`` and jobs
 outside any of those calls are ``build-other``.  The patches switch job
 groups only, so the per-key totals equal a plain census.
 
-Usage: python scripts/job_census.py [--sites] [key,key,...|all] [sf_dir]
+With ``--repeat N`` each key runs N times in a row in the one session,
+each run in a job group of its own.  ``jobs`` stays the first run's
+count (what a single census reads); ``min`` and ``max`` cover all N,
+and a key whose count varies is flagged ``jittery``.  Some keys' first
+run takes a job more or less at random on unchanged code (tpch_q7: 9
+or 10), so compare two censuses only on keys neither flags.
+
+Usage: python scripts/job_census.py [--sites] [--repeat N]
+                                    [key,key,...|all] [sf_dir]
 Prints one ``key jobs wall_s`` line per key plus a JSON summary line.
 """
 
@@ -94,6 +102,11 @@ def main() -> int:
     sites = "--sites" in sys.argv
     if sites:
         sys.argv.remove("--sites")
+    repeat = 1
+    if "--repeat" in sys.argv:
+        i = sys.argv.index("--repeat")
+        repeat = int(sys.argv[i + 1])
+        del sys.argv[i : i + 2]
     keys = sys.argv[1] if len(sys.argv) > 1 else "all"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     names = sorted(QUERIES) if keys == "all" else keys.split(",")
@@ -113,18 +126,17 @@ def main() -> int:
     def n_jobs(group: str) -> int:
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    out: dict[str, dict] = {}
-    for key in names:
-        sc.setJobGroup(key, key)
+    def census(key: str, group: str) -> dict:
+        sc.setJobGroup(group, key)
         t0 = time.time()
         QUERIES[key](spark, sf_dir).write.mode("overwrite").format(
             "noop"
         ).save()
         wall = round(time.time() - t0, 2)
         sc.setLocalProperty("spark.jobGroup.id", None)
-        row = {"jobs": n_jobs(key), "wall": wall}
+        row = {"jobs": n_jobs(group), "wall": wall}
         if sites:
-            by_site = {s: n_jobs(f"{key}@{s}") for s in seen.get(key, ())}
+            by_site = {s: n_jobs(f"{group}@{s}") for s in seen.get(group, ())}
             by_site["build-other"] = row["jobs"]
             row["jobs"] = sum(by_site.values())
             row["sites"] = dict(
@@ -133,8 +145,23 @@ def main() -> int:
                     key=lambda kv: (-kv[1], kv[0]),
                 )
             )
-        out[key] = row
-        print(f"{key} jobs={row['jobs']} wall={wall}", flush=True)
+        return row
+
+    out: dict[str, dict] = {}
+    for key in names:
+        runs = [census(key, key if i == 0 else f"{key}#{i}") for i in range(repeat)]
+        row = out[key] = runs[0]
+        line = f"{key} jobs={row['jobs']} wall={row['wall']}"
+        if repeat > 1:
+            counts = [r["jobs"] for r in runs]
+            row.update(min=min(counts), max=max(counts))
+            row["jittery"] = row["min"] != row["max"]
+            line += f" min={row['min']} max={row['max']}"
+            line += " JITTERY" if row["jittery"] else ""
+        print(line, flush=True)
+    if repeat > 1:
+        jittery = [k for k, r in out.items() if r["jittery"]]
+        print(f"jittery ({len(jittery)} of {len(out)}): {','.join(jittery)}")
     print("CENSUS " + json.dumps(out, separators=(",", ":")))
     return 0
 

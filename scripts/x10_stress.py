@@ -18,6 +18,11 @@ Usage:
       # instead of the sqrt(N) default (registered values unchanged —
       # the patch lives only in this process)
 
+Each run is a job group ``<key>/<tag>/r<round>``, so a run with an
+event log (``PYSPARK_SUBMIT_ARGS="--conf spark.eventLog.enabled=true
+--conf spark.eventLog.dir=DIR pyspark-shell"``) folds per run with
+``perfbench/eventlog.py`` (shuffle bytes, executor CPU, spill).
+
 Env knobs: X10_REPS (default 10) picks the replication factor and the
 default fixture dir /tmp/x{REPS}_fixture; X10_BASE / X10_DIR override
 paths; X10_TARGET_CELL patches llm_extras._ivf_cells's target_cell for
@@ -176,6 +181,7 @@ mat(QUERIES["tpch_q1"](spark, BASE))  # warm-up, untimed
 for rnd in range(2):
     for key in KEYS:
         for tag, sf in (("base", BASE), (tag_big, X10)):
+            spark.sparkContext.setJobGroup(f"{key}/{tag}/r{rnd}", key)
             t = time.time()
             mat(QUERIES[key](spark, sf))
             print(f"{key} {tag} r{rnd}: {time.time()-t:.2f}s", flush=True)

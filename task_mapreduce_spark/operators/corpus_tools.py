@@ -37,7 +37,7 @@ from task_mapreduce_spark.operators.cosine import (
     _top_scores,
 )
 from task_mapreduce_spark.registry import register
-from task_mapreduce_spark.tables import load
+from task_mapreduce_spark.tables import load, row_count
 
 # Top-K tokens kept per language profile; 5 test docs in 5 langs keep
 # K*langs = 100 profile rows — broadcastable at ANY corpus size since
@@ -1019,6 +1019,53 @@ def tokenizer_eval_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KEYWORDS_K = 5
 
 
+def _tfidf(spark: SparkSession, sf_dir: str, by: str) -> DataFrame:
+    """``(by, token, tf, df, tfidf)`` over the whitespace tokens of
+    ``documents``: ``tf`` counts a token's occurrences in each ``by``
+    group, ``df`` the documents holding it, and
+    ``tfidf = round(tf · ln(n_docs / df), 9)`` (ln rounded on both
+    engines).  text_tfidf (by source) and text_keywords (by doc_id)
+    call it.
+
+    The tokens are exploded once and shuffled once, by token: the
+    paper's term-vector map.  ``groupBy(token, by)`` and the df window
+    ``partitionBy(token)`` both cluster on the token, so neither adds a
+    shuffle.  The window sums each group's distinct docs over the
+    token's groups, and that sum is the df exactly because ``doc_id``
+    is the primary key of ``documents``: every doc has one ``by`` value,
+    so no doc counts in two groups.  The shuffle carries raw tokens
+    (no map-side combine); in exchange there is no |vocab|-row df
+    aggregate to join back.  ``n_docs`` is read from the parquet
+    footers with no job (``tables.row_count``); where they cannot be
+    read, a scalar subquery counts the documents."""
+    d = load(spark, sf_dir, "documents")
+    n = row_count(sf_dir, "documents")
+    n_docs = F.lit(n) if n is not None else d.select(F.count(F.lit(1))).scalar()
+    groups = (
+        d.select(
+            *dict.fromkeys((by, "doc_id")),
+            F.explode(F.split("text", " ")).alias("token"),
+        )
+        .repartition("token")
+        .groupBy("token", by)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("tf"),
+            F.countDistinct("doc_id").cast("bigint").alias("n"),
+        )
+    )
+    return groups.withColumn(
+        "df", F.sum("n").over(Window.partitionBy("token"))
+    ).select(
+        by,
+        "token",
+        "tf",
+        "df",
+        F.round(F.col("tf") * F.log(n_docs.cast("double") / F.col("df")), 9).alias(
+            "tfidf"
+        ),
+    )
+
+
 @register(
     "text_keywords",
     oracle=f"""
@@ -1054,40 +1101,14 @@ def text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics; this key is PER-DOC granularity, which is what a
     labeling pipeline consumes).
 
-    Shape: two word-count aggregates over one token explosion (per-doc
-    tf, corpus df — both map-side-partial hash-aggs), the |vocab|-row
-    df join UNHINTED exactly as text_tfidf's is (corpus-derived
-    cardinality — AQE broadcasts while it fits, shuffles when it does
-    not; never a forced |vocab| broadcast), the 1-row corpus
-    count cross-joined (metadata-row pattern), and the per-doc top-k a
-    WindowGroupLimit window on the unique (rounded tfidf DESC, token)
-    order — O(k) state per doc at any corpus size.  ln rounded to 9 on
-    both sides (the text_tfidf float discipline)."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    tf = tok.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    dfq = tok.groupBy("token").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("df")
-    )
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tf.join(dfq, "token")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            "token",
-            "tf",
-            "df",
-            F.round(
-                F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 9
-            ).alias("tfidf"),
-        )
-    )
+    Shape: :func:`_tfidf` by ``doc_id`` (one token shuffle for tf and
+    df), then the per-doc top-k, a WindowGroupLimit window on the
+    unique (rounded tfidf DESC, token) order with its own ``doc_id``
+    shuffle — O(k) state per doc at any corpus size."""
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        _tfidf(spark, sf_dir, "doc_id")
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= _KEYWORDS_K)
     )
 

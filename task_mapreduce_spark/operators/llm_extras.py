@@ -192,11 +192,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _doc_token_sets(d: DataFrame) -> DataFrame:
-    """(doc_id, lang, source, toks) with set semantics — the shared
-    input shape for the exact-similarity dedup family."""
+def _doc_token_sets(d: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, lang, source, *carry, toks) with set semantics — the
+    shared input shape for the exact-similarity dedup family."""
     return d.select(
-        "doc_id", "lang", "source", F.array_distinct(F.split("text", " ")).alias("toks")
+        "doc_id",
+        "lang",
+        "source",
+        *carry,
+        F.array_distinct(F.split("text", " ")).alias("toks"),
     )
 
 
@@ -261,12 +265,15 @@ def jaccard_candidates(t: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(t: DataFrame) -> DataFrame:
-    """Verified (a, b, jaccard) pairs with exact token-set Jaccard
-    ≥ 0.9 within (lang, source) blocks — prefix-filtered candidates
-    (:func:`jaccard_candidates`), exact verify on candidates only.
-    Shared by dedup_ngram_jaccard (pair output) and dedup_cluster_cc
-    (the deterministic edge set its components are built on)."""
+def jaccard_pairs(t: DataFrame, *carry: str) -> DataFrame:
+    """Verified (a, b, jaccard, <c>_a, <c>_b for c in carry) pairs with
+    exact token-set Jaccard ≥ 0.9 within (lang, source) blocks —
+    prefix-filtered candidates (:func:`jaccard_candidates`), exact
+    verify on candidates only.  Shared by dedup_ngram_jaccard (pair
+    output), dedup_cluster_cc (the deterministic edge set its
+    components are built on) and dedup_fuzzy_edit, which carries each
+    side's ``text`` through the verify joins to its edit-distance
+    filter.  With no carry the plan is the bare pair verify."""
     # The candidate list is tiny in BYTES (two longs per row) but each
     # verify row pays an array_intersect/union over full token sets —
     # the CPU-heavy/byte-light shape AQE coalesces onto 1-2 tasks
@@ -274,15 +281,23 @@ def jaccard_pairs(t: DataFrame) -> DataFrame:
     # keyed on the join key keeps the verify spread across all cores.
     par = t.sparkSession.sparkContext.defaultParallelism
     cand = jaccard_candidates(t).repartition(par, "a")
-    sa = t.select(F.col("doc_id").alias("a"), F.col("toks").alias("toks_a"))
-    sb = t.select(F.col("doc_id").alias("b"), F.col("toks").alias("toks_b"))
+
+    def side(s: str) -> DataFrame:
+        return t.select(
+            F.col("doc_id").alias(s),
+            F.col("toks").alias(f"toks_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
     jac = F.size(F.array_intersect("toks_a", "toks_b")).cast("double") / F.size(
         F.array_union("toks_a", "toks_b")
     )
     return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .select("a", "b", jac.alias("jaccard"))
+        cand.join(side("a"), "a")
+        .join(side("b"), "b")
+        .select(
+            "a", "b", jac.alias("jaccard"), *[f"{c}_{s}" for c in carry for s in "ab"]
+        )
         .filter(F.col("jaccard") >= 0.9)
     )
 
@@ -2387,8 +2402,10 @@ def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Contract: pairs (a < b) within (lang, source) whose token-set
     Jaccard is ≥ 0.9 AND whose Levenshtein distance is ≤ 10% of the
-    longer text.  Stage 1 reuses :func:`jaccard_pairs` verbatim (the
-    lossless PPJoin prefix filter + exact set verify), so the O(len²)
+    longer text.  Stage 1 is :func:`jaccard_pairs` (the lossless PPJoin
+    prefix filter + exact set verify) carrying each side's text, and the
+    edit-distance test joins the Jaccard test in the verify's join
+    condition, after it, so the O(len²)
     Levenshtein DP only ever runs on the verified near-dup pairs, never
     the corpus cross product — the stage that separates docs that share
     a vocabulary (high Jaccard, sets ignore order) from docs that are
@@ -2403,28 +2420,22 @@ def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: two linear token shuffles for the prefix index, an equi-join
     on (block, prefix-token) with rare-token-bounded buckets, then a
     per-pair verify — the same growth law as dedup_ngram_jaccard, plus
-    a constant-factor DP on ~doc-length strings for verified pairs
-    only."""
+    a banded DP, O(len · len/10), on ~doc-length strings for verified
+    pairs only."""
     d = load(spark, sf_dir, "documents")
-    # The verified pair list is tiny in BYTES but heavy in CPU (each row
-    # costs an O(len_a·len_b) DP), so AQE's byte-based coalescing would
-    # squeeze it onto one task and serialize the whole DP phase (12 s →
-    # 3 s at sf0.1).  An explicit-count repartition is exempt from AQE
-    # coalescing and spreads the DP across the cluster.
-    verified = jaccard_pairs(_doc_token_sets(d)).repartition(
-        spark.sparkContext.defaultParallelism, "a", "b"
-    )
-    ta = d.select(F.col("doc_id").alias("a"), F.col("text").alias("text_a"))
-    tb = d.select(F.col("doc_id").alias("b"), F.col("text").alias("text_b"))
-    lev = F.levenshtein("text_a", "text_b")
+    # Each verified pair costs a DP: the CPU-heavy, byte-light shape AQE
+    # would coalesce onto one task (12 s → 3 s at sf0.1 once spread).
+    # The texts ride jaccard_pairs' own verify joins, so the DP runs in
+    # the stage its explicit-count repartition(par, "a") already spreads
+    # across every core.  10·d ≤ max_len is d ≤ ⌊max_len / 10⌋ = k for
+    # an integer d, and levenshtein's threshold argument makes the DP
+    # banded: O(len·k), and -1 once the distance passes k.
+    verified = jaccard_pairs(_doc_token_sets(d, "text"), "text")
+    k = (F.greatest(F.length("text_a"), F.length("text_b")) / 10).cast("int")
+    lev = F.call_function("levenshtein", F.col("text_a"), F.col("text_b"), k)
     return (
-        verified.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("edit_dist", lev.cast("bigint"))
-        .filter(
-            10 * F.col("edit_dist")
-            <= F.greatest(F.length("text_a"), F.length("text_b"))
-        )
+        verified.withColumn("edit_dist", lev.cast("bigint"))
+        .filter(F.col("edit_dist") >= 0)
         .select("a", "b", "jaccard", "edit_dist")
     )
 

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from task_mapreduce_spark.functions.exact import davg, sql_davg
+# corpus_tools first imports this module while it registers its keys
+# (retrieval_eval_rank's oracle), so _tfidf must sit above that point.
+from task_mapreduce_spark.operators.corpus_tools import _tfidf
 from task_mapreduce_spark.operators.cosine import (
     _ANN_N_QUERIES,
     _ANN_TOP_K,
@@ -595,38 +598,9 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term-vector per source (Dean & Ghemawat §2.3's "term-vector per
-    host"): tf per (source, token), idf from document frequency.  The
-    1-row corpus count is broadcast (bounded metadata); the df side is
-    |vocab| rows — corpus-derived and UNBOUNDED at web scale (billions
-    of distinct tokens), so its join is deliberately UNHINTED: AQE
-    broadcasts it while it fits and falls back to a shuffle hash join
-    when it does not (the text_collocation_pmi discipline; a forced
-    broadcast here is an executor OOM at 100 TB).  ln rounded on both
-    sides."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("token")
-    )
-    tf = tok.groupBy("source", "token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    df = tok.groupBy("token").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("df")
-    )
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    return (
-        tf.join(df, "token")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "source",
-            "token",
-            "tf",
-            "df",
-            F.round(
-                F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 9
-            ).alias("tfidf"),
-        )
-    )
+    host"): tf per (source, token), idf from document frequency, both
+    from one token shuffle (:func:`corpus_tools._tfidf`)."""
+    return _tfidf(spark, sf_dir, "source")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,10 @@ redaction idempotence)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
+from task_mapreduce_spark.operators import corpus_tools
+from task_mapreduce_spark.parity import check_key
 from task_mapreduce_spark.registry import QUERIES
 from task_mapreduce_spark.tables import load
 
@@ -494,3 +497,16 @@ def test_retrieval_eval_rank_non_vacuous(spark, sf_dir):
     # fused list must overlap the truth somewhere, or the eval graded
     # nothing
     assert any(r["n_relevant_found"] > 0 for r in rows)
+
+
+@pytest.mark.parametrize("key", ["text_tfidf", "text_keywords"])
+def test_tfidf_counts_documents_without_footers(
+    spark, oracle, sf_dir, monkeypatch, key
+):
+    # where the parquet footers cannot be read (a remote URI), n_docs is
+    # a scalar subquery over documents in place of the footer literal
+    monkeypatch.setattr(corpus_tools, "row_count", lambda sf_dir, name: None)
+    df = QUERIES[key](spark, sf_dir)
+    assert "scalar-subquery" in df._jdf.queryExecution().optimizedPlan().toString()
+    errs = check_key(spark, oracle, key, sf_dir)
+    assert not errs, "\n".join(errs)

@@ -171,8 +171,6 @@ def test_no_cartesian_anywhere(all_dfs):
     # handful of rows by construction:
     bnlj_ok = {
         "sim_search_topk",      # 5 probe vectors replicated, corpus streams
-        "text_tfidf",           # 1-row corpus-count crossJoin
-        "text_keywords",        # 1-row corpus-count crossJoin (per-doc variant)
         "histogram_equidepth",  # 1-row percentile-bounds crossJoin
         "profile_columns",      # 1-row NDV-aggregate crossJoin
         "sim_search_ivf",       # √N centroid ROWS broadcast (≈16 MB at 1 B vecs)
@@ -616,8 +614,6 @@ _BROADCAST_HINT_BUDGET = {
     "dedup_index_persist": (2, "two 1-row store-audit count aggregates"
                                " (probe/verify joins UNHINTED)"),
     "text_collocation_pmi": (1, "|langs|-row pair totals (unigram joins UNHINTED)"),
-    "text_tfidf": (1, "1-row corpus count (|vocab| df join UNHINTED since r8)"),
-    "text_keywords": (1, "1-row corpus count (|vocab| df join UNHINTED since r8)"),
     "text_bm25": (2, "1-row (N, avgdl) stats + standing-query-filtered df"),
     "retrieval_fuse_rrf": (6, "5-query term/vocab/df sides (query-vocab-"
                               "bounded) + 1-row stats + 5 probe vectors; 6"
@@ -1175,6 +1171,33 @@ def test_build_job_ceilings(spark, sf_dir):
         )
         assert jobs <= measured + slack, (
             f"{key}: {jobs} build jobs > {measured} measured + {slack} slack"
+        )
+
+
+# Run-time scheduler jobs (the noop write of the built frame) at
+# sf0.001: key -> (measured, slack), measured at local[4]
+# (dedup_fuzzy_edit takes one fewer at local[8]).
+# Build ceilings never see these: text_tfidf and text_keywords build
+# with no job, and a second token explosion, a df aggregate joined
+# back or a counted corpus size each add jobs only when the frame runs
+# (text_tfidf took 7 with all three).
+_RUN_JOB_CEILING = {
+    "text_tfidf": (2, 1),
+    "text_keywords": (3, 1),
+    "dedup_fuzzy_edit": (7, 1),
+}
+
+
+def test_run_job_ceilings(spark, sf_dir):
+    for key, (measured, slack) in _RUN_JOB_CEILING.items():
+        df = QUERIES[key](spark, sf_dir)
+        jobs = _jobs_in_group(
+            spark,
+            f"run-job-ceiling/{key}",
+            lambda: df.write.mode("overwrite").format("noop").save(),
+        )
+        assert jobs <= measured + slack, (
+            f"{key}: {jobs} run jobs > {measured} measured + {slack} slack"
         )
 
 

@@ -38,6 +38,38 @@ def test_fuzzy_edit_relative_bound(spark, sf_dir):
     assert bad == 0
 
 
+def test_bounded_levenshtein_matches_the_full_dp(spark):
+    # dedup_fuzzy_edit keeps a pair when levenshtein(x, y, k) >= 0 for
+    # k = max_len div 10, and emits that value: the banded DP must equal
+    # the full DP wherever 10·d <= max_len and be -1 everywhere else,
+    # on multi-byte characters too (the DuckDB oracle runs the full DP)
+    import random
+
+    rng = random.Random(7)
+    alpha = "ab cdéß中"
+    rows = [("", ""), ("", "a"), ("abcdefghij", "")]
+    for _ in range(2000):
+        x = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40)))
+        y = list(x)
+        for _ in range(rng.randint(0, 8)):
+            p = rng.randint(0, len(y))
+            if rng.random() < 0.5 or not y:
+                y.insert(p, rng.choice(alpha))
+            else:
+                y[min(p, len(y) - 1)] = rng.choice(alpha)
+        rows.append((x, "".join(y)))
+    df = spark.createDataFrame(rows, "x string, y string")
+    k = (F.greatest(F.length("x"), F.length("y")) / 10).cast("int")
+    full = F.levenshtein("x", "y")
+    bounded = F.call_function("levenshtein", F.col("x"), F.col("y"), k)
+    keep = 10 * full <= F.greatest(F.length("x"), F.length("y"))
+    bad = df.filter(
+        F.when(keep, bounded != full).otherwise(bounded != -1)
+    ).count()
+    assert df.filter(keep).count() > 100
+    assert bad == 0
+
+
 def test_perplexity_scores_every_doc(spark, sf_dir):
     out = QUERIES["quality_perplexity"](spark, sf_dir)
     n_docs = load(spark, sf_dir, "documents").count()
